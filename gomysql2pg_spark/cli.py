@@ -34,7 +34,9 @@ be runnable without a live MySQL:
 - ``dest.dbType: copydump`` (or a directory ``dest.database`` with no
   host) -> each table stages as a COPY-text dump tree
   (`sinks.jdbc.copy_dump_sink`, bulk-loadable via ``psql \\copy``),
-  and compareDb reads it BACK through the `copytext` source;
+  and compareDb reads it back on the JVM through
+  `sources.copytext.read_copy_text`, so a `migrate` run starts no
+  Python worker;
 - ``dest.host`` set -> the batched JDBC sink: a ``jdbc:`` URL passes
   through; a verbatim host/port/database block routes through the
   reference's dbType dialect switch (postgres/gauss/vastbase/kingbase,
@@ -116,14 +118,6 @@ def column_meta_from_field(field, pos: int):
     )
 
 
-def _copytext_ddl(df) -> str:
-    """Schema string for reading a staged dump back through the
-    `copytext` source — the staged columns ARE the source columns."""
-    return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-
-
 # ---------------------------------------------------------------------------
 # source / destination resolution
 # ---------------------------------------------------------------------------
@@ -172,6 +166,7 @@ def _build_source(spark, cfg):
     """-> (tables, source_fn). Parquet-dir or JDBC sources (URL or
     the reference's native host/port/database block)."""
     from .catalog import list_tables, load_table
+    from .functions.patterns import excluded_tables
     from .sources.jdbc import read as jdbc_read
 
     src = cfg.src
@@ -188,7 +183,7 @@ def _build_source(spark, cfg):
             return jdbc_read(spark, jcfg, table=None if sql else table,
                              query=sql)
 
-        return list(cfg.tables), source
+        return excluded_tables(list(cfg.tables), cfg.exclude), source
 
     root = src.database
     if not os.path.isdir(root):
@@ -248,20 +243,18 @@ def _build_sink(spark, cfg):
     readback_fn(table, src_df) -> DataFrame re-reads what was loaded,
     for compareDb."""
     from .sinks.jdbc import copy_dump_sink, write
-    from .sources.copytext import register_copytext
+    from .sources.copytext import read_copy_text
 
     dest = cfg.dest
     if _dest_is_dump(cfg):
         dump_dir = dest.database
         os.makedirs(dump_dir, exist_ok=True)
         sink = copy_dump_sink(dump_dir)
-        register_copytext(spark)
 
         def readback(table: str, src_df):
-            return (
-                spark.read.format("copytext")
-                .schema(_copytext_ddl(src_df))
-                .load(os.path.join(dump_dir, table))
+            # the staged columns ARE the source columns
+            return read_copy_text(
+                spark, os.path.join(dump_dir, table), src_df.schema
             )
 
         return sink, readback
@@ -480,20 +473,17 @@ def cmd_only_data(spark, cfg, tables, source, sink) -> int:
 
 def cmd_compare_db(spark, cfg, tables, source, readback) -> int:
     """compareDb (`compare.go:24-132`) upgraded with the content hash:
-    per-table row counts AND the order-insensitive checksum."""
-    from .validate import compare_report, compare_tables
+    per-table row counts AND the order-insensitive checksum, compared
+    on the `maxParallel` pool (`Migrator.validate`)."""
+    from .migrate import Migrator
+    from .validate import compare_report
 
-    results = []
-    for t in tables:
-        src_df = source(t)
-        try:
-            dst_df = readback(t, src_df)
-            results.append(compare_tables(src_df, dst_df, t))
-        except Exception as exc:  # missing/unreadable target table
-            from .validate import TableCompareResult
-
-            results.append(TableCompareResult(t, src_df.count(), -1))
-            print(f"{t}: target unreadable: {exc}", file=sys.stderr)
+    results = Migrator(spark, cfg, source_fn=source, sink_fn=None).validate(
+        tables, readback
+    )
+    for r in results:
+        if r.error:
+            print(f"{r.table}: {r.error}", file=sys.stderr)
     rep = compare_report(results)
     for row in rep["tables"]:
         verdict = "ok" if row["content_ok"] else "MISMATCH"

@@ -25,8 +25,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from . import validate as _validate
 from .functions.patterns import excluded_tables
-from .validate import TableCompareResult, compare_tables
+from .validate import TableCompareResult
 
 
 @dataclass
@@ -269,22 +270,33 @@ class Migrator:
         self, tables: list[str], dst_fn
     ) -> list[TableCompareResult]:
         """compareDb phase (`cmd/compare.go:23-100`), fanned out on the
-        same bounded pool, with content-hash upgrade."""
+        same bounded pool, with content-hash upgrade. `dst_fn(table,
+        src_df)` re-reads what was loaded; it gets the source DataFrame
+        because a headerless dump takes its schema from it. Results
+        come back in `tables` order."""
         def one(t: str) -> TableCompareResult:
             # per-table failure accounting, like run(): one missing /
-            # unreadable target table must yield a failed ROW in the
-            # report, not abort the whole compare and discard every
-            # other table's result (r13 review finding; pool.map
-            # re-raises the first exception otherwise)
+            # unreadable table must yield a failed ROW in the report,
+            # not abort the whole compare and discard every other
+            # table's result (pool.map re-raises the first exception)
             try:
-                return compare_tables(self.source_fn(t), dst_fn(t), t)
-            except Exception:
-                return TableCompareResult(t, -1, -2, 0, 1)  # count_ok AND content_ok both False
+                src = self.source_fn(t)
+                try:
+                    # looked up on the module at call time, so a
+                    # wrapper installed on it (tracing) sees the call
+                    return _validate.compare_tables(src, dst_fn(t, src), t)
+                except Exception as exc:
+                    return TableCompareResult(
+                        t, src.count(), -1, error=f"target unreadable: {exc}"
+                    )
+            except Exception as exc:
+                return TableCompareResult(
+                    t, -1, -2, error=f"source unreadable: {exc}"
+                )
 
         with ThreadPoolExecutor(
             max_workers=self.config.max_parallel
         ) as pool:
-            return sorted(
-                pool.map(one, excluded_tables(tables, self.config.exclude)),
-                key=lambda r: r.table,
+            return list(
+                pool.map(one, excluded_tables(tables, self.config.exclude))
             )

@@ -1012,7 +1012,7 @@ def _bpe_greedy_merge(syms: list, a: str, b: str) -> list:
 def _mine_bpe_merges_local(rows, iters: int, checkpoints=()):
     """Exact driver-side merge recursion over a bounded weighted
     vocabulary — same contract as `_mine_bpe_merges` (returns
-    (merges, fert)). Equivalence to the per-round cluster loop, piece
+    (merges, fert, enc)). Equivalence to the per-round cluster loop, piece
     by piece:
 
     - PAIR COUNTS: every adjacent symbol POSITION counts (overlapping
@@ -1165,7 +1165,7 @@ def _mine_bpe_merges(
     iters: int,
     checkpoints: tuple[int, ...] = (),
     driver_vocab: int = BPE_DRIVER_VOCAB,
-) -> tuple[list, dict]:
+) -> tuple[list, dict, list | None]:
     """The shared BPE merge-mining loop at any K — the driver-visible
     data-dependent iteration (each merge depends on the previous
     argmax; the k-means/PageRank determinism-by-count precedent).
@@ -1560,7 +1560,15 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     if enc is not None:
         from .similarity import _model_df
 
-        venc = _model_df(spark, enc, "w string, vlen bigint")
+        vschema = "w string, vlen bigint"
+        # an empty vocabulary (all-blank documents) takes no
+        # zero-row trip through the pandas+Arrow literal builder,
+        # like `_bpe_merge_frame`
+        venc = (
+            _model_df(spark, enc, vschema)
+            if enc
+            else spark.createDataFrame([], vschema)
+        )
     else:
         mrows = [
             {"it": i, "sym_a": a, "sym_b": b} for i, a, b, _ in merges

@@ -527,14 +527,9 @@ FROM diff GROUP BY status
 # DATE: = calendar date as 'YYYY-MM-DD'
 _E2E_TABLES = {
     "nation": {
-        "ddl": "n_nationkey int, n_name string, n_regionkey int",
         "canon": ["n_nationkey", "n_name", "n_regionkey"],
     },
     "customer": {
-        "ddl": (
-            "c_custkey bigint, c_name string, c_nationkey int, "
-            "c_acctbal double, c_mktsegment string"
-        ),
         "canon": [
             "c_custkey",
             "c_name",
@@ -544,10 +539,6 @@ _E2E_TABLES = {
         ],
     },
     "orders": {
-        "ddl": (
-            "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-            "o_totalprice double, o_orderdate date, o_orderpriority string"
-        ),
         "canon": [
             "o_orderkey",
             "o_custkey",
@@ -592,12 +583,14 @@ def q_migration_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     orchestrator drives each table through the JVM COPY-text encoder
     into a staged dump tree (`sinks.jdbc.copy_dump_sink` — the bulk-
     load layout `psql \\copy` consumes, proven live in
-    tests/test_postgres_live.py), the tree is read BACK through the
-    `copytext` Spark source, and the result is the read-back side's
-    content checksum per table. The oracle computes the identical
-    canonical checksum over the ORIGINAL tables, so any corruption in
-    encode, file split, decode, or type round-trip (money doubles,
-    dates, int widths) fails the value hash — a strictly stronger
+    tests/test_postgres_live.py), the tree is read BACK on the JVM by
+    `sources.copytext.read_copy_text` (the CLI's compareDb read-back,
+    each table's schema taken from its source as there), and the
+    result is the read-back side's content checksum per table. The
+    oracle computes the identical canonical checksum over the ORIGINAL
+    tables, so any corruption in encode, file split, decode, or type
+    round-trip (money doubles, dates, int widths) fails the value
+    hash — a strictly stronger
     verdict than the reference's count-only compare, measured as one
     bench row against the reference's published migration wall times
     (BASELINE.md; its only benchmarks are this phase). Every rep
@@ -618,7 +611,7 @@ def q_migration_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.paths import secure_private_dir
     from ..migrate import MigrationConfig, Migrator
     from ..sinks.jdbc import copy_dump_sink
-    from ..sources.copytext import register_copytext
+    from ..sources.copytext import read_copy_text
 
     fixture = _hashlib.md5(
         _os.path.abspath(sf_dir).encode()
@@ -654,13 +647,10 @@ def q_migration_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     report = mig.run(list(_E2E_TABLES))
     if report.failed:
         raise RuntimeError(f"migration_e2e failed: {report.failed}")
-    register_copytext(spark)
     parts = []
     for table, spec in _E2E_TABLES.items():
-        back = (
-            spark.read.format("copytext")
-            .schema(spec["ddl"])
-            .load(_os.path.join(out_dir, table))
+        back = read_copy_text(
+            spark, _os.path.join(out_dir, table), source(table).schema
         )
         parts.append(_canon_checksum(back, table, spec["canon"]))
     out = parts[0]

@@ -194,9 +194,11 @@ def copy_dump_sink(out_dir: str, n_files: int | None = None):
     The bulk-load path the reference's wire format implies: the dump
     loads with `psql -c '\\copy t FROM part-file'` per file (proven
     against live PostgreSQL in tests/test_postgres_live.py) or reads
-    straight back through the `copytext` Spark source. Unlike
-    `copy_partition_writer` this needs no driver library on the
-    executors, and unlike the JDBC batched sink the load side can be
+    straight back, on the JVM, through `sources.copytext.
+    read_copy_text` (compareDb's read-back), or through the `copytext`
+    Python source when the files sit behind a pyarrow FileSystem.
+    Unlike `copy_partition_writer` this needs no driver library on
+    the executors, and unlike the JDBC batched sink the load side can be
     parallelized/retried per file AFTER the Spark job is done — the
     staging pattern big migrations actually use."""
     import os as _os

@@ -45,6 +45,13 @@ The DataSource class is built inside a FACTORY and registered from the
 returned value, so cloudpickle ships it BY VALUE — Python workers in a
 bare-PYTHONPATH deployment (e.g. the round driver's gate) never need
 this package importable to run the scan.
+
+`read_copy_text` decodes the same grammar with Column expressions over
+`spark.read.text`, so it plans and scans on the JVM and starts no
+Python process; it reads through Spark's Hadoop filesystem layer, the
+one `sinks.jdbc.copy_dump_sink` writes with. compareDb reads dumps
+back with it; the DataSource stays the reader for injected pyarrow
+FileSystems and the reference decoder its tests compare against.
 """
 
 from __future__ import annotations
@@ -53,8 +60,9 @@ import hashlib
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load_table
 
@@ -496,6 +504,115 @@ def make_copytext_source():
 def register_copytext(spark: SparkSession) -> None:
     """Idempotent registration of the `copytext` format."""
     spark.dataSource.register(make_copytext_source())
+
+
+def _corrupt(msg) -> Column:
+    """A Column that fails the task with a COPY-text corruption error."""
+    if isinstance(msg, str):
+        msg = F.lit(msg)
+    return F.raise_error(F.concat(F.lit("corrupt COPY text: "), msg))
+
+
+def _decode_cell_col(cell: Column) -> Column:
+    """`decode_cell` as a Column: `\\N` → NULL, then the four escapes.
+
+    No placeholder: the cell splits on the escaped backslash `\\\\`
+    (left to right, so a backslash pairs with the one after it, as in
+    the scalar decoder), `\\t`/`\\n`/`\\r` are replaced inside each
+    piece, and the pieces re-join with a single backslash. A backslash
+    left in a piece is an unknown escape or a dangling backslash."""
+
+    def unescape(p: Column) -> Column:
+        for find, repl in (("\\t", "\t"), ("\\n", "\n"), ("\\r", "\r")):
+            p = F.replace(p, F.lit(find), F.lit(repl))
+        return p
+
+    def checked(p: Column) -> Column:
+        p = unescape(p)
+        esc = F.regexp_extract(p, r"(?s)\\(.?)", 1)
+        return (
+            F.when(~p.contains("\\"), p)
+            .when(esc == "", _corrupt("dangling backslash"))
+            .otherwise(_corrupt(F.concat(F.lit("unknown escape \\"), esc)))
+        )
+
+    return (
+        F.when(cell == "\\N", F.lit(None))
+        .when(~cell.contains("\\"), cell)
+        .otherwise(F.array_join(
+            F.transform(F.split(cell, r"\\\\", -1), checked), "\\"
+        ))
+    )
+
+
+def _cast_cell_col(s: Column, field: T.StructField) -> Column:
+    """The decoded cell cast to `field`'s type; malformed input raises
+    (`caster_for` in the Python reader accepts the same forms)."""
+    dt, name = field.dataType, field.name
+    if isinstance(dt, T.StringType):
+        return s
+    if isinstance(dt, T.BinaryType):
+        digits = s.substr(F.lit(3), F.length(s))
+        raw = F.unhex(digits)  # NULL for a non-hex digit
+        return (
+            F.when(s.isNull(), F.lit(None))
+            .when(~s.startswith("\\x"), _corrupt(
+                f"bytea cell without \\x prefix in column {name}"))
+            .when((F.length(digits) % 2 == 1) | raw.isNull(),
+                  _corrupt(f"invalid bytea hex in column {name}"))
+            .otherwise(raw)
+        )
+    if isinstance(dt, T.BooleanType):
+        low = F.lower(s)
+        return (
+            F.when(s.isNull(), F.lit(None))
+            .when(low.isin("t", "true", "1"), F.lit(True))
+            .when(low.isin("f", "false", "0"), F.lit(False))
+            .otherwise(_corrupt(F.concat(
+                F.lit("invalid boolean "), s, F.lit(f" in column {name}")
+            )))
+        )
+    # try_cast + an explicit raise: strict whatever the session's ANSI
+    # setting (a non-ANSI cast would turn a corrupt cell into NULL). A
+    # type with no cast from string (array, map, struct) fails analysis.
+    v = s.try_cast(dt)
+    return F.when(s.isNotNull() & v.isNull(), _corrupt(F.concat(
+        F.lit(f"invalid {dt.simpleString()} "), s,
+        F.lit(f" in column {name}"),
+    ))).otherwise(v)
+
+
+def read_copy_text(
+    spark: SparkSession, path: str, schema: T.StructType
+) -> DataFrame:
+    """Read a COPY-text dump (a file or a directory of part files) as
+    a DataFrame of `schema`, entirely on the JVM — the Column-expression
+    inverse of `sinks.jdbc.copy_text_line`, with the grammar of the
+    `copytext` Python source: only LF ends a row, cells split on TAB,
+    `\\N` is NULL, unknown escapes, dangling backslashes, wrong cell
+    counts and malformed typed cells fail the task. Files go through
+    Spark's Hadoop filesystem layer, the one `copy_dump_sink` writes
+    with, so every dump the sink can write reads back."""
+    n = len(schema.fields)
+    cells = F.split(F.col("value"), "\t", -1)
+    checked = F.when(F.size(cells) == n, cells).otherwise(_corrupt(
+        F.concat(F.size(cells).cast("string"),
+                 F.lit(f" cells, schema has {n}"))
+    ))
+    # one projection per step: a casting expression reads its decoded
+    # cell several times, and a separate projection computes it once
+    decoded = (
+        spark.read.option("lineSep", "\n").text(path)
+        .select(checked.alias("cells"))
+        .select(*[
+            _decode_cell_col(F.col("cells")[i]).alias(f.name)
+            for i, f in enumerate(schema.fields)
+        ])
+    )
+    return decoded.select(*[
+        _cast_cell_col(F.col(f.name), f).alias(f.name)
+        for f in schema.fields
+    ])
 
 
 _RT_COLS = (

@@ -27,6 +27,7 @@ class TableCompareResult:
     dst_rows: int
     src_hash: int | None = None
     dst_hash: int | None = None
+    error: str = ""  # why a side could not be read (dst_rows < 0)
 
     @property
     def count_ok(self) -> bool:  # the reference's verdict (compare.go:124)

@@ -12,7 +12,13 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from gomysql2pg_spark.session import get_spark
 
-    spark = get_spark(app_name="gomysql2pg-spark-tests", cpus=8, shuffle_partitions=8)
+    # SPARK_GRAFT_CPUS sizes local[N] to the host; the 8 shuffle
+    # partitions stay fixed so plans do not depend on it
+    spark = get_spark(
+        app_name="gomysql2pg-spark-tests",
+        cpus=os.environ.get("SPARK_GRAFT_CPUS") or 8,
+        shuffle_partitions=8,
+    )
     yield spark
 
 

@@ -373,3 +373,24 @@ def test_verbatim_example_yml_connection_blocks_resolve():
     d = dest_sink_config(cfg)
     assert d.url.startswith("jdbc:opengauss://")
     assert d.driver == "org.opengauss.Driver"
+
+
+def test_compare_db_readback_plans_no_python(spark, config):
+    """compareDb reads a staged dump back on the JVM: neither the
+    read-back nor an aggregate over it has a Python node."""
+    from gomysql2pg_spark.cli import _build_sink, _build_source
+    from gomysql2pg_spark.migrate import MigrationConfig
+
+    path, _ = config
+    assert main(["-c", path, "onlyData"]) == 0
+    cfg = MigrationConfig.from_yaml(path)
+    tables, source = _build_source(spark, cfg)
+    _, readback = _build_sink(spark, cfg)
+    for t in tables:
+        back = readback(t, source(t))
+        for df in (back, back.groupBy().count()):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            # BatchEvalPython, ArrowEvalPython, a Python data source
+            # scan ("BatchScan copytext[...] (Python)"), *InPandas
+            assert "Python" not in plan and "Pandas" not in plan, (t, plan)
+        assert back.count() == source(t).count()

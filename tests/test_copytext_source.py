@@ -506,3 +506,85 @@ def test_unknown_filesystem_option_fails_loudly(spark, tmp_path):
         make_copytext_source()(
             options={"path": str(tmp_path), "filesystem": "s3-magic"}
         ).reader("id bigint")
+
+
+# ---------------------------------------------------------------------------
+# read_copy_text: the JVM reader, checked against the Python source
+# ---------------------------------------------------------------------------
+
+def _typed_hostile(spark):
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("id", T.LongType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("b", T.BinaryType()),
+        T.StructField("d", T.DecimalType(12, 3)),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("flag", T.BooleanType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("i", T.IntegerType()),
+    ])
+    rows = [
+        (1, "tab\there", b"\x00\x01\xff", Decimal("1.234"),
+         dt.date(2020, 2, 29), dt.datetime(2020, 1, 2, 3, 4, 5, 123456),
+         True, float("nan"), 1),
+        (2, "new\nline\rcr", b"", Decimal("-0.001"), None, None, False,
+         float("inf"), -2147483648),
+        (3, "\\N", None, None, dt.date(1, 1, 1), dt.datetime(1970, 1, 1),
+         None, float("-inf"), 2147483647),
+        (4, "", b"\\\t\n\r", Decimal("0"), None, None, None, -0.0, 0),
+        (5, None, b"\\N", None, None, None, None, 1e-300, None),
+        (6, "back\\\\\\slash\\", None, Decimal("-999999999.999"), None,
+         None, None, 1.7976931348623157e308, 8),
+        (7, "αβγ \\t \\\\n 𝄞 \\r\\", None, None, None, None, None, 0.1,
+         None),
+        (8, "\\", None, None, None, None, None, None, None),
+    ]
+    return spark.createDataFrame(rows, schema)
+
+
+def test_read_copy_text_matches_python_source(spark, tmp_path):
+    from gomysql2pg_spark.sinks.jdbc import copy_dump_sink
+    from gomysql2pg_spark.sources.copytext import read_copy_text
+
+    src = _typed_hostile(spark)
+    copy_dump_sink(str(tmp_path), n_files=3)(src, "t")
+    path = str(tmp_path / "t")
+    register_copytext(spark)
+    py = spark.read.format("copytext").schema(src.schema).load(path)
+    jvm = read_copy_text(spark, path, src.schema)
+    assert jvm.schema.simpleString() == src.schema.simpleString()
+
+    def rows(df):  # repr: NaN never equals itself
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    assert rows(jvm) == rows(py) == rows(src)
+
+
+@pytest.mark.parametrize(
+    "wire,schema,msg",
+    [
+        ("1\ta\t\\x\n", SCHEMA, r"unknown escape \\x"),
+        ("1\ta\tb\\\n", SCHEMA, "dangling backslash"),
+        ("1\tonly-two-cells\n", SCHEMA, "2 cells, schema has 3"),
+        ("1\tdeadbeef\n", "k bigint, b binary", r"without \\x prefix"),
+        ("1\t\\\\xzz\n", "k bigint, b binary", "invalid bytea hex"),
+        ("1\t\\\\xabc\n", "k bigint, b binary", "invalid bytea hex"),
+        ("1\tyes\n", "k bigint, f boolean", "invalid boolean yes"),
+        ("x1\tt\n", "k bigint, f boolean", "invalid bigint x1"),
+    ],
+)
+def test_read_copy_text_fails_loudly(spark, tmp_path, wire, schema, msg):
+    from gomysql2pg_spark.sources.copytext import read_copy_text
+
+    d = tmp_path / "bad"
+    d.mkdir()
+    (d / "part-000.txt").write_text(wire, encoding="utf-8")
+    schema = spark.createDataFrame([], schema).schema
+    with pytest.raises(Exception, match=msg):
+        read_copy_text(spark, str(d), schema).collect()

@@ -67,11 +67,30 @@ def test_validate_phase(spark, sf_dir, out_dir):
     m = _mk_migrator(spark, sf_dir, out_dir)
     m.run(["region", "nation"])
 
-    def dst_fn(table):
+    def dst_fn(table, src_df):
         return spark.read.parquet(os.path.join(out_dir, table))
 
     results = m.validate(["region", "nation"], dst_fn)
     assert all(r.content_ok for r in results)
+
+
+def test_validate_reports_unreadable_target(spark, sf_dir, out_dir):
+    """One unreadable target is a failed row with the source count and
+    the reason; the other tables still compare, in `tables` order."""
+    m = _mk_migrator(spark, sf_dir, out_dir)
+
+    def dst_fn(table, src_df):
+        if table == "region":
+            raise FileNotFoundError("no dump for region")
+        return src_df
+
+    region, nation = m.validate(["region", "nation"], dst_fn)
+    assert (region.table, nation.table) == ("region", "nation")
+    assert nation.content_ok
+    n = load_table(spark, sf_dir, "region").count()
+    assert (region.src_rows, region.dst_rows) == (n, -1)
+    assert not region.content_ok
+    assert region.error == "target unreadable: no dump for region"
 
 
 EXAMPLE_SHAPED_YML = """\

@@ -6,6 +6,8 @@ writes, and the count validation read back over JDBC."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -154,3 +156,34 @@ def test_full_migration_with_validation(spark, sf_dir, derby_url):
     assert sorted(map(tuple, src.select(*cols).collect())) == sorted(
         map(tuple, dst.select(*cols).collect())
     )
+
+
+def test_cli_jdbc_source_honours_exclude(spark, derby_url, tmp_path, capsys):
+    """`exclude:` drops a listed table from every CLI phase over a jdbc:
+    source, as it does for a parquet tree: no DDL, no dump, and no
+    compareDb row (an excluded table once got DDL, was never pumped,
+    then failed compareDb as unreadable)."""
+    import yaml
+
+    from gomysql2pg_spark.cli import main
+
+    rows = spark.createDataFrame([(1, "a"), (2, "b\tc")], "id int, s string")
+    for t in ("EXCL_KEEP", "EXCL_DROP"):
+        rows.write.format("jdbc").option("url", derby_url).option(
+            "dbtable", t
+        ).option("driver", DRIVER).mode("overwrite").save()
+    dump, ddl = tmp_path / "dump", tmp_path / "ddl.sql"
+    cfg = tmp_path / "cfg.yml"
+    cfg.write_text(yaml.safe_dump({
+        "src": {"host": derby_url},
+        "dest": {"dbType": "copydump", "database": str(dump)},
+        "tables": {"excl_keep": [], "excl_drop": []},
+        "exclude": ["*_drop"],
+        "maxParallel": 2,
+    }))
+    assert main(["-c", str(cfg), "migrate", "--out", str(ddl)]) == 0
+    out = capsys.readouterr().out
+    assert "excl_keep: src=2 dst=2 ok" in out
+    assert "excl_drop" not in out
+    assert "excl_drop" not in ddl.read_text()
+    assert sorted(os.listdir(dump)) == ["excl_keep"]
