@@ -1,9 +1,11 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Registry contract for the operator engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke query; ``queries()[name]`` builds each
+registered operator's DataFrame for a fixture directory, and
+``oracle_sql()[name]`` is its DuckDB oracle where the operator is
+SQL-expressible. Tier-1 ``tests/test_oracle_parity.py`` compares every
+entry against its oracle (row count + schema + order-insensitive value
+hash); ``scripts/oracle_sweep.py`` does the same at any scale.
 
 Implementation lives in ``gomysql2pg_spark``; this module only
 aggregates the per-module registries.
@@ -11,119 +13,33 @@ aggregates the per-module registries.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-# The round driver evaluates the FIRST 50 registry entries each round.
-# From r14 this window is DERIVED, not hand-curated:
-# `scripts/registry_hashes.py --derive-window` orders entries by
-# (1) implementation changed in THIS build (function-level hash vs the
-# latest round snapshot — these lead so the newest code always gets a
-# driver row), then (2) stale entries oldest-green-row-first, then
-# (3) fresh entries with the oldest rows if slots remain. Rows-only
-# entries never take a slot (twin-gated). The function-level hash map
-# lives in REGISTRY_HASHES.json; tests/test_registry_hashes.py FAILS
-# when registry code changes without re-stamping it, closing the
-# hand-curation hole that caused the r08 missed rotation and the
-# r12 post-window gap.
-_PRIORITY = [
-    # --- r18 window (50 slots), re-derived 2026-08-18 by
-    # `scripts/registry_hashes.py --derive-window 18` after the r18
-    # OPTIMIZATION pass.
-    # (1) changed this round: the five BPE entries re-staled by the
-    # driver-side trainer hybrid (`_mine_bpe_merges_local` — one
-    # bounded vocabulary probe replaces the K-round argmax chain when
-    # the vocabulary fits the driver budget; oracle-exact at both
-    # fixture SFs, full sweep FAILURES: none), plus
-    # similarity_lsh_verified re-staled by the in-place record of the
-    # r18 JVM-vs-Arrow A/B decision on its bucket kernel (measured
-    # ~3× slower, KEPT — comment-only, the lsh_recall_report r17
-    # precedent);
-    # (2) the remaining slots rotate the oldest-fresh rows
-    # (VERDICT r16 item 5: let --derive-window slot them, no
-    # hand-curation). events_window rotates back out for the
-    # similarity_lsh_verified slot.
-    "similarity_lsh_verified",
-    "bpe_fertility", "bpe_fertility_curve", "bpe_merges",
-    "bpe_merges_k64", "bpe_token_counts",
-    "approx_quantiles_check", "cell_transforms", "char_entropy",
-    "conditional_null", "cooccurrence_lift", "copytext_roundtrip",
-    "count_star", "dedup_exact", "distinct_agg", "doc_chunking",
-    "domain_reweight", "filter_like", "full_scan", "group_concat",
-    "heavy_hitters", "interval_overlap_join", "mad_outliers",
-    "multikey_sort", "page_count", "quality_calibration",
-    "random_ids_check", "stream_heavy_hitters", "stream_quality_gate",
-    "stream_source_stats", "validate_fk_orphans", "vocab_topk",
-    "cohort_retention", "curation_pipeline", "distinct_ngram_ratio",
-    "domain_cap_sample", "dsir_select", "engagement_dau",
-    "er_blocking_pairs", "er_match_pairs", "er_resolved_rollup",
-    "events_anomaly", "events_asof_next_purchase",
-    "events_asof_purchase", "events_asof_tolerance",
-    "events_cdc_merge", "events_funnel", "events_json_props",
-    "events_latest_per_user", "events_sessionize",
+# registry modules under gomysql2pg_spark, in merge order
+_MODULES = [
+    *(f"operators.{name}" for name in (
+        "relational", "analytic", "clustering", "dedup", "similarity",
+        "text", "multimodal", "events", "pipeline", "ranking", "scalar",
+        "subqueries", "timeseries", "tpch", "validation", "asof",
+        "custom", "sampling", "quality", "linkage", "frequency", "layout",
+    )),
+    "streaming.stream",
+    "sources.copytext",
 ]
 
 
-def _prioritize(d: dict) -> dict:
-    head = {k: d[k] for k in _PRIORITY if k in d}
-    return head | {k: v for k, v in d.items() if k not in head}
-
-
 def _registries():
-    """Collect (QUERIES, ORACLES) from every operator module."""
-    from gomysql2pg_spark.operators import relational
-
-    modules = [relational]
-    for name in (
-        "analytic",
-        "clustering",
-        "dedup",
-        "similarity",
-        "text",
-        "multimodal",
-        "events",
-        "pipeline",
-        "ranking",
-        "scalar",
-        "subqueries",
-        "timeseries",
-        "tpch",
-        "validation",
-        "asof",
-        "custom",
-        "sampling",
-        "quality",
-        "linkage",
-        "frequency",
-        "layout",
-    ):
-        try:
-            mod = __import__(
-                f"gomysql2pg_spark.operators.{name}", fromlist=[name]
-            )
-            modules.append(mod)
-        except ImportError:
-            continue
-    try:
-        from gomysql2pg_spark.streaming import stream as stream_mod
-
-        modules.append(stream_mod)
-    except ImportError:
-        pass
-    try:
-        from gomysql2pg_spark.sources import copytext as copytext_mod
-
-        modules.append(copytext_mod)
-    except ImportError:
-        pass
+    """Collect (QUERIES, ORACLES) from every registry module."""
     queries: dict[str, Callable] = {}
     oracles: dict[str, str] = {}
-    for mod in modules:
-        queries.update(getattr(mod, "QUERIES", {}))
-        oracles.update(getattr(mod, "ORACLES", {}))
-    return _prioritize(queries), oracles
+    for name in _MODULES:
+        mod = importlib.import_module(f"gomysql2pg_spark.{name}")
+        queries.update(mod.QUERIES)
+        oracles.update(mod.ORACLES)
+    return queries, oracles
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Headline benchmark: runs the engine's flagship queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on)
+and prints ONE JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -377,7 +378,9 @@ def _steal_jiffies() -> int | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     sf_label_dir = sf_dir
     if os.environ.get("SPARK_GRAFT_BENCH_SPLIT", "1") != "0":
         try:

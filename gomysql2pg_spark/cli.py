@@ -423,10 +423,8 @@ def cmd_only_data(spark, cfg, tables, source, sink) -> int:
     the reference's per-table failure accounting, the invalidTableData
     side channel when errorsDir is set (`root.go:450-470`), and the
     summary."""
-    from .functions.transforms import invalid_rows
+    from .functions.transforms import invalid_rows, strip_nul
     from .migrate import Migrator
-
-    from .functions.transforms import strip_nul
 
     def _string_cols(df):
         # parquet sources carry no MySQL catalog; treat every string

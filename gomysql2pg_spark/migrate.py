@@ -191,10 +191,11 @@ class Migrator:
 
     @contextlib.contextmanager
     def _sigint_handler(self):
-        """Install SIGINT → cancel() for the duration of a run
-        (`cmd/app.go:186-216`, wired at `cmd/root.go:100-104`). Only the
-        main thread may install signal handlers; elsewhere (e.g. a test
-        worker) this is a no-op and cancel() remains callable directly."""
+        """Install SIGINT → cancel() for the duration of run() or
+        validate() (`cmd/app.go:186-216`, wired at
+        `cmd/root.go:100-104`). Only the main thread may install signal
+        handlers; elsewhere (e.g. a test worker) this is a no-op and
+        cancel() remains callable directly."""
         if threading.current_thread() is not threading.main_thread():
             yield
             return
@@ -208,6 +209,18 @@ class Migrator:
             yield
         finally:
             signal.signal(signal.SIGINT, prev)
+
+    def _start_table(self, table: str, phase: str) -> bool:
+        """Per-table prologue of run() and validate(): False once
+        cancel() has fired (the caller reports the table as cancelled
+        and starts nothing); otherwise tags this thread's Spark jobs
+        with JOB_GROUP so that cancel() reaches them."""
+        if self._cancel.is_set():
+            return False
+        self.spark.sparkContext.setJobGroup(
+            self.JOB_GROUP, f"/* gomysql2pg */ {phase} {table}", True
+        )
+        return True
 
     def _write_error_rows(self, df: DataFrame, table: str) -> int:
         """invalidTableData side-channel (`cmd/root.go:450-470`): write
@@ -230,13 +243,10 @@ class Migrator:
     def _run_table(self, table: str) -> TableResult:
         t0 = time.time()
         res = TableResult(table=table)
-        if self._cancel.is_set():
+        if not self._start_table(table, "migrate"):
             res.error = "cancelled"
             return res
         try:
-            self.spark.sparkContext.setJobGroup(
-                self.JOB_GROUP, f"/* gomysql2pg */ migrate {table}", True
-            )
             df: DataFrame = self.source_fn(table)
             res.error_rows = self._write_error_rows(df, table)
             df = self.transform_fn(df)
@@ -273,8 +283,12 @@ class Migrator:
         same bounded pool, with content-hash upgrade. `dst_fn(table,
         src_df)` re-reads what was loaded; it gets the source DataFrame
         because a headerless dump takes its schema from it. Results
-        come back in `tables` order."""
+        come back in `tables` order. Like run(), it honours cancel() and
+        SIGINT: a table not yet started comes back as a failed row with
+        error "cancelled"."""
         def one(t: str) -> TableCompareResult:
+            if not self._start_table(t, "compare"):
+                return TableCompareResult(t, -1, -2, error="cancelled")
             # per-table failure accounting, like run(): one missing /
             # unreadable table must yield a failed ROW in the report,
             # not abort the whole compare and discard every other
@@ -294,7 +308,7 @@ class Migrator:
                     t, -1, -2, error=f"source unreadable: {exc}"
                 )
 
-        with ThreadPoolExecutor(
+        with self._sigint_handler(), ThreadPoolExecutor(
             max_workers=self.config.max_parallel
         ) as pool:
             return list(

@@ -1,13 +1,14 @@
 #!/usr/bin/env python
 """Run EVERY registry entry against its DuckDB oracle at an arbitrary
-scale factor — the local superset of the driver's 50-entry window.
+scale factor — the comparison tier-1 `test_oracle_parity` makes at sf0.01.
 
     python scripts/oracle_sweep.py [sf_dir] [name_filter...]
 
 Defaults to /root/testdata/sf0.1 (the scale where tie/short-doc edge
-cases actually surface; the driver gate runs sf0.01). Prints one line
+cases actually surface; tier-1 parity runs sf0.01). Prints one line
 per entry and a FAILURES summary; exit code 1 if anything failed.
-~9 min for the full registry at sf0.1 on local[16].
+Runs on local[$SPARK_GRAFT_CPUS], by default one core per CPU this
+process may run on (the full registry at sf0.1 took ~9 min on 16 cores).
 """
 
 from __future__ import annotations
@@ -32,11 +33,14 @@ def main() -> int:
     from gomysql2pg_spark.functions.consume import force_count
     from oracle_utils import compare_query
 
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
     spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        # deliberately vanilla otherwise (the driver's verify does not
-        # use the tuned get_spark), but the UTC pin is part of the
+        SparkSession.builder.master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        # deliberately vanilla otherwise (results must not depend on
+        # the tuned get_spark), but the UTC pin is part of the
         # ENGINE's cross-engine contract: without it, a non-UTC host
         # collects different datetimes than the naive-UTC DuckDB
         # oracle for every timestamp-bucketing entry (r15 review)

@@ -251,6 +251,64 @@ def test_cancel_mid_run(spark, sf_dir, out_dir):
     assert s["tables_total"] == 5
 
 
+def _group_jobs(spark):
+    return set(
+        spark.sparkContext.statusTracker().getJobIdsForGroup(
+            Migrator.JOB_GROUP
+        )
+    )
+
+
+def test_validate_tags_jobs_and_honours_cancel(spark, sf_dir, out_dir):
+    """compareDb runs under the same job group as the data phase, so
+    cancel() reaches it; after cancel() no table starts: each comes
+    back as a failed row and no job is submitted."""
+    m = _mk_migrator(spark, sf_dir, out_dir)
+
+    def dst_fn(table, src_df):
+        return src_df
+
+    before = _group_jobs(spark)
+    assert all(r.content_ok for r in m.validate(["region"], dst_fn))
+    tagged = _group_jobs(spark)
+    assert tagged - before, "compare jobs are not in the job group"
+
+    m.cancel()
+    results = m.validate(["region", "nation", "supplier"], dst_fn)
+    assert [r.table for r in results] == ["region", "nation", "supplier"]
+    assert all(r.error == "cancelled" for r in results)
+    assert not any(r.count_ok for r in results)
+    assert _group_jobs(spark) == tagged
+
+
+def test_validate_sigint_cancels_remaining_tables(spark, sf_dir, out_dir):
+    """SIGINT during compareDb cancels like it does during the data
+    phase: the table being compared finishes or fails, the tables not
+    yet started come back cancelled."""
+    import signal
+    import threading
+
+    m = _mk_migrator(spark, sf_dir, out_dir, MigrationConfig(max_parallel=1))
+    seen = []
+
+    def dst_fn(table, src_df):
+        if not seen:
+            signal.pthread_kill(threading.main_thread().ident, signal.SIGINT)
+            m._cancel.wait(30)
+        seen.append(table)
+        return src_df
+
+    # a stand-in for the default handler, so that a validate() without
+    # its own handler fails this test instead of interrupting the run
+    prev = signal.signal(signal.SIGINT, lambda *a: seen.append("unhandled"))
+    try:
+        results = m.validate(["region", "nation", "supplier"], dst_fn)
+    finally:
+        signal.signal(signal.SIGINT, prev)
+    assert seen == ["region"]
+    assert [r.error for r in results[1:]] == ["cancelled", "cancelled"]
+
+
 def test_dialect_map():
     """dbType → JDBC driver/url (cmd/app.go:59-81)."""
     from gomysql2pg_spark.sinks.jdbc import DIALECTS, sink_config_for

@@ -1,8 +1,10 @@
 """End-to-end parity: every queries() entry vs its DuckDB oracle.
 
-This is the local mirror of the driver's CORRECTNESS gate."""
+This is the registry's correctness gate: it covers every entry on each
+run, and `scripts/oracle_sweep.py` runs the same comparison at any scale."""
 
 import os
+import sys
 
 import pytest
 
@@ -42,16 +44,10 @@ def test_entry_smoke(spark):
 
 
 def test_registry_invariants_no_oracle_entries_have_gated_twins():
-    """Registry meta-gate, mechanizing two process lessons:
-
-    - every rows-only entry (no SQL oracle by design — sketches, LSH
-      neighbor sets) must have a deterministic `<name>_check` /
-      `<name>_verified` twin that IS oracle-gated, so the driver record
-      never depends on an unverifiable row;
-    - the driver evaluates the FIRST 50 queries() entries, so the
-      priority window must contain only oracle-gated entries — r9
-      burned 3 of its 50 slots on no-oracle entries that can never
-      produce a hash row."""
+    """Registry meta-gate: every rows-only entry (no SQL oracle by
+    design — sketches, LSH neighbor sets) must have a deterministic
+    `<name>_check` / `<name>_verified` twin that IS oracle-gated, so
+    the parity record never depends on an unverifiable row."""
     import __spark_entry__ as e
 
     qs = e.queries()
@@ -75,9 +71,16 @@ def test_registry_invariants_no_oracle_entries_have_gated_twins():
         twin = f"{name}_check" if f"{name}_check" in qs else f"{name}_verified"
         assert twin in qs, f"rows-only entry {name} has no twin"
         assert twin in os_, f"{name}'s twin {twin} is not oracle-gated"
-    window = list(qs)[:50]
-    ungated = [n for n in window if n not in os_]
-    assert not ungated, f"driver window wastes slots on: {ungated}"
+
+
+def test_registry_surfaces_a_broken_operator_module(monkeypatch):
+    """A module that fails to import must fail queries(), not drop its
+    entries from the registry (and from this file's parity matrix)."""
+    monkeypatch.setitem(
+        sys.modules, "gomysql2pg_spark.operators.layout", None
+    )
+    with pytest.raises(ImportError):
+        entry.queries()
 
 
 def test_known_unicode_case_mapping_divergence_is_pinned(spark, duck):
