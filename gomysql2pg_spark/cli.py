@@ -59,6 +59,7 @@ verdict for data the pump mutated.
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 
@@ -164,7 +165,10 @@ def src_source_config(cfg):
 
 def _build_source(spark, cfg):
     """-> (tables, source_fn). Parquet-dir or JDBC sources (URL or
-    the reference's native host/port/database block)."""
+    the reference's native host/port/database block). `source_fn` is
+    memoized: createTable, onlyData and compareDb share one DataFrame
+    per table (one schema probe per table and invocation); each action
+    still scans the live source."""
     from .catalog import list_tables, load_table
     from .functions.patterns import excluded_tables
     from .sources.jdbc import read as jdbc_read
@@ -178,6 +182,7 @@ def _build_source(spark, cfg):
                 "(catalog discovery needs a dialect-specific query)"
             )
 
+        @functools.cache
         def source(table: str):
             sql = cfg.tables.get(table) or None
             return jdbc_read(spark, jcfg, table=None if sql else table,
@@ -192,14 +197,14 @@ def _build_source(spark, cfg):
             f"nor a jdbc: URL in src.host"
         )
     tables = list_tables(root, exclude=cfg.exclude)
+    if any(cfg.tables.get(t) for t in tables):
+        for t in tables:  # custom SQL may join any source table
+            load_table(spark, root, t).createOrReplaceTempView(t)
 
+    @functools.cache
     def source(table: str):
         sql = cfg.tables.get(table, "")
-        if sql:
-            for t in tables:  # custom SQL may join any source table
-                load_table(spark, root, t).createOrReplaceTempView(t)
-            return spark.sql(sql)
-        return load_table(spark, root, table)
+        return spark.sql(sql) if sql else load_table(spark, root, table)
 
     return tables, source
 
@@ -423,7 +428,7 @@ def cmd_only_data(spark, cfg, tables, source, sink) -> int:
     the reference's per-table failure accounting, the invalidTableData
     side channel when errorsDir is set (`root.go:450-470`), and the
     summary."""
-    from .functions.transforms import invalid_rows, strip_nul
+    from .functions.transforms import nul_predicate, strip_nul
     from .migrate import Migrator
 
     def _string_cols(df):
@@ -445,18 +450,13 @@ def cmd_only_data(spark, cfg, tables, source, sink) -> int:
             out = out.withColumn(c, strip_nul(c))
         return out
 
-    error_rows_fn = None
-    if cfg.errors_dir:
-
-        def error_rows_fn(df):
-            return invalid_rows(
-                df, {c: "text" for c in _string_cols(df)}
-            )
+    def error_predicate(df):
+        return nul_predicate(df, {c: "text" for c in _string_cols(df)})
 
     mig = Migrator(
         spark, cfg, source_fn=source, sink_fn=sink,
         transform_fn=transform,
-        error_rows_fn=error_rows_fn,
+        error_predicate=error_predicate if cfg.errors_dir else None,
     )
     report = mig.run(tables)
     for r in report.results:

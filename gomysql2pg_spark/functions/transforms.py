@@ -13,6 +13,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+#: MySQL types whose cells the pump NUL-strips (`root.go:441-470`)
+_TEXT_TYPES = ("varchar", "char", "text", "tinytext", "mediumtext", "longtext")
+
 
 def geometry_hex(c: Column | str) -> Column:
     """GEOMETRY: hex-encode, drop the 8-hex-char (4-byte) SRID header
@@ -90,24 +93,25 @@ def apply_cell_transforms(
             out = out.withColumn(name, geometry_hex(name))
         elif t == "bit":
             out = out.withColumn(name, bit_hex(name))
-        elif t in ("varchar", "char", "text", "tinytext", "mediumtext", "longtext"):
+        elif t in _TEXT_TYPES:
             out = out.withColumn(name, strip_nul(name))
         # blobs & everything else: passthrough (root.go:435-436)
     return lowercase_columns(out)
 
 
+def nul_predicate(df: DataFrame, mysql_types: dict[str, str]) -> Column:
+    """True for a row holding NUL in any string column — the rows the
+    reference logs to invalidTableData.log (`root.go:466`). A Column,
+    so the data phase can count matches inside the pump's own scan
+    (`F.count_if`) and filter only when there are any."""
+    pred = F.lit(False)
+    for name, ty in mysql_types.items():
+        if ty.lower() in _TEXT_TYPES:
+            pred = pred | has_nul(df[name])
+    return pred
+
+
 def invalid_rows(df: DataFrame, mysql_types: dict[str, str]) -> DataFrame:
     """Side-output: rows containing NUL in any string column — the
     DataFrame equivalent of invalidTableData.log (`root.go:466`)."""
-    string_cols = [
-        name
-        for name, ty in mysql_types.items()
-        if ty.lower()
-        in ("varchar", "char", "text", "tinytext", "mediumtext", "longtext")
-    ]
-    if not string_cols:
-        return df.filter(F.lit(False))
-    pred = has_nul(string_cols[0])
-    for c in string_cols[1:]:
-        pred = pred | has_nul(c)
-    return df.filter(pred)
+    return df.filter(nul_predicate(df, mysql_types))

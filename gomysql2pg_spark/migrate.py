@@ -167,18 +167,19 @@ class Migrator:
         source_fn,
         sink_fn,
         transform_fn=None,
-        error_rows_fn=None,
+        error_predicate=None,
     ):
         self.spark = spark
         self.config = config
         self.source_fn = source_fn
         self.sink_fn = sink_fn
         self.transform_fn = transform_fn or (lambda df: df)
-        # error_rows_fn: DataFrame -> DataFrame of offending source rows
-        # (e.g. functions.transforms.invalid_rows); written to the
-        # invalidTableData side-channel when config.errors_dir is set
-        # (`cmd/root.go:450-470`, `cmd/app.go:83-103`).
-        self.error_rows_fn = error_rows_fn
+        # error_predicate: DataFrame -> Column marking the offending
+        # source rows (e.g. functions.transforms.nul_predicate); they
+        # are written to the invalidTableData side-channel when
+        # config.errors_dir is set (`cmd/root.go:450-470`,
+        # `cmd/app.go:83-103`).
+        self.error_predicate = error_predicate
         self._cancel = threading.Event()
 
     def cancel(self):
@@ -222,19 +223,26 @@ class Migrator:
         )
         return True
 
-    def _write_error_rows(self, df: DataFrame, table: str) -> int:
+    def _write_error_rows(
+        self, df: DataFrame, table: str, flagged: int
+    ) -> int:
         """invalidTableData side-channel (`cmd/root.go:450-470`): write
         the offending rows under errors_dir/invalidTableData/<table> as
-        JSON lines. A separate filtered scan — the predicate pushes down
-        to the source, so at scale this reads only matching row groups
-        rather than re-pumping the table."""
-        if not (self.error_rows_fn and self.config.errors_dir):
-            return 0
-        bad = self.error_rows_fn(df)
+        JSON lines, replacing what an earlier run left there. `flagged`
+        is the pump scan's own count of such rows; only when it is
+        above 0 does a filtered scan run (the predicate pushes down to
+        the source, so at scale it reads only matching row groups), and
+        the count returned is the one that write observed. A clean
+        table gets an empty directory from an empty relation, without
+        touching the source."""
         path = f"{self.config.errors_dir}/invalidTableData/{table}"
+        if not flagged:
+            df.where(F.lit(False)).write.mode("overwrite").json(path)
+            return 0
         obs = Observation()
         (
-            bad.observe(obs, F.count(F.lit(1)).alias("rows"))
+            df.filter(self.error_predicate(df))
+            .observe(obs, F.count(F.lit(1)).alias("rows"))
             .write.mode("overwrite")
             .json(path)
         )
@@ -246,17 +254,26 @@ class Migrator:
         if not self._start_table(table, "migrate"):
             res.error = "cancelled"
             return res
+        side_channel = bool(self.error_predicate and self.config.errors_dir)
         try:
             df: DataFrame = self.source_fn(table)
-            res.error_rows = self._write_error_rows(df, table)
-            df = self.transform_fn(df)
-            # count during the write (Observation piggybacks on the
-            # sink's action) — one source scan, and the reported count
-            # is exactly what the sink consumed.
+            # one Observation on the source piggybacks on the sink's
+            # action: the row count (transform_fn maps cells, so it is
+            # exactly what the sink consumed) and, with the side
+            # channel on, the number of offending rows — one source
+            # scan for a clean table.
+            metrics = [F.count(F.lit(1)).alias("rows")]
+            if side_channel:
+                metrics.append(
+                    F.count_if(self.error_predicate(df)).alias("flagged")
+                )
             obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            self.sink_fn(df, table)
+            self.sink_fn(self.transform_fn(df.observe(obs, *metrics)), table)
             res.rows = int(obs.get["rows"])
+            if side_channel:
+                res.error_rows = self._write_error_rows(
+                    df, table, int(obs.get["flagged"])
+                )
             res.ok = True
         except Exception as exc:  # failure accounting (A18/A21)
             res.error = f"{exc}\n{traceback.format_exc(limit=3)}"

@@ -18,6 +18,8 @@ from __future__ import annotations
 import io
 from dataclasses import dataclass, field
 
+from pyspark.sql import types as T
+
 
 @dataclass
 class JdbcSinkConfig:
@@ -140,6 +142,16 @@ def encode_copy_text(rows, null_marker: str = "\\N") -> str:
     return buf.getvalue()
 
 
+#: Types whose string form (Spark's cast to string) never holds a
+#: backslash, TAB, LF or CR: their COPY cells skip the escape grammar
+#: both ways (`copy_text_line`, `sources.copytext.read_copy_text`).
+PLAIN_TYPES = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType,
+    T.DateType, T.TimestampType, T.TimestampNTZType, T.BooleanType,
+)
+
+
 def copy_text_line(cols, types=None) -> "object":
     """One COPY-text wire LINE per row, as a pure Column expression —
     the DISTRIBUTED twin of `encode_copy_text`: the JVM formats and
@@ -153,36 +165,43 @@ def copy_text_line(cols, types=None) -> "object":
     use a shortest-round-trip form whose VALUE parses back exactly.
 
     `types` (optional, parallel to `cols`: the Spark DataTypes, e.g.
-    `[f.dataType for f in df.schema.fields]`) routes BinaryType
-    columns through PG's bytea hex input form — `\\x` + lowercase
-    hex, still JVM-side (`hex()` is codegen) — instead of Spark's
-    cast(binary as string), which would reinterpret raw bytes as
-    UTF-8 and corrupt the staged data (the reference ships RawBytes
-    through pq.CopyIn, which hex-encodes the same way;
-    `cmd/root.go:412-489`). A bare Column carries no type, so without
-    `types` binary data CANNOT be detected — callers with blob
-    columns must pass `types` (copy_dump_sink derives it from the
-    DataFrame schema automatically).
+    `[f.dataType for f in df.schema.fields]`) makes the encoder
+    type-aware without changing a wire byte:
+
+    - a `PLAIN_TYPES` column is its string cast, with no escape pass
+      (its text never holds a character the grammar escapes);
+    - a BinaryType column takes PG's bytea hex input form, `\\x` +
+      lowercase hex, written with its backslash already doubled (hex
+      digits need no escape), still JVM-side (`hex()` is codegen),
+      instead of Spark's cast(binary as string), which would
+      reinterpret raw bytes as UTF-8 and corrupt the staged data (the
+      reference ships RawBytes through pq.CopyIn, which hex-encodes
+      the same way; `cmd/root.go:412-489`). A bare Column carries no
+      type, so without `types` binary data CANNOT be detected —
+      callers with blob columns must pass `types` (copy_dump_sink
+      derives it from the DataFrame schema automatically);
+    - any other column (string, nested, or no `types`) takes the full
+      escape pass.
 
     The row terminator comes from the text writer (one line per row),
     matching `encode_copy_text`'s trailing newline."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     cells = []
     for i, c in enumerate(cols):
         dt = types[i] if types is not None else None
         if isinstance(dt, T.BinaryType):
-            s = F.concat(F.lit("\\x"), F.lower(F.hex(c)))
+            s = F.concat(F.lit("\\\\x"), F.lower(F.hex(c)))
         else:
             s = c.cast("string")
-        for find, repl in (
-            ("\\", "\\\\"),
-            ("\t", "\\t"),
-            ("\n", "\\n"),
-            ("\r", "\\r"),
-        ):
-            s = F.replace(s, F.lit(find), F.lit(repl))
+            if not isinstance(dt, PLAIN_TYPES):
+                for find, repl in (
+                    ("\\", "\\\\"),
+                    ("\t", "\\t"),
+                    ("\n", "\\n"),
+                    ("\r", "\\r"),
+                ):
+                    s = F.replace(s, F.lit(find), F.lit(repl))
         cells.append(F.coalesce(s, F.lit("\\N")))
     return F.concat_ws("\t", *cells)
 

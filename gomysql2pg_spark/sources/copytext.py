@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from ..sinks.jdbc import PLAIN_TYPES
 
 
 def make_copytext_source():
@@ -101,7 +102,11 @@ def make_copytext_source():
         return "".join(out)
 
     def caster_for(dt):
-        """Scalar (per-cell) caster — the strict fallback path."""
+        """Scalar (per-cell) caster — the strict fallback path. It
+        runs on the DECODED cell, and `int`/`float`/`Decimal` strip
+        surrounding whitespace, so here an escaped TAB, LF or CR around
+        a number still parses; `read_copy_text` rejects any escape in a
+        typed cell."""
         import datetime
         import decimal
 
@@ -545,18 +550,31 @@ def _decode_cell_col(cell: Column) -> Column:
     )
 
 
+def _cell_col(cell: Column, field: T.StructField) -> Column:
+    """The first decode step of one wire cell. A `PLAIN_TYPES` or
+    binary cell only maps `\\N` to NULL: the encoder never escapes
+    anything in it, so a backslash there is left for `_cast_cell_col`
+    to reject. Any other cell takes the full `_decode_cell_col`."""
+    if isinstance(field.dataType, PLAIN_TYPES + (T.BinaryType,)):
+        return F.when(cell != "\\N", cell)
+    return _decode_cell_col(cell)
+
+
 def _cast_cell_col(s: Column, field: T.StructField) -> Column:
-    """The decoded cell cast to `field`'s type; malformed input raises
-    (`caster_for` in the Python reader accepts the same forms)."""
+    """The cell from `_cell_col` cast to `field`'s type; malformed
+    input raises (`caster_for` in the Python reader accepts the same
+    forms, except that its scalar casters strip whitespace)."""
     dt, name = field.dataType, field.name
     if isinstance(dt, T.StringType):
         return s
     if isinstance(dt, T.BinaryType):
-        digits = s.substr(F.lit(3), F.length(s))
+        # the wire form is bytea's `\x` + hex with its backslash
+        # escaped (`\\x`), checked without decoding
+        digits = s.substr(F.lit(4), F.length(s))
         raw = F.unhex(digits)  # NULL for a non-hex digit
         return (
             F.when(s.isNull(), F.lit(None))
-            .when(~s.startswith("\\x"), _corrupt(
+            .when(~s.startswith("\\\\x"), _corrupt(
                 f"bytea cell without \\x prefix in column {name}"))
             .when((F.length(digits) % 2 == 1) | raw.isNull(),
                   _corrupt(f"invalid bytea hex in column {name}"))
@@ -592,7 +610,15 @@ def read_copy_text(
     `\\N` is NULL, unknown escapes, dangling backslashes, wrong cell
     counts and malformed typed cells fail the task. Files go through
     Spark's Hadoop filesystem layer, the one `copy_dump_sink` writes
-    with, so every dump the sink can write reads back."""
+    with, so every dump the sink can write reads back.
+
+    Typed like the encoder: a `PLAIN_TYPES` cell is never unescaped —
+    only `\\N` → NULL, then the strict cast — so an escape in a number,
+    date, timestamp or boolean is corrupt (Spark's cast would trim the
+    TAB, LF or CR it decodes to); a binary cell is checked against its
+    `\\\\x` wire prefix directly. String and nested columns take the
+    full escape decode, a higher-order function that runs outside
+    whole-stage codegen."""
     n = len(schema.fields)
     cells = F.split(F.col("value"), "\t", -1)
     checked = F.when(F.size(cells) == n, cells).otherwise(_corrupt(
@@ -605,7 +631,7 @@ def read_copy_text(
         spark.read.option("lineSep", "\n").text(path)
         .select(checked.alias("cells"))
         .select(*[
-            _decode_cell_col(F.col("cells")[i]).alias(f.name)
+            _cell_col(F.col("cells")[i], f).alias(f.name)
             for i, f in enumerate(schema.fields)
         ])
     )

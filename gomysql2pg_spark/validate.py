@@ -5,18 +5,23 @@ The reference compares row counts only; a mismatched VALUE at equal
 cardinality passes silently. `content_hash` closes that: an
 order-insensitive checksum — sum of xxhash64 over all columns per
 row — detects any single-cell change with probability ~1-2^-64, computes
-in one scan with map-side partial aggregation, and is partitioning
-independent (addition is associative/commutative), so it is stable under
-AQE re-plans and cluster re-sizings. The sum runs in decimal(38,0):
-exact at any row count and immune to ANSI-mode long-overflow errors
-(Spark 4 default).
+in one scan, and is partitioning independent (addition is
+associative/commutative), so it is stable under AQE re-plans and cluster
+re-sizings. The sum runs in decimal(38,0): exact at any row count and
+immune to ANSI-mode long-overflow errors (Spark 4 default).
+
+`compare_tables` checks one table in ONE single-stage Spark job: the
+count and hash of each side are Observation metrics over a union of the
+two scans, so no Exchange is planned and both scans are tasks of the
+result stage, whose accumulator updates Spark applies exactly once per
+partition.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -57,6 +62,25 @@ def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
     return int(row["h"]) if row["h"] is not None else 0
 
 
+def _observed_union(
+    src: DataFrame, dst: DataFrame, with_hash: bool
+) -> tuple[DataFrame, Observation, Observation]:
+    """Both sides under an Observation of their count (and hash sum),
+    unioned and projected to a constant: writing the result runs every
+    scan of both sides as tasks of one stage, with no Exchange."""
+
+    def observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+        metrics = [F.count(F.lit(1)).alias("n")]
+        if with_hash:
+            metrics.append(_hash_sum(df.columns).alias("h"))
+        obs = Observation()
+        return df.observe(obs, *metrics).select(F.lit(1).alias("_")), obs
+
+    s, s_obs = observed(src)
+    d, d_obs = observed(dst)
+    return s.union(d), s_obs, d_obs
+
+
 def compare_tables(
     src: DataFrame,
     dst: DataFrame,
@@ -64,8 +88,17 @@ def compare_tables(
     with_hash: bool = True,
 ) -> TableCompareResult:
     """compareDb per-table check (`compare.go:102-132`) with the
-    content-hash upgrade. Counts and hashes are single-scan aggregates;
-    at scale both run as one job per side with partial aggregation."""
+    content-hash upgrade, as ONE single-stage Spark job: each side's
+    count and hash sum are Observation metrics, and the job is a
+    `noop` write of the union of the two observed scans (a global
+    aggregate per side would plan an Exchange, which AQE runs as two
+    jobs).
+
+    The observed numbers are exact: the metrics are accumulators of
+    the result stage, and Spark applies a result task's accumulator
+    updates once per partition, however often a task is retried or
+    speculated (the data phase's row count relies on the same rule).
+    Both the source and the destination are scanned in full."""
     if with_hash:
         # align the destination to the SOURCE column order first:
         # per-row xxhash64(*cols) is order-sensitive, so byte-identical
@@ -77,21 +110,18 @@ def compare_tables(
             src.columns != dst.columns
         ):
             dst = dst.select(*src.columns)
-        # one pass per side: count + hash together
-        s = src.agg(
-            F.count("*").alias("n"), _hash_sum(src.columns).alias("h")
-        ).collect()[0]
-        d = dst.agg(
-            F.count("*").alias("n"), _hash_sum(dst.columns).alias("h")
-        ).collect()[0]
-        return TableCompareResult(
-            table,
-            s["n"],
-            d["n"],
-            int(s["h"]) if s["h"] is not None else 0,
-            int(d["h"]) if d["h"] is not None else 0,
-        )
-    return TableCompareResult(table, src.count(), dst.count())
+    both, s_obs, d_obs = _observed_union(src, dst, with_hash)
+    both.write.format("noop").mode("overwrite").save()
+    s, d = s_obs.get, d_obs.get
+    if not with_hash:
+        return TableCompareResult(table, s["n"], d["n"])
+    return TableCompareResult(
+        table,
+        s["n"],
+        d["n"],
+        int(s["h"]) if s["h"] is not None else 0,
+        int(d["h"]) if d["h"] is not None else 0,
+    )
 
 
 def compare_report(results: list[TableCompareResult]) -> dict:

@@ -271,51 +271,84 @@ def test_binary_bytea_roundtrip(spark, tmp_path):
     """BinaryType columns ship as PG bytea hex (`\\x` + lowercase hex,
     doubled backslash on the wire) through the JVM encoder and decode
     back byte-for-byte — the blob path ADVICE flagged: a plain
-    cast(binary as string) would mangle non-UTF-8 bytes."""
+    cast(binary as string) would mangle non-UTF-8 bytes. Every plain
+    type rides along: the typed encoder skips their escape pass, and
+    its wire must still equal the Python encoder's over the same cell
+    text (Spark's string cast), then read back unchanged."""
+    import datetime as dt
+    from decimal import Decimal
+
     from pyspark.sql import types as T
 
+    from gomysql2pg_spark.sources.copytext import read_copy_text
+
+    nan, inf = float("nan"), float("inf")
     rows = [
-        (1, bytes(range(256))),
-        (2, b""),
-        (3, None),
-        (4, b"\x00\\\t\n\r\xff"),
+        (1, bytes(range(256)), 127, -32768, 2147483647, nan, nan,
+         Decimal("-123456789.125"), dt.date(1969, 12, 31),
+         dt.datetime(1960, 6, 1, 0, 0, 0, 1),
+         dt.datetime(2024, 2, 29, 23, 59, 59, 999999), True),
+        (2, b"", -128, 0, -2147483648, inf, -inf, Decimal("-0.001"),
+         dt.date(1, 1, 1), dt.datetime(1970, 1, 1),
+         dt.datetime(1899, 12, 31, 12, 30), False),
+        (3, None, None, None, None, -inf, inf, Decimal("0"), None, None,
+         None, None),
+        (4, b"\x00\\\t\n\r\xff", 0, 1, 0, -0.0, -0.0, None,
+         dt.date(9999, 12, 31), dt.datetime(2020, 1, 2, 3, 4, 5, 123456),
+         dt.datetime(1, 1, 1), True),
+        (5, b"\x00", 1, -1, 7, 1.5, 1e-300, Decimal("999999999.999"),
+         dt.date(1900, 3, 1), None, None, False),
     ]
     sch = T.StructType([
         T.StructField("id", T.LongType()),
         T.StructField("blob", T.BinaryType()),
+        T.StructField("b", T.ByteType()),
+        T.StructField("s", T.ShortType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("f", T.FloatType()),
+        T.StructField("x", T.DoubleType()),
+        T.StructField("dec", T.DecimalType(12, 3)),
+        T.StructField("day", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("tsn", T.TimestampNTZType()),
+        T.StructField("flag", T.BooleanType()),
     ])
     df = spark.createDataFrame(rows, sch)
     out = str(tmp_path / "bin")
     (
         df.select(
             copy_text_line(
-                [F.col("id"), F.col("blob")],
+                [F.col(c) for c in df.columns],
                 types=[f.dataType for f in sch.fields],
             ).alias("value")
         )
         .write.mode("overwrite")
         .text(out)
     )
-    # wire form: lowercase hex with doubled backslash
     wire = []
     for f in os.listdir(out):
         if not f.startswith(("_", ".")):
             with open(os.path.join(out, f), encoding="utf-8") as fh:
                 wire += [ln[:-1] for ln in fh if ln.endswith("\n")]
+    # the Python encoder over the same cells: bytes as they are, every
+    # other value as Spark's string cast renders it
+    cells = df.select(*[
+        F.col(f.name) if isinstance(f.dataType, T.BinaryType)
+        else F.col(f.name).cast("string")
+        for f in sch.fields
+    ]).collect()
     assert sorted(wire) == sorted(
-        encode_copy_text(rows).split("\n")[:-1]
+        encode_copy_text([tuple(r) for r in cells]).split("\n")[:-1]
     )
-    assert any("\\\\x00ff" in ln or "\\\\x" in ln for ln in wire)
+    # wire form: lowercase hex with doubled backslash
+    assert any("\\\\x000102" in ln for ln in wire)
+
+    def got(back):  # repr: NaN never equals itself
+        return sorted(repr(tuple(r)) for r in back.collect())
+
     register_copytext(spark)
-    got = sorted(
-        tuple(r)
-        for r in spark.read.format("copytext")
-        .schema("id bigint, blob binary")
-        .load(out)
-        .collect()
-    )
-    got = [(i, bytes(b) if b is not None else None) for i, b in got]
-    assert got == sorted(rows)
+    assert got(spark.read.format("copytext").schema(sch).load(out)) \
+        == got(read_copy_text(spark, out, sch)) == got(df)
 
 
 def test_binary_without_prefix_fails_loudly(spark, tmp_path):
@@ -577,6 +610,13 @@ def test_read_copy_text_matches_python_source(spark, tmp_path):
         ("1\t\\\\xabc\n", "k bigint, b binary", "invalid bytea hex"),
         ("1\tyes\n", "k bigint, f boolean", "invalid boolean yes"),
         ("x1\tt\n", "k bigint, f boolean", "invalid bigint x1"),
+        # an escape in a typed cell: decoded, Spark's cast would trim
+        # the TAB/LF/CR and accept the number or date
+        ("\\t5\n", "k bigint", r"invalid bigint \\t5"),
+        ("1\\t\n", "k bigint", r"invalid bigint 1\\t"),
+        ("2024-01-01\\n\n", "d date", r"invalid date 2024-01-01\\n"),
+        ("\\r2.5\n", "x decimal(10,2)",
+         r"invalid decimal\(10,2\) \\r2\.5"),
     ],
 )
 def test_read_copy_text_fails_loudly(spark, tmp_path, wire, schema, msg):

@@ -161,7 +161,7 @@ def test_error_row_side_channel(spark, sf_dir, out_dir, tmp_path):
     errors dir while the sanitized main write proceeds."""
     from gomysql2pg_spark.functions.transforms import (
         apply_cell_transforms,
-        invalid_rows,
+        nul_predicate,
     )
 
     errors_dir = str(tmp_path / "errlog")
@@ -186,7 +186,7 @@ def test_error_row_side_channel(spark, sf_dir, out_dir, tmp_path):
         source_fn,
         sink_fn,
         transform_fn=lambda df: apply_cell_transforms(df, types),
-        error_rows_fn=lambda df: invalid_rows(df, types),
+        error_predicate=lambda df: nul_predicate(df, types),
     )
     report = m.run(["region"])
     res = report.results[0]
@@ -197,6 +197,90 @@ def test_error_row_side_channel(spark, sf_dir, out_dir, tmp_path):
     # main write is sanitized
     main = spark.read.parquet(os.path.join(out_dir, "region"))
     assert main.filter(F.col("r_name").contains("\x00")).count() == 0
+
+
+def _counted_source(spark, rows, schema):
+    """-> (source_fn, scans): `scans[table]` is how many times the
+    table's rows were read, over every action on its DataFrame."""
+    sc = spark.sparkContext
+    accs = {t: sc.accumulator(0) for t in rows}
+
+    def source_fn(table):
+        acc = accs[table]
+
+        def seen(row):
+            acc.add(1)
+            return row
+
+        rdd = sc.parallelize(rows[table], 1).map(seen)
+        return spark.createDataFrame(rdd, schema)
+
+    def scans():
+        return {t: a.value // len(rows[t]) for t, a in accs.items()}
+
+    return source_fn, scans
+
+
+def test_side_channel_rescans_only_tables_with_nul_rows(
+    spark, out_dir, tmp_path
+):
+    """The pump's own scan counts the offending rows: a clean table is
+    read once during the data phase, a table with NUL rows twice (the
+    pump, then the filtered side-channel write)."""
+    from gomysql2pg_spark.functions.transforms import nul_predicate
+
+    rows = {
+        "clean": [(1, "a"), (2, "b"), (3, None)],
+        "dirty": [(1, "a\x00"), (2, "b"), (3, None)],
+    }
+    source_fn, scans = _counted_source(spark, rows, "k bigint, s string")
+
+    def sink_fn(df, table):
+        df.write.mode("overwrite").parquet(os.path.join(out_dir, table))
+
+    errors_dir = str(tmp_path / "errlog")
+    m = Migrator(
+        spark,
+        MigrationConfig(max_parallel=2, errors_dir=errors_dir),
+        source_fn,
+        sink_fn,
+        error_predicate=lambda df: nul_predicate(df, {"s": "text"}),
+    )
+    report = m.run(["clean", "dirty"])
+    assert [(r.table, r.ok, r.rows, r.error_rows) for r in report.results] \
+        == [("clean", True, 3, 0), ("dirty", True, 3, 1)]
+    assert scans() == {"clean": 1, "dirty": 2}
+    logged = spark.read.json(f"{errors_dir}/invalidTableData/dirty")
+    assert [r["k"] for r in logged.collect()] == [1]
+
+
+def test_clean_table_replaces_stale_side_channel(
+    spark, sf_dir, out_dir, tmp_path
+):
+    """A table that is clean now gets an empty invalidTableData/<t>,
+    replacing the rows an earlier run logged there."""
+    from gomysql2pg_spark.functions.transforms import nul_predicate
+
+    errors_dir = tmp_path / "errlog"
+    stale = errors_dir / "invalidTableData" / "region"
+    spark.createDataFrame([(0, "old\x00")], "r_regionkey int, r_name string") \
+        .write.json(str(stale))
+    assert spark.read.text(str(stale)).count() == 1
+
+    def sink_fn(df, table):
+        df.write.mode("overwrite").parquet(os.path.join(out_dir, table))
+
+    m = Migrator(
+        spark,
+        MigrationConfig(errors_dir=str(errors_dir)),
+        lambda t: load_table(spark, sf_dir, t),
+        sink_fn,
+        error_predicate=lambda df: nul_predicate(df, {"r_name": "varchar"}),
+    )
+    res = m.run(["region"]).results[0]
+    assert res.ok and res.error_rows == 0
+    assert stale.is_dir() and (stale / "_SUCCESS").exists()
+    assert spark.read.text(str(stale)).count() == 0
 
 
 def test_single_scan_row_count(spark, sf_dir, out_dir):
@@ -279,6 +363,32 @@ def test_validate_tags_jobs_and_honours_cancel(spark, sf_dir, out_dir):
     assert all(r.error == "cancelled" for r in results)
     assert not any(r.count_ok for r in results)
     assert _group_jobs(spark) == tagged
+
+
+def test_validate_runs_one_single_stage_job_per_table(
+    spark, sf_dir, out_dir
+):
+    """compareDb is one Spark job per table: both sides' counts and
+    hashes are observed over one union of the two scans, which plans
+    no Exchange (a global aggregate per side made AQE run four jobs)."""
+    from gomysql2pg_spark import validate
+
+    tables = ["region", "nation", "supplier"]
+    # built up front: a parquet read runs a schema-inference job
+    src = {t: load_table(spark, sf_dir, t) for t in tables}
+    dst = {t: load_table(spark, sf_dir, t) for t in tables}
+    m = Migrator(spark, MigrationConfig(max_parallel=4), src.get, None)
+
+    before = _group_jobs(spark)
+    results = m.validate(tables, lambda t, src_df: dst[t])
+    assert [r.table for r in results] == tables
+    assert all(r.content_ok for r in results)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(_group_jobs(spark) - before) == len(tables)
+
+    both, _, _ = validate._observed_union(src["nation"], dst["nation"], True)
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
 
 
 def test_validate_sigint_cancels_remaining_tables(spark, sf_dir, out_dir):

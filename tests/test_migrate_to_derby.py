@@ -187,3 +187,46 @@ def test_cli_jdbc_source_honours_exclude(spark, derby_url, tmp_path, capsys):
     assert "excl_drop" not in out
     assert "excl_drop" not in ddl.read_text()
     assert sorted(os.listdir(dump)) == ["excl_keep"]
+
+
+def test_cli_builds_each_jdbc_source_once(
+    spark, derby_url, tmp_path, monkeypatch, capsys
+):
+    """createTable, onlyData and compareDb share one source DataFrame
+    per table: a CLI `migrate` opens one JDBC relation (one schema
+    probe) per table, not one per phase."""
+    import yaml
+
+    from gomysql2pg_spark.cli import main
+    from gomysql2pg_spark.sources import jdbc
+
+    rows = spark.createDataFrame([(1, "a"), (2, "b\x00c")], "id int, s string")
+    tables = ["ONCE_A", "ONCE_B", "ONCE_C"]
+    for t in tables:
+        rows.write.format("jdbc").option("url", derby_url).option(
+            "dbtable", t
+        ).option("driver", DRIVER).mode("overwrite").save()
+    reads = []
+    real_read = jdbc.read
+
+    def counting_read(*a, **kw):
+        reads.append(kw.get("table") or kw.get("query"))
+        return real_read(*a, **kw)
+
+    monkeypatch.setattr(jdbc, "read", counting_read)
+    cfg = tmp_path / "cfg.yml"
+    cfg.write_text(yaml.safe_dump({
+        "src": {"host": derby_url},
+        "dest": {"dbType": "copydump", "database": str(tmp_path / "dump")},
+        "tables": {t.lower(): [] for t in tables},
+        "errorsDir": str(tmp_path / "errors"),
+        "maxParallel": 3,
+    }))
+    # the NUL-stripped rows differ from the source: compareDb exits 1
+    assert main(["-c", str(cfg), "migrate",
+                 "--out", str(tmp_path / "ddl.sql")]) == 1
+    out = capsys.readouterr().out
+    for t in tables:
+        assert f"{t.lower()}: 2 rows" in out
+        assert f"{t.lower()}: src=2 dst=2 MISMATCH" in out
+    assert sorted(reads) == sorted(t.lower() for t in tables)
