@@ -7,9 +7,10 @@ and prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Per-query time = full plan execution to a driver-side count/collect
-(cold per query, shared JVM). A small warmup query initializes the JVM,
-parquet footers, and codegen caches so measurements reflect steady-state
-execution rather than session startup.
+(cold per query, shared JVM). A warmup pass at sf0.001 initializes the
+JVM and parquet footers so measurements reflect steady-state execution
+rather than session startup; "codegen_compiles" records the classes each
+entry still compiled while timed.
 """
 
 from __future__ import annotations
@@ -390,7 +391,7 @@ def main() -> None:
                   file=sys.stderr)
 
     from gomysql2pg_spark.functions.consume import force_count
-    from gomysql2pg_spark.session import get_spark
+    from gomysql2pg_spark.session import codegen_compiles, get_spark
 
     import __spark_entry__ as entrymod
 
@@ -403,11 +404,11 @@ def main() -> None:
     spark.conf.set("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
     qs = entrymod.queries()
 
-    # warmup: JVM, file index, codegen. Each headline plan is executed
-    # once at sf0.001 (same schemas ⇒ identical generated code ⇒ the
-    # sf-scale runs hit the codegen cache) so measurements reflect
-    # steady-state execution — on a real cluster compile cost amortizes
-    # to zero over long-running queries.
+    # warmup: JVM, file index, parquet footers. Each headline plan is
+    # executed once at sf0.001. That does not leave the sf-scale runs a
+    # warm codegen cache: the 144 entries warmed in a row generate more
+    # classes than it holds (Spark's default 100; 1000 in get_spark), so
+    # the early entries' classes are evicted before they are timed.
     from gomysql2pg_spark.catalog import load_table
 
     load_table(spark, sf_dir, "region").count()
@@ -449,6 +450,9 @@ def main() -> None:
     medians: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
+    # classes Janino compiled during each entry's timed reps: generated
+    # code the codegen cache did not hold
+    compiles: dict[str, int] = {}
     for name in HEADLINE:
         fn = qs.get(name)
         if fn is None:
@@ -457,6 +461,7 @@ def main() -> None:
             continue
         samples: list[float] = []
         n = -1
+        compiled_before = codegen_compiles(spark)
         while len(samples) < reps or (
             samples
             and min(samples) < fast_cut
@@ -483,6 +488,7 @@ def main() -> None:
                     spark._jvm.System.gc()
                 except Exception:
                     pass
+        compiles[name] = codegen_compiles(spark) - compiled_before
         if samples:
             samples.sort()
             # headline = min (same metric as every prior round — the
@@ -511,6 +517,7 @@ def main() -> None:
         "queries": times,
         "median": medians,
         "spread": spread,
+        "codegen_compiles": compiles,
         "n_queries": len(HEADLINE),
         "n_ok": len(ok),
         # marker: results are drained through force_count (every

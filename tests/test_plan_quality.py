@@ -1122,3 +1122,32 @@ def test_selfrep_scrub_two_shuffles_no_token_position_join(
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Exchange hashpartitioning") <= 2, final
     assert "collect_list" not in final, final
+
+
+def test_repeated_curation_chain_compiles_no_new_classes(
+    spark, sf_dir, queries
+):
+    """A pipeline run again in the same session must reuse its generated
+    classes. The curation chain needs about 190 codegen cache entries;
+    with Spark's default of 100 (evicted least-recently-used first)
+    every entry's classes were gone before it ran again, and pass 3 here
+    recompiled 127 classes with Janino (30/19/37/41), which the JIT then
+    profiled again as new bytecode.
+
+    `similarity_ivfpq` is not pinned at 0: some of its calls still
+    compile up to 8 classes whose source differs from a cached one only
+    in `codegenStageId`, which numbers stages in the order AQE query
+    stages finish, and that order varies between calls."""
+    from gomysql2pg_spark.session import codegen_compiles
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    chain = ("dedup_survivors", "bpe_token_counts", "bm25_topk",
+             "similarity_ivfpq")
+    for _ in range(3):
+        compiled = {}
+        for name in chain:
+            before = codegen_compiles(spark)
+            queries[name](spark, sf_dir).collect()
+            compiled[name] = codegen_compiles(spark) - before
+    assert all(compiled[n] == 0 for n in chain[:3]), compiled
+    assert sum(compiled.values()) <= 10, compiled
