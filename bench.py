@@ -7,10 +7,11 @@ and prints ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Per-query time = full plan execution to a driver-side count/collect
-(cold per query, shared JVM). A warmup pass at sf0.001 initializes the
-JVM and parquet footers so measurements reflect steady-state execution
-rather than session startup; "codegen_compiles" records the classes each
-entry still compiled while timed.
+(cold caches per rep, shared JVM). Each entry runs once untimed at the
+timed scale right before its reps, so the reps measure execution rather
+than session startup, footer reads or code generation;
+"codegen_compiles" records the classes each entry still compiled while
+timed.
 """
 
 from __future__ import annotations
@@ -404,25 +405,14 @@ def main() -> None:
     spark.conf.set("spark.sql.files.openCostInBytes", str(128 * 1024 * 1024))
     qs = entrymod.queries()
 
-    # warmup: JVM, file index, parquet footers. Each headline plan is
-    # executed once at sf0.001. That does not leave the sf-scale runs a
-    # warm codegen cache: the 144 entries warmed in a row generate more
-    # classes than it holds (Spark's default 100; 1000 in get_spark), so
-    # the early entries' classes are evicted before they are timed.
-    from gomysql2pg_spark.catalog import load_table
-
-    load_table(spark, sf_dir, "region").count()
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in HEADLINE:
-            try:
-                force_count(qs[name](spark, warm_dir))
-            except Exception as exc:  # warmup must never fail the bench
-                print(f"# warmup {name} failed: {exc}", file=sys.stderr)
-    # drop caches persisted by warmed queries (codegen cache survives)
-    # and collect garbage so no query pays the warmup's GC debt
-    spark.catalog.clearCache()
-    spark._jvm.System.gc()
+    def _release():
+        # drop caches the call persisted (the codegen cache survives)
+        # and collect garbage so the next call pays no GC debt
+        try:
+            spark.catalog.clearCache()
+            spark._jvm.System.gc()
+        except Exception:
+            pass
 
     # Per-query headline time = MIN over REPS cold executions (the same
     # metric as every prior round), with median + min/max spread reported
@@ -461,12 +451,20 @@ def main() -> None:
             continue
         samples: list[float] = []
         n = -1
+        # untimed first call at the timed scale, right before the reps:
+        # a warm-up pass over all 144 entries generates more classes
+        # than the codegen cache holds (1000 in get_spark), so the early
+        # entries' classes would be evicted and recompiled while timed
+        try:
+            force_count(fn(spark, sf_dir))
+        except Exception as exc:
+            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
+        finally:
+            _release()
         compiled_before = codegen_compiles(spark)
-        while len(samples) < reps or (
-            samples
-            and min(samples) < fast_cut
-            and len(samples) < fast_reps
-        ):
+        while name not in errors and (len(samples) < reps or (
+            samples and min(samples) < fast_cut and len(samples) < fast_reps
+        )):
             try:
                 t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
@@ -483,11 +481,7 @@ def main() -> None:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:300]
                 break
             finally:
-                try:
-                    spark.catalog.clearCache()  # measured independently
-                    spark._jvm.System.gc()
-                except Exception:
-                    pass
+                _release()  # each rep measured independently
         compiles[name] = codegen_compiles(spark) - compiled_before
         if samples:
             samples.sort()

@@ -1,4 +1,7 @@
-"""Benchmark-side result consumption that cannot be pruned away.
+"""The boundary between driver rows and frames: building a frame from
+driver-held rows (``local_frame``), draining a one-row report back to
+the driver (``drain_one_row``), and benchmark-side result consumption
+that cannot be pruned away (``force_count``).
 
 ``df.count()`` is the natural way to drain a query, but Catalyst's
 column pruning makes it a LIE for timing: counting rows never needs
@@ -27,6 +30,41 @@ import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def local_frame(spark, rows, ddl: str) -> DataFrame:
+    """Driver-held rows as a LocalTableScan with the DECLARED schema:
+    the package's one builder of a frame from driver rows, and it never
+    starts a Python worker. `createDataFrame(<python list>)` compiles
+    to `Scan ExistingRDD ... applySchemaToPythonRDD`; draining it forks
+    `pyspark.daemon` plus a worker per core that stay resident for the
+    session (~180 MB on 4 cores), and a model table pays a Python task
+    in every consuming query's broadcast build (the r14 PQ regression,
+    ~0.3 s each). Rows ride through pandas + Arrow instead: one
+    driver-local batch, O(model) bytes at any size, where inlined
+    literals would re-create the M2 plan-size bomb (nlist 4096 × dim
+    768 ≈ 3M literals). Zero rows cannot take that path — PySpark's
+    `createDataFrame(pandas)` uses Arrow only when `len(data) > 0` —
+    so they are a typed-NULL row under a false filter, which Catalyst
+    folds to `LocalTableScan <empty>` (its collect runs no job)."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    # a real DDL parse: composite types (decimal(p,s), map<k,v>) carry
+    # commas, which a split would mistake for columns (r14 ADVICE)
+    fields = StructType.fromDDL(ddl).fields
+    rows = list(rows)
+    if not rows:
+        return (
+            spark.range(1)
+            .select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+            )
+            .where(F.lit(False))
+        )
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=[f.name for f in fields]), ddl
+    )
 
 
 def drain_one_row(df: DataFrame, *caches: DataFrame) -> DataFrame:

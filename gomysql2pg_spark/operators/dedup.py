@@ -24,10 +24,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
 
 from ..catalog import fixture_stat, load_table
-from ..functions.consume import drain_one_row
+from ..functions.consume import drain_one_row, local_frame
 
 # ---------------------------------------------------------------------------
 # C1: exact dedup
@@ -944,25 +943,14 @@ def connected_components(
         # small_graph_edges=0 to skip the probe job entirely.
         probe = raw.limit(small_graph_edges // 2 + 1).collect()
         if 2 * len(probe) <= small_graph_edges:
-            sess = edges.sparkSession
-            node_type = raw.schema["a"].dataType
+            node_type = raw.schema["a"].dataType.simpleString()
             labels_map = _cc_union_find(probe)
-            out_schema = StructType(
-                [
-                    StructField("node", node_type),
-                    StructField("label", node_type),
-                ]
-            )
             raw.unpersist()
-            # pandas in, not a row list: the plain-list createDataFrame
-            # path serializes through RDD conversion (~0.5 s even for
-            # hundreds of rows); the pandas path ships one Arrow batch
-            import pandas as pd
-
-            pdf = pd.DataFrame(
-                sorted(labels_map.items()), columns=["node", "label"]
+            return local_frame(
+                edges.sparkSession,
+                sorted(labels_map.items()),
+                f"node {node_type}, label {node_type}",
             )
-            return sess.createDataFrame(pdf, out_schema)
     both = raw.unionByName(
         raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).persist()

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.consume import local_frame
 from ..plans.iterative import iterate_fixed_point
 
 #: chunking geometry: 200-char windows every 150 chars (50-char overlap)
@@ -435,7 +436,7 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = edges_deg.select(F.col("src").alias("node")).distinct().persist()
     n = nodes.count()
     if n == 0:
-        return spark.createDataFrame([], "node string, pr_nano bigint")
+        return local_frame(spark, [], "node string, pr_nano bigint")
     d = PAGERANK_DAMPING
 
     def pr_round(ranks):

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.consume import local_frame
 
 TOP_TERMS = 3
 BM25_K1 = 1.2
@@ -1026,7 +1027,7 @@ def _bm25_topk_ranked(
         .alias("bm25_micro"),
     )
     # 12-row literal query map, built JVM-side (range + generator, a
-    # LocalTableScan — never applySchemaToPythonRDD; cf. _model_df)
+    # LocalTableScan — never applySchemaToPythonRDD; cf. local_frame)
     pairs = F.array(
         *[
             F.struct(F.lit(qid).alias("qid"), F.lit(t).alias("term"))
@@ -1077,8 +1078,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale cache, pinning it for the session — the
     storage-memory-squatter class `lsh_recall_report`'s eager drain
     already fixed); the returned frame is a local literal rebuild of
-    the drained rows (LocalTableScan, never
-    applySchemaToPythonRDD)."""
+    the drained rows, or `local_frame`'s `LocalTableScan <empty>` when
+    no query term occurs — no Python worker either way."""
     ranked, stats = _bm25_topk_ranked(spark, sf_dir)
     # bounded drain: ≤ BM25_DRAIN_CAP rows exist BY CONSTRUCTION (the
     # per-query WindowGroupLimit caps at K), so the limit is the
@@ -1091,8 +1092,8 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         stats.unpersist()
     if not rows:
-        return spark.createDataFrame(
-            [], "qid int, doc_id bigint, rank int, score_micro bigint"
+        return local_frame(
+            spark, [], "qid int, doc_id bigint, rank int, score_micro bigint"
         )
     # ONE SQL string, not per-row Column literals: assembling 40
     # structs through the Column API costs hundreds of py4j round
@@ -1424,9 +1425,7 @@ def q_retrieval_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         truth.unpersist()
         ann.unpersist()
-    from .similarity import _model_df
-
-    return _model_df(
+    return local_frame(
         spark,
         [
             (r["ranker"], r["n_queries"], r["total_hits"],

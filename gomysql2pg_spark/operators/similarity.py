@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.consume import drain_one_row
+from ..functions.consume import drain_one_row, local_frame
 from .dedup import dot_double
 
 TOP_K = 10
@@ -447,31 +447,6 @@ def _train_sample(emb: DataFrame) -> DataFrame:
     return emb.filter(F.expr(_train_sample_pred()))
 
 
-def _model_df(spark, rows, schema: str) -> DataFrame:
-    """Tiny driver-held model table as a LocalTableScan: the rows ride
-    through pandas + Arrow, so the JVM scans a driver-local batch
-    directly. `createDataFrame(<python list>)` instead compiles to
-    `applySchemaToPythonRDD` — a PYTHON worker task inside every
-    consuming query's broadcast build (~0.3 s each; measured as the
-    r14 PQ regression: the codebook feeds the encode, the distance
-    table, and PQ_M scoring joins, so the Python spin-up was paid
-    per stage per rep). Inlining literals instead would re-create the
-    M2 plan-size bomb at production model sizes (nlist 4096 × dim 768
-    ≈ 3M literals); the pandas batch stays O(model) bytes at any
-    size."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    # real DDL parse, not a comma split: a composite-typed model
-    # column (array<struct<...>>, map<k,v>, decimal(p,s)) carries
-    # commas inside its type and a naive split mis-derives the
-    # column list (r14 ADVICE — latent until the first such model)
-    names = StructType.fromDDL(schema).fieldNames()
-    return spark.createDataFrame(
-        pd.DataFrame(list(rows), columns=names), schema
-    )
-
-
 def _sub_sq_dist(a, b):
     """Exact-order squared L2 on (already-sliced) sub-vectors — the
     strict left fold shared with the clustering operators."""
@@ -505,7 +480,7 @@ def _pq_codebook(emb: DataFrame, cache_key=None) -> DataFrame:
     shape as encoding itself; the model stays (PQ_M × PQ_K) × subdim
     doubles on the driver."""
     rows = _train_pq_model(emb, cache_key=cache_key)
-    return _model_df(
+    return local_frame(
         emb.sparkSession, rows, "m int, cid int, ce array<double>"
     )
 
@@ -571,7 +546,7 @@ def _train_pq_model(
     ]
     train = _train_sample(emb)
     for _ in range(PQ_TRAIN_ITERS):
-        cb = _model_df(
+        cb = local_frame(
             spark,
             [(m, cid, ce) for (m, cid), ce in sorted(model.items())],
             "m int, cid int, ce array<double>",
@@ -1449,7 +1424,7 @@ def ivf_index_append(
         # re-encoding it would double the batch's rows
         return 0
     cent_rows = [(c, ce) for c, ce in model["cent"]]
-    cb = _model_df(
+    cb = local_frame(
         spark,
         [(m, cid, ce) for m, cid, ce in model["codebook"]],
         "m int, cid int, ce array<double>",
@@ -1784,7 +1759,7 @@ def ivf_index_retrain(
         new_cb_rows = cb_fut.result()
     if not new_cent:
         return out  # empty corpus: nothing to train, keep serving
-    new_cb = _model_df(
+    new_cb = local_frame(
         spark, new_cb_rows, "m int, cid int, ce array<double>"
     )
     codes = _pq_codes(
@@ -1847,12 +1822,12 @@ def query_index_tree(
             "index tree has no _MODEL.json sidecar — rebuild it"
         )
     cent_rows = [(c, ce) for c, ce in model["cent"]]
-    cb = _model_df(
+    cb = local_frame(
         spark,
         [(m, cid, ce) for m, cid, ce in model["codebook"]],
         "m int, cid int, ce array<double>",
     )
-    cent = _model_df(spark, cent_rows, "cell int, ce array<double>")
+    cent = local_frame(spark, cent_rows, "cell int, ce array<double>")
     codes = _read_index_codes(spark, fs, croot, sroot, name)
     dt = _adc_distance_table(q, cb)
     probes = _probe_cells(q, cent, nprobe)
@@ -1966,7 +1941,7 @@ def _assign_cells(
     if len(cent_rows) * dim <= budget:
         return df.withColumn("cell", _cell_expr(cent_rows, emb_col))
     spark = df.sparkSession
-    cent = _model_df(spark, cent_rows, "cell int, __ce array<double>")
+    cent = local_frame(spark, cent_rows, "cell int, __ce array<double>")
     # ONE persisted id frame per semantically-distinct input plan, not
     # per CALL: the frame depends only on (df, emb_col) — never on the
     # centroid model — so repeated invocations (bench reps, training
@@ -2120,10 +2095,10 @@ def q_similarity_ivfpq(
         # empty corpus (empty filter result / pruned-away partition):
         # degrade to zero neighbors with the normal output schema, the
         # same contract as every other operator on empty input
-        return spark.createDataFrame(
-            [], "qid bigint, nid bigint, adc_micro bigint, rank int"
+        return local_frame(
+            spark, [], "qid bigint, nid bigint, adc_micro bigint, rank int"
         )
-    cent = _model_df(spark, cent_rows, "cell int, ce array<double>")
+    cent = local_frame(spark, cent_rows, "cell int, ce array<double>")
     q = _queries_df(emb)
     dt = _adc_distance_table(q, cb)
     probes = _probe_cells(q, cent, nprobe)
@@ -2502,8 +2477,8 @@ def q_hard_negative_mining_ivf(
     )
     cent_rows = _coarse_model(sf_dir, emb)
     if not cent_rows:
-        return spark.createDataFrame(
-            [], "qid bigint, nid bigint, cos_sim double, rank int"
+        return local_frame(
+            spark, [], "qid bigint, nid bigint, cos_sim double, rank int"
         )
     assigned = _assign_cells(emb, cent_rows)
     q = assigned.filter(F.col("vec_id") % QUERY_MOD == 0).select(
@@ -2512,7 +2487,7 @@ def q_hard_negative_mining_ivf(
         F.col("label").alias("qlabel"),
         F.col("nrm").alias("qnrm"),
     )
-    cent = _model_df(spark, cent_rows, "cell int, ce array<double>")
+    cent = local_frame(spark, cent_rows, "cell int, ce array<double>")
     probes = _probe_cells(q, cent, nprobe)
     pq_ = probes.join(q, "qid")
     cand = assigned.join(
@@ -2714,7 +2689,8 @@ def q_bitext_margin_pairs_ivf(
     )
     cent_rows = _coarse_model(sf_dir, emb)
     if not cent_rows:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "qid bigint, nid bigint, cos_micro bigint,"
             " margin_micro bigint, rank int",
@@ -2732,7 +2708,7 @@ def q_bitext_margin_pairs_ivf(
         )
     )
     b_assigned = _assign_cells(side_b, cent_rows)
-    cent = _model_df(spark, cent_rows, "cell int, ce array<double>")
+    cent = local_frame(spark, cent_rows, "cell int, ce array<double>")
     probes = _probe_cells(q, cent, nprobe)
     pq_ = probes.join(q, "qid")
     cos = dot_double(F.col("qe"), F.col("embedding")) / (
@@ -2974,7 +2950,7 @@ def _coarse_distortion_micro(
     float sum. One corpus scan + one broadcast nlist-row join at any
     scale (the assignment is `_assign_cells`' plan)."""
     spark = emb.sparkSession
-    cent = _model_df(spark, cent_rows, "cell int, __ce array<double>")
+    cent = local_frame(spark, cent_rows, "cell int, __ce array<double>")
     assigned = _assign_cells(emb, cent_rows)
     d2 = _sub_sq_dist(F.col("embedding"), F.col("__ce"))
     r = (
@@ -3125,7 +3101,7 @@ def q_ann_retrain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not cent_rows:
             exact_f.result()
             exact.unpersist()
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         fs, croot, _sroot = _resolve_index_fs(root, None, None)
         name = _index_name(sf_dir)
 

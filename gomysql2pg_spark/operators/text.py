@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.consume import local_frame
 
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -955,16 +956,12 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_merge_frame(spark: SparkSession, merges: list) -> DataFrame:
-    schema = "it int, sym_a string, sym_b string, pair_n bigint"
-    if not merges:
-        return spark.createDataFrame([], schema)
-    # LocalTableScan via the shared pandas+Arrow literal builder —
-    # neither per-row Column structs (py4j round-trips; the measured
-    # bm25 2.2× regression class if K grows) nor
-    # createDataFrame(<python list>) (applySchemaToPythonRDD)
-    from .similarity import _model_df
-
-    return _model_df(spark, merges, schema)
+    # the shared driver-rows builder, not per-row Column structs
+    # (py4j round-trips; the measured bm25 2.2× regression class if K
+    # grows)
+    return local_frame(
+        spark, merges, "it int, sym_a string, sym_b string, pair_n bigint"
+    )
 
 
 # pair-count rows collected per mining round for the provably-safe
@@ -1531,7 +1528,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode+groupBy to (doc, word) counts and ONE join back on word.
     r18: when the mining probe ran driver-side, the recursion already
     HOLDS the fully-encoded vocabulary — it comes back as a
-    vocabulary-sized local frame (the `_model_df` LocalTableScan
+    vocabulary-sized local frame (the `local_frame` LocalTableScan
     shape) instead of being re-derived with a SECOND corpus
     explode+distinct+K-replace subtree, cutting the entry's corpus
     passes 3 → 2 (probe + doc-word aggregate; Catalyst pruned the old
@@ -1558,17 +1555,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c"))
     )
     if enc is not None:
-        from .similarity import _model_df
-
-        vschema = "w string, vlen bigint"
-        # an empty vocabulary (all-blank documents) takes no
-        # zero-row trip through the pandas+Arrow literal builder,
-        # like `_bpe_merge_frame`
-        venc = (
-            _model_df(spark, enc, vschema)
-            if enc
-            else spark.createDataFrame([], vschema)
-        )
+        venc = local_frame(spark, enc, "w string, vlen bigint")
     else:
         mrows = [
             {"it": i, "sym_a": a, "sym_b": b} for i, a, b, _ in merges
@@ -1705,11 +1692,7 @@ def q_bpe_fertility_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k int, n_word_tokens bigint, n_bpe_tokens bigint, "
         "bpe_tokens_per_word_milli bigint"
     )
-    if not rows:
-        return spark.createDataFrame([], schema)
-    from .similarity import _model_df
-
-    return _model_df(spark, rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _oracle_bpe_fertility_curve() -> str:

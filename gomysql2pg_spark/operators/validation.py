@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import list_tables, load_table
+from ..functions.consume import local_frame
 from ..functions.transforms import strip_nul
 from ..functions.typemap import ColumnMeta, map_column
 
@@ -22,8 +23,8 @@ def q_catalog_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     `fetchTableMap` semantics (`cmd/root.go:218-291`) over the parquet
     catalog, excluding `e*` (events/embeddings) like an `exclude:` list."""
     names = list_tables(sf_dir, exclude=["e*"])
-    return spark.createDataFrame(
-        [(n,) for n in names], "table_name string"
+    return local_frame(
+        spark, [(n,) for n in names], "table_name string"
     ).orderBy("table_name")
 
 
@@ -194,9 +195,8 @@ def q_typemap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for c in _MATRIX
     ]
-    return spark.createDataFrame(
-        rows, "col_name string, mysql_type string, spark_type string, pg_type string"
-    )
+    ddl = "col_name string, mysql_type string, spark_type string, pg_type string"
+    return local_frame(spark, rows, ddl)
 
 
 ORACLE_TYPEMAP_MATRIX = """

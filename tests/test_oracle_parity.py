@@ -3,6 +3,8 @@
 This is the registry's correctness gate: it covers every entry on each
 run, and `scripts/oracle_sweep.py` runs the same comparison at any scale."""
 
+import contextlib
+import io
 import os
 import sys
 
@@ -24,6 +26,12 @@ def _pairs():
 @pytest.mark.parametrize("name,fn,sql", _pairs(), ids=[p[0] for p in _pairs()])
 def test_query_matches_oracle(name, fn, sql, spark, sf_dir, duck):
     df = fn(spark, sf_dir)
+    # driver rows reach a plan only as a LocalTableScan: a Python-list
+    # frame would fork a Python worker per core for the session
+    plan = io.StringIO()
+    with contextlib.redirect_stdout(plan):
+        df.explain(mode="formatted")
+    assert "applySchemaToPythonRDD" not in plan.getvalue(), plan.getvalue()
     if sql is None:
         # rows-only check (non-SQL-expressible operator)
         assert df.count() >= 0

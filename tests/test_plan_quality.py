@@ -840,10 +840,10 @@ def test_model_tables_are_local_table_scans_not_python_rdds(
     build — measured ~0.3 s per stage per rep, and the PQ codebook
     feeds the encode, the distance table, and all scoring joins
     (the r14 `similarity_pq` 1.35 → 2.4 s regression). This pins the
-    `_model_df` pandas+Arrow path against that ever coming back."""
-    from gomysql2pg_spark.operators.similarity import _model_df
+    `local_frame` pandas+Arrow path against that ever coming back."""
+    from gomysql2pg_spark.functions.consume import local_frame
 
-    cb = _model_df(
+    cb = local_frame(
         spark, [(0, 1, [1.0, 2.0])], "m int, cid int, ce array<double>"
     )
     cb_plan = plan_of(cb)
@@ -857,17 +857,94 @@ def test_model_tables_are_local_table_scans_not_python_rdds(
         assert "ExistingRDD" not in plan, name
 
 
-def test_model_df_empty_rows_keeps_schema(spark):
-    """An empty model (empty corpus / pruned-away partition) must
-    yield an empty frame with the DECLARED schema — the same contract
-    the r13 review forced on `_cell_expr([])`."""
-    from gomysql2pg_spark.operators.similarity import _model_df
+def _collect_in_group(spark, df, group):
+    """(rows, Spark job ids) of one `df.collect()` run in a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = df.collect()
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return rows, list(jobs)
 
-    df = _model_df(spark, [], "m int, cid int, ce array<double>")
-    assert df.schema.simpleString() == (
-        "struct<m:int,cid:int,ce:array<double>>"
+
+def _assert_empty_jvm_frame(spark, df, schema, group):
+    """0 rows with the DECLARED schema, and no Python path: no
+    `Scan ExistingRDD ... applySchemaToPythonRDD` in the plan (draining
+    one forks `pyspark.daemon` plus a worker per core, resident for the
+    session) and no Spark job to drain it."""
+    assert df.schema.simpleString() == schema
+    plan = plan_of(df)
+    assert "ExistingRDD" not in plan, plan
+    assert "applySchemaToPythonRDD" not in plan, plan
+    rows, jobs = _collect_in_group(spark, df, group)
+    assert rows == []
+    assert jobs == [], jobs
+
+
+def test_local_frame_empty_rows_stay_on_the_jvm(spark):
+    """An empty driver-row table (empty corpus / pruned-away
+    partition) is `LocalTableScan <empty>` with the DECLARED schema —
+    the contract the r13 review forced on `_cell_expr([])`. The pandas
+    path cannot give it: `createDataFrame(pandas)` uses Arrow only for
+    a non-empty frame and otherwise takes the Python-list path."""
+    from gomysql2pg_spark.functions.consume import local_frame
+
+    # the job probe sees jobs at all
+    _, jobs = _collect_in_group(spark, spark.range(3), "local-frame-probe")
+    assert jobs, "statusTracker reported no job for a range collect"
+    df = local_frame(spark, [], "m int, cid int, ce array<double>")
+    assert "LocalTableScan <empty>" in plan_of(df, mode="simple")
+    _assert_empty_jvm_frame(
+        spark, df, "struct<m:int,cid:int,ce:array<double>>", "local-frame"
     )
-    assert df.count() == 0
+
+
+def test_bm25_topk_without_query_terms_stays_on_the_jvm(spark, tmp_path):
+    """A corpus holding none of the BM25 query terms (every
+    `curate_corpus` seed: its vocabulary is `w0…w1499`) ranks nothing;
+    the empty result must not reach a Python worker."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gomysql2pg_spark.operators.ranking import BM25_QUERIES, q_bm25_topk
+
+    texts = ["w1 w2 w3", "w2 w4", "w5 w1 w1"]
+    terms = {t for ts in BM25_QUERIES.values() for t in ts}
+    assert not terms & {w for t in texts for w in t.split()}
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), type=pa.int64()),
+                "text": texts,
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    _assert_empty_jvm_frame(
+        spark,
+        q_bm25_topk(spark, str(tmp_path)),
+        "struct<qid:int,doc_id:bigint,rank:int,score_micro:bigint>",
+        "bm25-empty",
+    )
+
+
+def test_connected_components_of_no_edges_stays_on_the_jvm(spark):
+    """An edgeless graph takes the union-find path with zero labels;
+    its empty result must not reach a Python worker."""
+    from gomysql2pg_spark.operators.dedup import connected_components
+
+    edges = spark.range(0).select(
+        F.col("id").alias("da"), F.col("id").alias("db")
+    )
+    _assert_empty_jvm_frame(
+        spark,
+        connected_components(edges),
+        "struct<node:bigint,label:bigint>",
+        "cc-empty",
+    )
 
 
 def test_epoch_shuffle_never_globally_sorts(spark, sf_dir, queries):
@@ -924,15 +1001,15 @@ def test_bucket_pairs_gate_precedes_collect_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning(band") == 1, plan
 
 
-def test_model_df_parses_composite_typed_ddl(spark):
+def test_local_frame_parses_composite_typed_ddl(spark):
     """Column names come from a real DDL parse: a comma-bearing
     composite type must not shift the column list (r14 ADVICE —
     the old split-on-comma derived ['m', 'cells', 'decimal(4'])."""
-    from gomysql2pg_spark.operators.similarity import _model_df
+    from gomysql2pg_spark.functions.consume import local_frame
 
     from decimal import Decimal
 
-    df = _model_df(
+    df = local_frame(
         spark,
         [(1, [2, 3], Decimal("1.50"))],
         "m int, cells array<int>, score decimal(4,2)",
@@ -1012,6 +1089,31 @@ _PERSIST_PIN_ALLOWLIST = {
         "materialization or rows could be dropped/duplicated"
     ),
 }
+
+
+def test_driver_rows_become_frames_in_one_place():
+    """One builder turns driver rows into a frame:
+    `functions.consume.local_frame`, which never needs a Python
+    worker. Any other `createDataFrame` call in the package is a way
+    back to `applySchemaToPythonRDD` (a Python-list or empty input),
+    so no other module may make one."""
+    import ast
+    import pathlib
+
+    import gomysql2pg_spark
+
+    root = pathlib.Path(gomysql2pg_spark.__file__).parent
+    calls = []
+    for py in sorted(root.rglob("*.py")):
+        rel = str(py.relative_to(root))
+        for node in ast.walk(ast.parse(py.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                calls.append((rel, node.lineno))
+    assert {rel for rel, _ in calls} == {"functions/consume.py"}, calls
 
 
 def test_persist_release_discipline():

@@ -262,6 +262,7 @@ def test_ivf_index_append_equals_frozen_rebuild(spark, sf_dir, tmp_path):
     re-encode of (base corpus + batch) under that same model produces
     — row-for-row, including the coarse cell."""
     import gomysql2pg_spark.operators.similarity as SIM
+    from gomysql2pg_spark.functions.consume import local_frame
     from pyspark.sql import functions as F
 
     root = str(tmp_path / "ann")
@@ -295,7 +296,7 @@ def test_ivf_index_append_equals_frozen_rebuild(spark, sf_dir, tmp_path):
     # frozen re-encode of base + batch from the stored model
     model = SIM._read_model_blob(fs, SIM._join(croot, name))
     cent_rows = [(c, ce) for c, ce in model["cent"]]
-    cb = SIM._model_df(
+    cb = local_frame(
         spark,
         [tuple(r) for r in model["codebook"]],
         "m int, cid int, ce array<double>",
