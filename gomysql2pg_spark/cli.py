@@ -428,7 +428,7 @@ def cmd_only_data(spark, cfg, tables, source, sink) -> int:
     the reference's per-table failure accounting, the invalidTableData
     side channel when errorsDir is set (`root.go:450-470`), and the
     summary."""
-    from .functions.transforms import nul_predicate, strip_nul
+    from .functions.transforms import nul_predicate, strip_nul_columns
     from .migrate import Migrator
 
     def _string_cols(df):
@@ -445,10 +445,7 @@ def cmd_only_data(spark, cfg, tables, source, sink) -> int:
         # writing (`root.go:441-470` — PG text rejects NUL). NOTE: a
         # stripped row therefore hashes differently from its source in
         # compareDb — by design; the side channel below records it
-        out = df
-        for c in _string_cols(df):
-            out = out.withColumn(c, strip_nul(c))
-        return out
+        return strip_nul_columns(df, _string_cols(df))
 
     def error_predicate(df):
         return nul_predicate(df, {c: "text" for c in _string_cols(df)})

@@ -149,6 +149,21 @@ class MigrationReport:
         }
 
 
+def _empty_json_output(spark: SparkSession, path: str) -> None:
+    """Replace `path` with what an empty Spark JSON write leaves (an
+    empty part file and an empty `_SUCCESS` marker), through Hadoop's
+    FileSystem for the path, the layer Spark's writers use: a few py4j
+    calls and no Spark job. A reader without a schema still infers one
+    from the empty part file."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs.delete(hpath, True)
+    fs.mkdirs(hpath)
+    for name in ("part-00000.json", "_SUCCESS"):
+        fs.create(jvm.org.apache.hadoop.fs.Path(hpath, name)).close()
+
+
 class Migrator:
     """Bounded-parallel per-table pipeline driver.
 
@@ -233,20 +248,38 @@ class Migrator:
         above 0 does a filtered scan run (the predicate pushes down to
         the source, so at scale it reads only matching row groups), and
         the count returned is the one that write observed. A clean
-        table gets an empty directory from an empty relation, without
+        table's directory is replaced through Hadoop's FileSystem by
+        what an empty Spark write leaves, without a Spark job or
         touching the source."""
         path = f"{self.config.errors_dir}/invalidTableData/{table}"
         if not flagged:
-            df.where(F.lit(False)).write.mode("overwrite").json(path)
+            _empty_json_output(self.spark, path)
             return 0
         obs = Observation()
         (
             df.filter(self.error_predicate(df))
-            .observe(obs, F.count(F.lit(1)).alias("rows"))
+            .observe(obs, F.expr("count(1) AS rows"))
             .write.mode("overwrite")
             .json(path)
         )
         return int(obs.get["rows"])
+
+    def _side_channel(self) -> bool:
+        return bool(self.error_predicate and self.config.errors_dir)
+
+    def _pump_frame(self, df: DataFrame) -> tuple[DataFrame, Observation]:
+        """The frame the sink consumes, and its Observation. One
+        Observation on the source piggybacks on the sink's action: the
+        row count (transform_fn maps cells, so it is exactly what the
+        sink consumed) and, with the side channel on, the number of
+        offending rows — one source scan for a clean table."""
+        metrics = [F.expr("count(1) AS rows")]
+        if self._side_channel():
+            metrics.append(
+                F.count_if(self.error_predicate(df)).alias("flagged")
+            )
+        obs = Observation()
+        return self.transform_fn(df.observe(obs, *metrics)), obs
 
     def _run_table(self, table: str) -> TableResult:
         t0 = time.time()
@@ -254,21 +287,11 @@ class Migrator:
         if not self._start_table(table, "migrate"):
             res.error = "cancelled"
             return res
-        side_channel = bool(self.error_predicate and self.config.errors_dir)
+        side_channel = self._side_channel()
         try:
             df: DataFrame = self.source_fn(table)
-            # one Observation on the source piggybacks on the sink's
-            # action: the row count (transform_fn maps cells, so it is
-            # exactly what the sink consumed) and, with the side
-            # channel on, the number of offending rows — one source
-            # scan for a clean table.
-            metrics = [F.count(F.lit(1)).alias("rows")]
-            if side_channel:
-                metrics.append(
-                    F.count_if(self.error_predicate(df)).alias("flagged")
-                )
-            obs = Observation()
-            self.sink_fn(self.transform_fn(df.observe(obs, *metrics)), table)
+            out, obs = self._pump_frame(df)
+            self.sink_fn(out, table)
             res.rows = int(obs.get["rows"])
             if side_channel:
                 res.error_rows = self._write_error_rows(

@@ -134,8 +134,8 @@ def q_cell_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.length(strip_nul(F.col("text"))).alias("clean_len"),
-        (F.length("text") - F.length(strip_nul(F.col("text")))).alias(
+        F.length(strip_nul("text")).alias("clean_len"),
+        (F.length("text") - F.length(strip_nul("text"))).alias(
             "n_nul_bytes"
         ),
         F.lower(

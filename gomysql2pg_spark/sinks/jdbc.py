@@ -18,7 +18,10 @@ from __future__ import annotations
 import io
 from dataclasses import dataclass, field
 
+from pyspark.sql import Column
 from pyspark.sql import types as T
+
+from ..functions.sqltext import ident, lit
 
 
 @dataclass
@@ -130,12 +133,8 @@ def encode_copy_text(rows, null_marker: str = "\\N") -> str:
                 s = "\\x" + bytes(v).hex()
             else:
                 s = str(v)
-            s = (
-                s.replace("\\", "\\\\")
-                .replace("\t", "\\t")
-                .replace("\n", "\\n")
-                .replace("\r", "\\r")
-            )
+            for find, repl in COPY_ESCAPES:
+                s = s.replace(find, repl)
             cells.append(s)
         buf.write("\t".join(cells))
         buf.write("\n")
@@ -152,21 +151,45 @@ PLAIN_TYPES = (
 )
 
 
-def copy_text_line(cols, types=None) -> "object":
-    """One COPY-text wire LINE per row, as a pure Column expression —
-    the DISTRIBUTED twin of `encode_copy_text`: the JVM formats and
-    escapes inside whole-stage codegen, so `df.select(copy_text_line(
-    [...]).alias("value")).write.text(path)` produces a COPY dump with
-    no Python in the hot path and no driver-side collection. Same
-    grammar as the Python encoder (backslash first, then tab/LF/CR;
-    NULL → `\\N`), proven against a live PostgreSQL COPY decoder in
-    tests/test_postgres_live.py. Values are formatted by Spark's
-    string cast — longs/strings/dates identical to `str(v)`; doubles
-    use a shortest-round-trip form whose VALUE parses back exactly.
+#: The COPY NULL cell, the escapes in the order the encoder applies
+#: them (backslash first), and a bytea cell's wire prefix (bytea's `\x`
+#: with its backslash escaped).
+COPY_NULL = "\\N"
+COPY_ESCAPES = (
+    ("\\", "\\\\"), ("\t", "\\t"), ("\n", "\\n"), ("\r", "\\r"),
+)
+BYTEA_WIRE_PREFIX = "\\\\x"
 
-    `types` (optional, parallel to `cols`: the Spark DataTypes, e.g.
-    `[f.dataType for f in df.schema.fields]`) makes the encoder
-    type-aware without changing a wire byte:
+
+def _copy_cell_sql(field: T.StructField) -> str:
+    """The SQL text of one column's COPY cell (see `copy_text_line`)."""
+    c, dt = ident(field.name), field.dataType
+    if isinstance(dt, T.BinaryType):
+        s = f"concat({lit(BYTEA_WIRE_PREFIX)}, lower(hex({c})))"
+    else:
+        s = f"cast({c} as string)"
+        if not isinstance(dt, PLAIN_TYPES):
+            for find, repl in COPY_ESCAPES:
+                s = f"replace({s}, {lit(find)}, {lit(repl)})"
+    return f"coalesce({s}, {lit(COPY_NULL)})"
+
+
+def copy_text_line(fields: list[T.StructField]) -> Column:
+    """One COPY-text wire LINE per row of a frame whose schema holds
+    `fields` (its `StructField`s, e.g. `df.schema.fields`), as ONE
+    Column parsed from generated SQL text — the DISTRIBUTED twin of
+    `encode_copy_text`: the JVM formats and escapes inside whole-stage
+    codegen, so `df.select(copy_text_line(df.schema.fields).alias(
+    "value")).write.text(path)` produces a COPY dump with no Python in
+    the hot path and no driver-side collection. Same grammar as the
+    Python encoder (backslash first, then tab/LF/CR; NULL → `\\N`),
+    proven against a live PostgreSQL COPY decoder in
+    tests/test_postgres_live.py. Values are formatted by Spark's string
+    cast — longs/strings/dates identical to `str(v)`; doubles use a
+    shortest-round-trip form whose VALUE parses back exactly.
+
+    The field types pick each cell's form, without changing a wire
+    byte:
 
     - a `PLAIN_TYPES` column is its string cast, with no escape pass
       (its text never holds a character the grammar escapes);
@@ -176,40 +199,24 @@ def copy_text_line(cols, types=None) -> "object":
       instead of Spark's cast(binary as string), which would
       reinterpret raw bytes as UTF-8 and corrupt the staged data (the
       reference ships RawBytes through pq.CopyIn, which hex-encodes
-      the same way; `cmd/root.go:412-489`). A bare Column carries no
-      type, so without `types` binary data CANNOT be detected —
-      callers with blob columns must pass `types` (copy_dump_sink
-      derives it from the DataFrame schema automatically);
-    - any other column (string, nested, or no `types`) takes the full
-      escape pass.
+      the same way; `cmd/root.go:412-489`);
+    - any other column (string, nested) takes the full escape pass.
 
-    The row terminator comes from the text writer (one line per row),
-    matching `encode_copy_text`'s trailing newline."""
+    Column names are quoted identifiers (`functions.sqltext.ident`),
+    so a name holding a dot, backtick, quote or space encodes like any
+    other. The row terminator comes from the text writer (one line per
+    row), matching `encode_copy_text`'s trailing newline."""
     from pyspark.sql import functions as F
 
-    cells = []
-    for i, c in enumerate(cols):
-        dt = types[i] if types is not None else None
-        if isinstance(dt, T.BinaryType):
-            s = F.concat(F.lit("\\\\x"), F.lower(F.hex(c)))
-        else:
-            s = c.cast("string")
-            if not isinstance(dt, PLAIN_TYPES):
-                for find, repl in (
-                    ("\\", "\\\\"),
-                    ("\t", "\\t"),
-                    ("\n", "\\n"),
-                    ("\r", "\\r"),
-                ):
-                    s = F.replace(s, F.lit(find), F.lit(repl))
-        cells.append(F.coalesce(s, F.lit("\\N")))
-    return F.concat_ws("\t", *cells)
+    cells = ", ".join(_copy_cell_sql(f) for f in fields)
+    return F.expr(f"concat_ws({lit(chr(9))}, {cells})")
 
 
 def copy_dump_sink(out_dir: str, n_files: int | None = None):
     """`sink_fn` factory for `migrate.MigrationRunner`: stage each
     table as a COPY-text dump tree (one directory per table, one wire
-    file per partition, written by `copy_text_line` — all JVM-side).
+    file per partition, written by `copy_text_line` — all JVM-side;
+    building a table's encoder is one py4j call, whatever its width).
     The bulk-load path the reference's wire format implies: the dump
     loads with `psql -c '\\copy t FROM part-file'` per file (proven
     against live PostgreSQL in tests/test_postgres_live.py) or reads
@@ -222,15 +229,8 @@ def copy_dump_sink(out_dir: str, n_files: int | None = None):
     staging pattern big migrations actually use."""
     import os as _os
 
-    from pyspark.sql import functions as F
-
     def sink(df, table: str) -> None:
-        out = df.select(
-            copy_text_line(
-                [F.col(c) for c in df.columns],
-                types=[f.dataType for f in df.schema.fields],
-            ).alias("value")
-        )
+        out = df.select(copy_text_line(df.schema.fields).alias("value"))
         if n_files:
             out = out.repartition(n_files)
         out.write.mode("overwrite").text(_os.path.join(out_dir, table))

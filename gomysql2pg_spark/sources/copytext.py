@@ -46,12 +46,13 @@ returned value, so cloudpickle ships it BY VALUE — Python workers in a
 bare-PYTHONPATH deployment (e.g. the round driver's gate) never need
 this package importable to run the scan.
 
-`read_copy_text` decodes the same grammar with Column expressions over
-`spark.read.text`, so it plans and scans on the JVM and starts no
-Python process; it reads through Spark's Hadoop filesystem layer, the
-one `sinks.jdbc.copy_dump_sink` writes with. compareDb reads dumps
-back with it; the DataSource stays the reader for injected pyarrow
-FileSystems and the reference decoder its tests compare against.
+`read_copy_text` decodes the same grammar with SQL expressions,
+generated as text, over `spark.read.text`, so it plans and scans on
+the JVM and starts no Python process; it reads through Spark's Hadoop
+filesystem layer, the one `sinks.jdbc.copy_dump_sink` writes with.
+compareDb reads dumps back with it; the DataSource stays the reader
+for injected pyarrow FileSystems and the reference decoder its tests
+compare against.
 """
 
 from __future__ import annotations
@@ -60,12 +61,17 @@ import hashlib
 import os
 import tempfile
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..catalog import load_table
-from ..sinks.jdbc import PLAIN_TYPES
+from ..functions.sqltext import ident, lit
+from ..sinks.jdbc import (
+    BYTEA_WIRE_PREFIX,
+    COPY_ESCAPES,
+    COPY_NULL,
+    PLAIN_TYPES,
+)
 
 
 def make_copytext_source():
@@ -511,106 +517,121 @@ def register_copytext(spark: SparkSession) -> None:
     spark.dataSource.register(make_copytext_source())
 
 
-def _corrupt(msg) -> Column:
-    """A Column that fails the task with a COPY-text corruption error."""
-    if isinstance(msg, str):
-        msg = F.lit(msg)
-    return F.raise_error(F.concat(F.lit("corrupt COPY text: "), msg))
+# read_copy_text's SQL text pieces. A backslash may not appear inside
+# an f-string's braces, so every constant that holds one is named here.
+_BACKSLASH = lit("\\")
+_NULL_CELL = lit(COPY_NULL)
+#: the escape after a backslash ('' when the backslash ends the cell)
+_ESCAPE_RE = lit(r"(?s)\\(.?)")
+#: an escaped backslash, as a `split` regex
+_ESCAPED_BACKSLASH_RE = lit(r"\\\\")
+_UNKNOWN_ESCAPE = lit("unknown escape \\")
 
 
-def _decode_cell_col(cell: Column) -> Column:
-    """`decode_cell` as a Column: `\\N` → NULL, then the four escapes.
+def _corrupt(msg: str) -> str:
+    """SQL text failing the task with a COPY-text corruption error;
+    `msg` is the SQL text of the message."""
+    return f"raise_error(concat({lit('corrupt COPY text: ')}, {msg}))"
+
+
+def _decode_cell_sql(cell: str) -> str:
+    """`decode_cell` as SQL text over the cell expression `cell`:
+    `\\N` → NULL, then the four escapes.
 
     No placeholder: the cell splits on the escaped backslash `\\\\`
     (left to right, so a backslash pairs with the one after it, as in
     the scalar decoder), `\\t`/`\\n`/`\\r` are replaced inside each
     piece, and the pieces re-join with a single backslash. A backslash
     left in a piece is an unknown escape or a dangling backslash."""
-
-    def unescape(p: Column) -> Column:
-        for find, repl in (("\\t", "\t"), ("\\n", "\n"), ("\\r", "\r")):
-            p = F.replace(p, F.lit(find), F.lit(repl))
-        return p
-
-    def checked(p: Column) -> Column:
-        p = unescape(p)
-        esc = F.regexp_extract(p, r"(?s)\\(.?)", 1)
-        return (
-            F.when(~p.contains("\\"), p)
-            .when(esc == "", _corrupt("dangling backslash"))
-            .otherwise(_corrupt(F.concat(F.lit("unknown escape \\"), esc)))
-        )
-
+    p = "p"
+    for char, escape in COPY_ESCAPES[1:]:
+        p = f"replace({p}, {lit(escape)}, {lit(char)})"
+    esc = f"regexp_extract({p}, {_ESCAPE_RE}, 1)"
+    unknown = f"concat({_UNKNOWN_ESCAPE}, {esc})"
+    checked = (
+        f"CASE WHEN NOT contains({p}, {_BACKSLASH}) THEN {p}"
+        f" WHEN {esc} = '' THEN {_corrupt(lit('dangling backslash'))}"
+        f" ELSE {_corrupt(unknown)} END"
+    )
+    pieces = f"split({cell}, {_ESCAPED_BACKSLASH_RE}, -1)"
     return (
-        F.when(cell == "\\N", F.lit(None))
-        .when(~cell.contains("\\"), cell)
-        .otherwise(F.array_join(
-            F.transform(F.split(cell, r"\\\\", -1), checked), "\\"
-        ))
+        f"CASE WHEN {cell} = {_NULL_CELL} THEN NULL"
+        f" WHEN NOT contains({cell}, {_BACKSLASH}) THEN {cell}"
+        f" ELSE array_join(transform({pieces}, p -> {checked}),"
+        f" {_BACKSLASH}) END"
     )
 
 
-def _cell_col(cell: Column, field: T.StructField) -> Column:
+def _cell_sql(cell: str, field: T.StructField) -> str:
     """The first decode step of one wire cell. A `PLAIN_TYPES` or
     binary cell only maps `\\N` to NULL: the encoder never escapes
-    anything in it, so a backslash there is left for `_cast_cell_col`
-    to reject. Any other cell takes the full `_decode_cell_col`."""
+    anything in it, so a backslash there is left for `_cast_cell_sql`
+    to reject. Any other cell takes the full `_decode_cell_sql`."""
     if isinstance(field.dataType, PLAIN_TYPES + (T.BinaryType,)):
-        return F.when(cell != "\\N", cell)
-    return _decode_cell_col(cell)
+        return f"CASE WHEN {cell} != {_NULL_CELL} THEN {cell} END"
+    return _decode_cell_sql(cell)
 
 
-def _cast_cell_col(s: Column, field: T.StructField) -> Column:
-    """The cell from `_cell_col` cast to `field`'s type; malformed
-    input raises (`caster_for` in the Python reader accepts the same
-    forms, except that its scalar casters strip whitespace)."""
+def _cast_cell_sql(s: str, field: T.StructField) -> str:
+    """The cell from `_cell_sql` (the SQL text `s`) cast to `field`'s
+    type; malformed input raises (`caster_for` in the Python reader
+    accepts the same forms, except that its scalar casters strip
+    whitespace)."""
     dt, name = field.dataType, field.name
+    in_column = lit(f" in column {name}")
     if isinstance(dt, T.StringType):
         return s
     if isinstance(dt, T.BinaryType):
         # the wire form is bytea's `\x` + hex with its backslash
         # escaped (`\\x`), checked without decoding
-        digits = s.substr(F.lit(4), F.length(s))
-        raw = F.unhex(digits)  # NULL for a non-hex digit
+        digits = f"substr({s}, 4, length({s}))"
+        raw = f"unhex({digits})"  # NULL for a non-hex digit
+        no_prefix = lit("bytea cell without \\x prefix in column " + name)
         return (
-            F.when(s.isNull(), F.lit(None))
-            .when(~s.startswith("\\\\x"), _corrupt(
-                f"bytea cell without \\x prefix in column {name}"))
-            .when((F.length(digits) % 2 == 1) | raw.isNull(),
-                  _corrupt(f"invalid bytea hex in column {name}"))
-            .otherwise(raw)
+            f"CASE WHEN {s} IS NULL THEN NULL"
+            f" WHEN NOT startswith({s}, {lit(BYTEA_WIRE_PREFIX)})"
+            f" THEN {_corrupt(no_prefix)}"
+            f" WHEN length({digits}) % 2 = 1 OR {raw} IS NULL"
+            f" THEN {_corrupt(lit(f'invalid bytea hex in column {name}'))}"
+            f" ELSE {raw} END"
         )
     if isinstance(dt, T.BooleanType):
-        low = F.lower(s)
+        invalid = f"concat({lit('invalid boolean ')}, {s}, {in_column})"
         return (
-            F.when(s.isNull(), F.lit(None))
-            .when(low.isin("t", "true", "1"), F.lit(True))
-            .when(low.isin("f", "false", "0"), F.lit(False))
-            .otherwise(_corrupt(F.concat(
-                F.lit("invalid boolean "), s, F.lit(f" in column {name}")
-            )))
+            f"CASE WHEN {s} IS NULL THEN NULL"
+            f" WHEN lower({s}) IN ('t', 'true', '1') THEN true"
+            f" WHEN lower({s}) IN ('f', 'false', '0') THEN false"
+            f" ELSE {_corrupt(invalid)} END"
         )
     # try_cast + an explicit raise: strict whatever the session's ANSI
     # setting (a non-ANSI cast would turn a corrupt cell into NULL). A
     # type with no cast from string (array, map, struct) fails analysis.
-    v = s.try_cast(dt)
-    return F.when(s.isNotNull() & v.isNull(), _corrupt(F.concat(
-        F.lit(f"invalid {dt.simpleString()} "), s,
-        F.lit(f" in column {name}"),
-    ))).otherwise(v)
+    v = f"try_cast({s} AS {dt.simpleString()})"
+    invalid = (
+        f"concat({lit(f'invalid {dt.simpleString()} ')}, {s}, {in_column})"
+    )
+    return (
+        f"CASE WHEN {s} IS NOT NULL AND {v} IS NULL"
+        f" THEN {_corrupt(invalid)} ELSE {v} END"
+    )
 
 
 def read_copy_text(
     spark: SparkSession, path: str, schema: T.StructType
 ) -> DataFrame:
     """Read a COPY-text dump (a file or a directory of part files) as
-    a DataFrame of `schema`, entirely on the JVM — the Column-expression
-    inverse of `sinks.jdbc.copy_text_line`, with the grammar of the
-    `copytext` Python source: only LF ends a row, cells split on TAB,
-    `\\N` is NULL, unknown escapes, dangling backslashes, wrong cell
-    counts and malformed typed cells fail the task. Files go through
-    Spark's Hadoop filesystem layer, the one `copy_dump_sink` writes
-    with, so every dump the sink can write reads back.
+    a DataFrame of `schema`, entirely on the JVM — the inverse of
+    `sinks.jdbc.copy_text_line`, with the grammar of the `copytext`
+    Python source: only LF ends a row, cells split on TAB, `\\N` is
+    NULL, unknown escapes, dangling backslashes, wrong cell counts and
+    malformed typed cells fail the task. Files go through Spark's
+    Hadoop filesystem layer, the one `copy_dump_sink` writes with, so
+    every dump the sink can write reads back.
+
+    Each of the three projections (cell split and count check, escape
+    decode, typed cast) is generated as SQL text and parsed by the
+    JVM, so building the reader costs a few py4j calls per column;
+    column names are quoted identifiers (`functions.sqltext.ident`).
 
     Typed like the encoder: a `PLAIN_TYPES` cell is never unescaped —
     only `\\N` → NULL, then the strict cast — so an escape in a number,
@@ -620,23 +641,25 @@ def read_copy_text(
     full escape decode, a higher-order function that runs outside
     whole-stage codegen."""
     n = len(schema.fields)
-    cells = F.split(F.col("value"), "\t", -1)
-    checked = F.when(F.size(cells) == n, cells).otherwise(_corrupt(
-        F.concat(F.size(cells).cast("string"),
-                 F.lit(f" cells, schema has {n}"))
-    ))
+    cells = f"split(value, {lit(chr(9))}, -1)"
+    count = lit(f" cells, schema has {n}")
+    checked = (
+        f"CASE WHEN size({cells}) = {n} THEN {cells}"
+        f" ELSE {_corrupt(f'concat(cast(size({cells}) as string), {count})')}"
+        f" END AS cells"
+    )
     # one projection per step: a casting expression reads its decoded
     # cell several times, and a separate projection computes it once
     decoded = (
         spark.read.option("lineSep", "\n").text(path)
-        .select(checked.alias("cells"))
-        .select(*[
-            _cell_col(F.col("cells")[i], f).alias(f.name)
+        .selectExpr(checked)
+        .selectExpr(*[
+            f"{_cell_sql(f'cells[{i}]', f)} AS {ident(f.name)}"
             for i, f in enumerate(schema.fields)
         ])
     )
-    return decoded.select(*[
-        _cast_cell_col(F.col(f.name), f).alias(f.name)
+    return decoded.selectExpr(*[
+        f"{_cast_cell_sql(ident(f.name), f)} AS {ident(f.name)}"
         for f in schema.fields
     ])
 
@@ -657,8 +680,8 @@ _RT_SCHEMA = (
 
 def q_copytext_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → distributed COPY-text encode (`sinks.jdbc.
-    copy_text_line`, pure Column expressions — the JVM writes the wire
-    bytes, nothing is collected) → `.write.text` → read back through
+    copy_text_line`, one generated SQL expression — the JVM writes the
+    wire bytes, nothing is collected) → `.write.text` → read back through
     the `copytext` Python data source. The result must hash-equal a
     plain SELECT of the same columns: an encode/decode disagreement
     anywhere in the escape grammar, numeric/date formatting, or file
@@ -686,17 +709,16 @@ def q_copytext_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with a half-written tree, and a foreign file cannot fake
     # completion
     if not os.path.isfile(os.path.join(out, "_SUCCESS")):
-        orders = load_table(spark, sf_dir, "orders")
-        cols = [
-            # the fixture's o_orderdate is a timestamp; the entry
-            # exercises the DATE wire form ('YYYY-MM-DD'), so cast at
-            # the source (mirrored in the oracle)
-            F.col(c).cast("date") if c == "o_orderdate" else F.col(c)
+        # the fixture's o_orderdate is a timestamp; the entry exercises
+        # the DATE wire form ('YYYY-MM-DD'), so cast at the source
+        # (mirrored in the oracle)
+        orders = load_table(spark, sf_dir, "orders").selectExpr(*[
+            f"cast({c} as date) AS {c}" if c == "o_orderdate" else c
             for c in _RT_COLS
-        ]
+        ])
         tmp = f"{out}.tmp-{os.getpid()}"
         (
-            orders.select(copy_text_line(cols).alias("value"))
+            orders.select(copy_text_line(orders.schema.fields).alias("value"))
             .write.mode("overwrite")
             .text(tmp)
         )

@@ -14,7 +14,10 @@ immune to ANSI-mode long-overflow errors (Spark 4 default).
 count and hash of each side are Observation metrics over a union of the
 two scans, so no Exchange is planned and both scans are tasks of the
 result stage, whose accumulator updates Spark applies exactly once per
-partition.
+partition. The hash and the column alignment are generated as SQL
+text over quoted identifiers (`functions.sqltext.ident`): a few py4j
+calls per table, whatever its width, and a column name may hold a dot
+or a backtick.
 """
 
 from __future__ import annotations
@@ -23,6 +26,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from .functions.sqltext import ident
 
 
 @dataclass(frozen=True)
@@ -47,10 +52,10 @@ class TableCompareResult:
         )
 
 
-def _hash_sum(cols: list[str]) -> "F.Column":
-    return F.sum(
-        F.xxhash64(*[F.col(c) for c in cols]).cast("decimal(38,0)")
-    )
+def _hash_sum(cols: list[str]) -> str:
+    """SQL text of the content hash over the named columns."""
+    names = ", ".join(ident(c) for c in cols)
+    return f"sum(cast(xxhash64({names}) as decimal(38,0)))"
 
 
 def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
@@ -58,7 +63,7 @@ def content_hash(df: DataFrame, cols: list[str] | None = None) -> int:
     in exact decimal. Null-safe (xxhash64 hashes nulls
     deterministically)."""
     cols = cols or df.columns
-    row = df.agg(_hash_sum(cols).alias("h")).collect()[0]
+    row = df.agg(F.expr(f"{_hash_sum(cols)} AS h")).collect()[0]
     return int(row["h"]) if row["h"] is not None else 0
 
 
@@ -70,11 +75,11 @@ def _observed_union(
     scan of both sides as tasks of one stage, with no Exchange."""
 
     def observed(df: DataFrame) -> tuple[DataFrame, Observation]:
-        metrics = [F.count(F.lit(1)).alias("n")]
+        metrics = [F.expr("count(1) AS n")]
         if with_hash:
-            metrics.append(_hash_sum(df.columns).alias("h"))
+            metrics.append(F.expr(f"{_hash_sum(df.columns)} AS h"))
         obs = Observation()
-        return df.observe(obs, *metrics).select(F.lit(1).alias("_")), obs
+        return df.observe(obs, *metrics).selectExpr("1 AS `_`"), obs
 
     s, s_obs = observed(src)
     d, d_obs = observed(dst)
@@ -109,7 +114,7 @@ def compare_tables(
         if set(src.columns) == set(dst.columns) and (
             src.columns != dst.columns
         ):
-            dst = dst.select(*src.columns)
+            dst = dst.selectExpr(*[ident(c) for c in src.columns])
     both, s_obs, d_obs = _observed_union(src, dst, with_hash)
     both.write.format("noop").mode("overwrite").save()
     s, d = s_obs.get, d_obs.get

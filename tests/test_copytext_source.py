@@ -28,11 +28,7 @@ def _write_wire(spark, tmp_path, rows, n_parts=1):
     df = spark.createDataFrame(rows, SCHEMA).repartition(n_parts)
     out = str(tmp_path / "wire")
     (
-        df.select(
-            copy_text_line([F.col("id"), F.col("a"), F.col("b")]).alias(
-                "value"
-            )
-        )
+        df.select(copy_text_line(df.schema.fields).alias("value"))
         .write.mode("overwrite")
         .text(out)
     )
@@ -316,12 +312,7 @@ def test_binary_bytea_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(rows, sch)
     out = str(tmp_path / "bin")
     (
-        df.select(
-            copy_text_line(
-                [F.col(c) for c in df.columns],
-                types=[f.dataType for f in sch.fields],
-            ).alias("value")
-        )
+        df.select(copy_text_line(sch.fields).alias("value"))
         .write.mode("overwrite")
         .text(out)
     )
@@ -581,6 +572,15 @@ def _typed_hostile(spark):
     return spark.createDataFrame(rows, schema)
 
 
+def _wire_lines(path):
+    lines = []
+    for f in os.listdir(path):
+        if not f.startswith(("_", ".")):
+            with open(os.path.join(path, f), encoding="utf-8") as fh:
+                lines += fh.read().split("\n")
+    return sorted(lines)
+
+
 def test_read_copy_text_matches_python_source(spark, tmp_path):
     from gomysql2pg_spark.sinks.jdbc import copy_dump_sink
     from gomysql2pg_spark.sources.copytext import read_copy_text
@@ -597,6 +597,28 @@ def test_read_copy_text_matches_python_source(spark, tmp_path):
         return sorted(repr(tuple(r)) for r in df.collect())
 
     assert rows(jvm) == rows(py) == rows(src)
+
+    # the codec's SQL text means the same when the parser keeps
+    # backslashes in string literals: same wire bytes, same values, and
+    # the same corruption message
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "part-000.txt").write_text("1\ta\t\\x\n", encoding="utf-8")
+    bad_schema = spark.createDataFrame([], SCHEMA).schema
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        copy_dump_sink(str(tmp_path / "escaped"), n_files=3)(src, "t")
+        escaped = read_copy_text(
+            spark, str(tmp_path / "escaped" / "t"), src.schema
+        )
+        escaped_rows = rows(escaped)
+        corrupt = read_copy_text(spark, str(bad), bad_schema)
+        with pytest.raises(Exception, match=r"unknown escape \\x"):
+            corrupt.collect()
+    finally:
+        spark.conf.unset("spark.sql.parser.escapedStringLiterals")
+    assert _wire_lines(tmp_path / "escaped" / "t") == _wire_lines(path)
+    assert escaped_rows == rows(src)
 
 
 @pytest.mark.parametrize(

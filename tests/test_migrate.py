@@ -281,6 +281,7 @@ def test_clean_table_replaces_stale_side_channel(
     assert res.ok and res.error_rows == 0
     assert stale.is_dir() and (stale / "_SUCCESS").exists()
     assert spark.read.text(str(stale)).count() == 0
+    assert spark.read.json(str(stale)).count() == 0  # no schema given
 
 
 def test_single_scan_row_count(spark, sf_dir, out_dir):
