@@ -14,6 +14,13 @@ from dataclasses import dataclass, field
 
 from .functions.typemap import ColumnMeta, map_column
 
+
+def pg_ident(name: str) -> str:
+    """`name` as one quoted PostgreSQL identifier: double quotes, with
+    any embedded double quote doubled."""
+    return '"' + name.replace('"', '""') + '"'
+
+
 # ---------------------------------------------------------------------------
 # A10: CREATE TABLE (`tablemeta.go:48-154`)
 # ---------------------------------------------------------------------------
@@ -31,11 +38,13 @@ def create_table_sql(
     for c in sorted(cols, key=lambda c: c.ordinal_position):
         m = map_column(c, char_in_length, use_nvarchar2)
         null_sql = "" if m.nullable else " not null"
-        parts.append(f'"{m.name}" {m.pg_type}{null_sql}{m.default_sql}')
+        col = pg_ident(m.name)
+        parts.append(f"{col} {m.pg_type}{null_sql}{m.default_sql}")
     body = ", ".join(parts)
+    t = pg_ident(table.lower())
     return [
-        f'drop table if exists "{table.lower()}" cascade',
-        f'create table "{table.lower()}" ({body})',
+        f"drop table if exists {t} cascade",
+        f"create table {t} ({body})",
     ]
 
 
@@ -52,7 +61,8 @@ def sequence_sql(table: str, column: str, start: int) -> list[str]:
         f"drop sequence if exists {seq}",
         f"create sequence {seq} increment by 1 start {start}",
         (
-            f'alter table "{table.lower()}" alter column "{column.lower()}" '
+            f"alter table {pg_ident(table.lower())} "
+            f"alter column {pg_ident(column.lower())} "
             f"set default nextval('{seq}')"
         ),
     ]
@@ -82,19 +92,19 @@ def index_sql(
     have no direct PG-family equivalent and are emitted as plain btree
     (the reference special-cases them similarly); `DISTRIBUTE BY` hash
     for distributed targets (`tablemeta.go:233-241`)."""
-    t = idx.table.lower()
-    cols = ", ".join(f'"{c.lower()}"' for c in idx.columns)
+    t = pg_ident(idx.table.lower())
+    cols = ", ".join(pg_ident(c.lower()) for c in idx.columns)
     if idx.index_name.upper() == "PRIMARY":
-        ddl = f'alter table "{t}" add primary key ({cols})'
+        ddl = f"alter table {t} add primary key ({cols})"
         if distributed:
-            ddl = f'alter table "{t}" distribute by hash ({cols}); ' + ddl
+            ddl = f"alter table {t} distribute by hash ({cols}); " + ddl
         return ddl
     # unique index names must be globally unique on PG → uuid suffix,
     # same trick as the reference's uuid()+MD5(RAND()) naming
     sfx = suffix if suffix is not None else uuid.uuid4().hex[:8]
     name = f"{idx.index_name.lower()}_{sfx}"
     unique = "" if idx.non_unique else "unique "
-    return f'create {unique}index {name} on "{t}" ({cols})'
+    return f"create {unique}index {name} on {t} ({cols})"
 
 
 # ---------------------------------------------------------------------------
@@ -116,12 +126,12 @@ class ForeignKeyMeta:
 def foreign_key_sql(fk: ForeignKeyMeta) -> str:
     """`ALTER TABLE … ADD CONSTRAINT … FOREIGN KEY … REFERENCES … ON
     DELETE/UPDATE <rule>` (`tablemeta.go:278` output shape)."""
-    cols = ", ".join(f'"{c.lower()}"' for c in fk.columns)
-    rcols = ", ".join(f'"{c.lower()}"' for c in fk.ref_columns)
+    cols = ", ".join(pg_ident(c.lower()) for c in fk.columns)
+    rcols = ", ".join(pg_ident(c.lower()) for c in fk.ref_columns)
     return (
-        f'alter table "{fk.table.lower()}" add constraint '
+        f"alter table {pg_ident(fk.table.lower())} add constraint "
         f"{fk.constraint_name.lower()} foreign key ({cols}) "
-        f'references "{fk.ref_table.lower()}" ({rcols}) '
+        f"references {pg_ident(fk.ref_table.lower())} ({rcols}) "
         f"on delete {fk.delete_rule.lower()} on update {fk.update_rule.lower()}"
     )
 
@@ -177,7 +187,8 @@ def trigger_sql(trg: TriggerMeta) -> str:
     )
     return (
         f"create or replace trigger {trg.name.lower()} {trg.timing.lower()} "
-        f'{trg.event.lower()} on "{trg.table.lower()}" for each row as {body}'
+        f"{trg.event.lower()} on {pg_ident(trg.table.lower())} "
+        f"for each row as {body}"
     )
 
 
@@ -229,6 +240,6 @@ def trigger_sql_pg(trg: TriggerMeta) -> tuple[str, str]:
     trig = (
         f"create or replace trigger {trg.name.lower()} "
         f"{trg.timing.lower()} {trg.event.lower()} on "
-        f'"{trg.table.lower()}" for each row execute function {fn}()'
+        f"{pg_ident(trg.table.lower())} for each row execute function {fn}()"
     )
     return func, trig

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import fixture_stat, load_table
 from ..functions.consume import drain_one_row, local_frame
+from ..functions.tokens import norm_text, tokenize
 
 # ---------------------------------------------------------------------------
 # C1: exact dedup
@@ -74,21 +75,6 @@ FROM documents GROUP BY 1
 # ---------------------------------------------------------------------------
 
 
-def tokenize(text_col):
-    """The shared whitespace tokenizer (lowercase, trimmed)."""
-    return F.split(F.lower(F.trim(text_col)), r"\s+")
-
-
-def norm_text(text_col):
-    """The shared whitespace-collapsed normal form (lowercase,
-    trimmed, runs of whitespace → one space). ONE definition: four
-    operators hash or equi-join this expression and their DuckDB
-    oracles replay it verbatim, so hand-copies that drift would break
-    cross-engine exactness only for the copies that weren't updated
-    (r13 review finding)."""
-    return F.regexp_replace(F.lower(F.trim(text_col)), r"\s+", " ")
-
-
 def shingles_from_tokens(toks, n: int = 3):
     """Distinct word n-gram shingles from a TOKEN-ARRAY column.
     Built-in expressions only (transform over sequence + element_at) —
@@ -116,13 +102,6 @@ def shingles_from_tokens(toks, n: int = 3):
         ),
     )
     return F.array_distinct(gram)
-
-
-def word_shingles(text_col, n: int = 3):
-    """Distinct word n-gram shingles of a TEXT column (compatibility
-    wrapper; prefer the two-step tokenize → shingles_from_tokens via a
-    projection boundary in hot paths — see shingles_from_tokens)."""
-    return shingles_from_tokens(tokenize(text_col), n)
 
 
 def _shingle_df(docs: DataFrame) -> DataFrame:
@@ -253,165 +232,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "na",
             "nb",
             (F.col("na") <= F.col("nb")).alias("a_is_smaller"),
-        )
-    )
-
-
-def prefix_pair_intersections(
-    docs: DataFrame, t_milli: int = JACCARD_MILLI
-) -> DataFrame:
-    """(da, db, i, na, nb) with PREFIX-FILTERED candidate generation
-    (AllPairs / PPJoin family — Bayardo et al., WWW'07; public
-    algorithm): under any GLOBAL total order on shingles, two sets with
-    Jaccard ≥ t must share an element among each set's first
-    n − ⌈t·n⌉ + 1 shingles, because J ≥ t forces overlap i ≥ ⌈t·n⌉ on
-    both sides and an overlap that large cannot hide entirely in a
-    suffix of size ⌈t·n⌉ − 1. So the inverted index holds only PREFIX
-    entries (rarest-first order, so prefixes land in the emptiest
-    buckets), the candidate join cost drops from Σ df(s)² to
-    Σ df_prefix(s)² (≈¼ at t=0.5, far more at higher thresholds or on
-    low-duplication corpora), and the exact intersection is then
-    counted ONLY for candidate pairs by re-joining their full shingle
-    sets. Returns exactly `_pair_intersections`' rows for every pair
-    at or above the threshold (pairs BELOW t may be absent — callers
-    filter on t anyway)."""
-    sh_all = _shingle_df(docs)
-    dfreq = (
-        sh_all.groupBy("s")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= MAX_SHINGLE_DF)
-    )
-    # capped shingles carrying their global df; feeds the ranking, the
-    # sizes, and BOTH sides of the verify join — materialize once.
-    # INTENTIONALLY left cached for the session (the returned frame is
-    # lazy, so unpersisting here would evict before the caller's first
-    # action) — same policy as `_pair_intersections`' cache; Spark's
-    # LRU evicts under pressure, and a session running both verifiers
-    # holds at most the two shingle caches
-    sh = sh_all.join(dfreq, "s").persist()
-    sh.count()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    # rarest-first total order (df, s); per-doc rank windows are
-    # doc-sized (bounded by document length at any corpus scale)
-    w = Window.partitionBy("doc_id").orderBy("df", "s")
-    ranked = (
-        sh.join(sizes, "doc_id")
-        .withColumn("r", F.row_number().over(w))
-        # integer-exact ⌈t·n⌉ = (t_milli·n + 999) div 1000
-        .withColumn(
-            "p_len",
-            F.expr(f"n - (({t_milli} * n + 999) div 1000) + 1"),
-        )
-    )
-    # persist + materialize the prefix projection: it feeds BOTH sides
-    # of the candidate self-join, and without the cache each side
-    # re-runs the sizes join + per-doc rank window (measured ~2.3 s per
-    # extra pass at sf0.1 — the plan showed two Window nodes). Same
-    # session-cache policy as `sh` above.
-    prefix = (
-        ranked.filter(F.col("r") <= F.col("p_len"))
-        .select("doc_id", "s", "n")
-        .persist()
-    )
-    prefix.count()
-    pa, pb = prefix.alias("pa"), prefix.alias("pb")
-    cand = (
-        pa.join(
-            pb,
-            (F.col("pa.s") == F.col("pb.s"))
-            & (F.col("pa.doc_id") < F.col("pb.doc_id"))
-            # length filter (same family of bounds): J ≥ t forces
-            # i ≥ t·max(na,nb) and i ≤ min(na,nb), so size-incompatible
-            # pairs (t·max > min) can be dropped inside the bucket join
-            # before they ever reach verification
-            & (F.col("pa.n") * 1000 >= F.lit(t_milli) * F.col("pb.n"))
-            & (F.col("pb.n") * 1000 >= F.lit(t_milli) * F.col("pa.n")),
-        )
-        .select(
-            F.col("pa.doc_id").alias("da"),
-            F.col("pb.doc_id").alias("db"),
-        )
-        .distinct()
-    )
-    # exact verification: ONE row per candidate — each doc's distinct
-    # shingle set travels as a sorted array and the intersection is a
-    # single JVM array_intersect per pair. This keeps verify cost at
-    # Σ_cand (na + nb) inside codegen, instead of exploding candidates
-    # back into (pair, shingle) rows and re-shuffling them (measured
-    # minutes → seconds on the dup-dense 10× corpus, where candidates
-    # are numerous and large)
-    arrs = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("s")).alias("arr"),
-        F.count("*").alias("n"),
-    )
-    aa = arrs.select(
-        F.col("doc_id").alias("da"),
-        F.col("arr").alias("arr_a"),
-        F.col("n").alias("na"),
-    )
-    ab = arrs.select(
-        F.col("doc_id").alias("db"),
-        F.col("arr").alias("arr_b"),
-        F.col("n").alias("nb"),
-    )
-    return (
-        cand.join(aa, "da")
-        .join(ab, "db")
-        .select(
-            "da",
-            "db",
-            F.size(F.array_intersect("arr_a", "arr_b"))
-            .cast("long")
-            .alias("i"),
-            "na",
-            "nb",
-        )
-    )
-
-
-def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-filtered exact Jaccard near-dup pairs — row-identical to
-    `dedup_jaccard` (it shares that oracle) but with the AllPairs
-    candidate reduction: only each document's rarest n − ⌈t·n⌉ + 1
-    shingles enter the inverted index, and intersections are verified
-    only for surviving candidates. `tests/test_ann_quality.py` pins
-    both the row-equality and the candidate-count reduction (≥2× fewer
-    bucket pairs at t=0.5).
-
-    Regime tradeoff — MEASURED, r10, and narrower than the AllPairs
-    paper's single-node setting suggests: candidate verification here
-    ships each candidate's full shingle ARRAY through two joins
-    (Σ_cand (na+nb) payload) and intersects per pair, where the full
-    index computes intersections by merely COUNTING co-bucket rows
-    (O(1) per row, no arrays). So the prefix filter pays a per-
-    candidate cost ~avg-set-size× higher, and its candidate reduction
-    must exceed that factor to win. On the 10× scale-smoke corpora it
-    never does: dup-dense 195s vs full's 50s; dup-sparse word-suffix
-    replication 16s vs 7s; and in the threshold sweep the prefix cost
-    falls 15.1s → 6.7s from t=0.5 → 0.9 (the candidate collapse is
-    real) while the threshold-independent full join sits at ~3.5s.
-    Its winning regime is high-t + boilerplate-heavy corpora where
-    Σ df(s)² co-bucket rows dwarf corpus size while prefixes (the
-    rarest n − ⌈t·n⌉ + 1 entries) dodge the boilerplate buckets —
-    a regime the fixture family doesn't reach (a synthetic template
-    corpus that tried flipped short docs into spurious near-dups;
-    see scripts/scale_smoke.py). Both variants produce identical
-    rows; prefer `dedup_jaccard` unless profiling shows the co-bucket
-    count-join IS the bottleneck."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        prefix_pair_intersections(docs)
-        .filter(
-            F.col("i") * 1000
-            >= F.lit(JACCARD_MILLI) * (F.col("na") + F.col("nb") - F.col("i"))
-        )
-        .select(
-            "da",
-            "db",
-            "i",
-            "na",
-            "nb",
-            (F.col("i") * 1000).cast("long").alias("i_milli_num"),
         )
     )
 
@@ -1686,9 +1506,8 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: explode chunks with position → one groupBy(h) for df over
     the DISTINCT (doc, h) pairs → equi-join back → one groupBy(doc)
     whose collect_list is DOCUMENT-sized (bounded by document length
-    at any corpus scale, like the per-doc rank windows of the AllPairs
-    prefix filter — never corpus-sized; the array_sort on (ci, …) is
-    deterministic because chunk index is unique per doc). Two
+    at any corpus scale — never corpus-sized; the array_sort on
+    (ci, …) is deterministic because chunk index is unique per doc). Two
     shuffles (h, doc_id), no all-pairs product; chunk hashes are
     near-unique so no df cap is needed on the join (a boilerplate
     chunk's df is exactly the signal)."""
@@ -2588,7 +2407,6 @@ QUERIES = {
     "decontamination_ngram_join": q_decontamination_ngram_join,
     "dedup_exact_norm": q_dedup_exact_norm,
     "dedup_jaccard": q_dedup_jaccard,
-    "dedup_jaccard_prefix": q_dedup_jaccard_prefix,
     "dedup_containment": q_dedup_containment,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "dedup_minhash_lsh_verified": q_dedup_minhash_lsh_verified,
@@ -2619,9 +2437,6 @@ ORACLES = {
     "decontamination_ngram_join": ORACLE_DECONTAMINATION_JOIN,
     "dedup_exact_norm": ORACLE_DEDUP_EXACT_NORM,
     "dedup_jaccard": ORACLE_DEDUP_JACCARD,
-    # identical result contract — the prefix filter is provably
-    # lossless at the threshold, so it shares the exact SQL oracle
-    "dedup_jaccard_prefix": ORACLE_DEDUP_JACCARD,
     "dedup_containment": ORACLE_DEDUP_CONTAINMENT,
     # dedup_minhash_lsh / dedup_simhash: rows-only (hash-family-specific);
     # their *_verified twins carry the deterministic SQL-exact gate

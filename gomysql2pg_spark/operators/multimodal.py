@@ -40,6 +40,7 @@ from pyspark.sql.types import (
 )
 
 from ..catalog import load_table
+from ..functions.tokens import tokenize
 
 SAMPLE_RATE = 8000
 BITS_PER_SAMPLE = 16
@@ -463,9 +464,7 @@ def q_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.octet_length(F.col("text").cast("binary")).alias("n_bytes"),
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-            "n_tokens"
-        ),
+        F.size(tokenize(F.col("text"))).alias("n_tokens"),
         # try_divide: an EMPTY text (0 chars) must yield NULL, not an
         # ANSI divide-by-zero job failure — DuckDB's NULL/0 is NULL on
         # the oracle side (r12 hostile-text audit)

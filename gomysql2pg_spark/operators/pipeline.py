@@ -19,8 +19,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .dedup import norm_text, tokenize
 from ..functions.numeric import cents, sql_cents
+from ..functions.tokens import norm_text, tokenize
 
 # ---------------------------------------------------------------------------
 # corpus curation funnel

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.consume import local_frame
+from ..functions.tokens import tokenize
 from ..plans.iterative import iterate_fixed_point
 
 #: chunking geometry: 200-char windows every 150 chars (50-char overlap)
@@ -716,7 +717,7 @@ def _heuristic_rule_score():
     about for `_SQL_STOP` (r15 review finding)."""
     from .text import STOPWORDS
 
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokenize(F.col("text"))
     n_stop = F.size(F.filter(toks, lambda w: w.isin(STOPWORDS)))
     return (
         ((F.col("n_chars_t") >= 20) & (F.col("n_chars_t") <= 10000))
@@ -1225,7 +1226,7 @@ def q_weak_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), r"[0-9]", "")
     )
     toks = F.filter(
-        F.split(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))), r"\s+"),
+        tokenize(F.coalesce(F.col("text"), F.lit(""))),
         lambda t: F.length(t) > 0,
     )
     n_stop = F.size(F.filter(toks, lambda w: w.isin(STOPWORDS)))

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.consume import local_frame
+from ..functions.tokens import tokenize
 
 TOP_TERMS = 3
 BM25_K1 = 1.2
@@ -33,7 +34,7 @@ BM25_QUERY = ["batch", "hash", "stream"]
 
 def _postings(docs: DataFrame) -> DataFrame:
     """(doc_id, term, tf) exact term frequencies."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokenize(F.col("text"))
     return (
         docs.select("doc_id", F.explode(toks).alias("term"))
         .groupBy("doc_id", "term")
@@ -412,7 +413,7 @@ def q_bigram_lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pre = docs.select(
         "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        tokenize(F.col("text")).alias("toks"),
     )
     from .text import bigram_index
 
@@ -570,7 +571,7 @@ def q_kn_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pre = docs.select(
         "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        tokenize(F.col("text")).alias("toks"),
     )
     from .text import bigram_index
 
@@ -940,9 +941,7 @@ def _bm25_topk_ranked(
     all_terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        ).alias("term"),
+        F.explode(tokenize(F.col("text"))).alias("term"),
     )
     # ONE corpus-scale aggregate: dl = count(*) per doc (identical to
     # the postings' Σtf — every exploded token, empty strings

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.numeric import cents, sql_cents
-from .dedup import norm_text
+from ..functions.tokens import norm_text
 
 #: hex-digit → value via position lookup — portable to any SQL engine
 #: (`strpos`/`instr` both exist; avoids hex-cast builtins DuckDB lacks).

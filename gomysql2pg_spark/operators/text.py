@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.consume import local_frame
+from ..functions.tokens import tokenize
 
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -172,7 +173,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     langid swaps the marker lists for trained character-n-gram profiles;
     the plan (single scan, filter-over-split, CASE argmax) is identical."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokenize(F.col("text"))
     scores = {
         cls: sum(
             (_word_count(toks, w) for w in words), start=F.lit(0)
@@ -236,7 +237,7 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretraining-corpus gate. Ratios compared in integer cross-products
     (n_punct * 100 < 20 * n_chars) to avoid float compares."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokenize(F.col("text"))
     n_chars = F.length("text")
     n_punct = F.length("text") - F.length(
         F.regexp_replace(F.col("text"), r"[^A-Za-z0-9\s]", "")
@@ -412,9 +413,7 @@ def q_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluate referenced outer expressions per element, so an
     # inline split() would re-tokenize per bigram (see
     # dedup.shingles_from_tokens)
-    pre = docs.select(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks")
-    )
+    pre = docs.select(tokenize(F.col("text")).alias("toks"))
     bigrams = bigrams_from_tokens(F.col("toks"))
     return (
         pre.select(F.explode(bigrams).alias("bigram"))
@@ -459,7 +458,7 @@ def q_distinct_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pre = docs.select(
         "source",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        tokenize(F.col("text")).alias("toks"),
     )
     bigrams = bigrams_from_tokens(F.col("toks"))
     return (
@@ -524,7 +523,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Thresholds (Gopher-ish): top word <= 30% of tokens, duplicate
     bigrams <= 20%, mean word length in [3, 10]."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokenize(F.col("text"))
 
     words = docs.select("doc_id", F.explode(toks).alias("w"))
     wc = words.groupBy("doc_id", "w").agg(F.count("*").alias("c"))
@@ -546,7 +545,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams = bigrams_from_tokens(F.col("toks"))
     bigram_stats = docs.select(
         "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("toks"),
+        tokenize(F.col("text")).alias("toks"),
     ).select(
         "doc_id",
         F.size(bigrams).alias("n_2grams"),
@@ -769,8 +768,7 @@ def q_quality_rule_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 5·tasks rows at any corpus size. All comparisons are integer
     cross-products — no float thresholds to drift between engines."""
     docs = load_table(spark, sf_dir, "documents")
-    lowered = F.lower(F.trim(F.col("text")))
-    toks = F.split(lowered, r"\s+")
+    toks = tokenize(F.col("text"))
     n_chars = F.length("text")
     n_punct = n_chars - F.length(
         F.regexp_replace(F.col("text"), r"[^A-Za-z0-9\s]", "")
@@ -1221,9 +1219,7 @@ def _mine_bpe_merges(
     S = _BPE_SEP
     words = (
         docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("w")
+            F.explode(tokenize(F.col("text"))).alias("w")
         )
         .filter((F.length("w") > 0) & ~F.col("w").contains(S))
         .groupBy("w")
@@ -1417,9 +1413,7 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     wfl = (
         docs.select(
             "lang",
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("w"),
+            F.explode(tokenize(F.col("text"))).alias("w"),
         )
         .filter((F.length("w") > 0) & ~F.col("w").contains(S))
         .groupBy("lang", "w")
@@ -1546,9 +1540,7 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw = (
         docs.select(
             "doc_id",
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("w"),
+            F.explode(tokenize(F.col("text"))).alias("w"),
         )
         .filter((F.length("w") > 0) & ~F.col("w").contains(S))
         .groupBy("doc_id", "w")
@@ -1730,7 +1722,7 @@ def _winnow_selected(docs: DataFrame) -> DataFrame:
     wkey = the selected (pos, fp) set."""
     k, w = WINNOW_K, WINNOW_W
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
+        tokenize(F.col("text")),
         lambda t: F.length(t) > 0,
     )
     grams = (

@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column
 from pyspark.sql import types as T
 
+from ..ddl import pg_ident
 from ..functions.sqltext import ident, lit
 
 
@@ -246,8 +247,8 @@ def copy_partition_writer(
     `root.go:408-504`). Returned as a closure so cloudpickle ships it by
     value; psycopg resolves on the executor (import-gated)."""
 
-    col_list = ", ".join(f'"{c}"' for c in columns)
-    sql = f'COPY "{table}" ({col_list}) FROM STDIN'
+    col_list = ", ".join(pg_ident(c) for c in columns)
+    sql = f"COPY {pg_ident(table)} ({col_list}) FROM STDIN"
 
     def write_partition(rows_iter):
         try:

@@ -1051,12 +1051,8 @@ def _stream_band_keys(docs: DataFrame):
     A doc with NO shingles (<3 tokens) gets NULL keys — the batch
     pipeline drops such docs before banding, and a NULL key never
     equi-joins, so both sides agree it can never be a candidate."""
-    from ..operators.dedup import (
-        BAND_SIZE,
-        N_HASHES,
-        shingles_from_tokens,
-        tokenize,
-    )
+    from ..functions.tokens import tokenize
+    from ..operators.dedup import BAND_SIZE, N_HASHES, shingles_from_tokens
 
     out = docs.select(
         "*", tokenize(F.col("text")).alias("__toks")

@@ -19,13 +19,8 @@ it with bounded time (the window gate drops the bucket BEFORE the
 collect materializes it). Defaults the filter to the LSH family.
 
 `--sparse` switches the documents replication to the duplication-SPARSE
-variant (replicas are NOT near-dups — see `build_replicated`), defaults
-the filter to the Jaccard pair, and appends a full-vs-prefix threshold
-sweep. Measured verdict (r10): the count-only full index wins at every
-threshold tried on this fixture family — the prefix path's candidate
-collapse is real (its cost falls monotonically with t) but its
-per-candidate array-verify never overcomes the count-join's cheapness;
-see `dedup.q_dedup_jaccard_prefix` for the scoped winning regime.
+variant (replicas are NOT near-dups — see `build_replicated`) and
+defaults the filter to `dedup_jaccard`.
 
 The replicated fixture set is built once with pyarrow under /tmp
 (cached by source mtimes + replication factor) from the DRIVER fixtures
@@ -69,7 +64,6 @@ SCALE_CRITICAL = [
     "dedup_minhash_lsh",
     "dedup_simhash",
     "dedup_jaccard",
-    "dedup_jaccard_prefix",
     "dedup_containment",
     "dedup_lines",
     "dedup_clusters",
@@ -403,8 +397,8 @@ def main() -> int:
     else:
         reps, name_filter = 10, args
     if sparse and not name_filter:
-        # the sparse corpus exists to show the prefix-vs-full-index
-        # crossover; default to the pair (plus their shared downstream)
+        # the sparse corpus prices the exact verifier when replicas
+        # share no shingles
         name_filter = ["dedup_jaccard"]
     if skewed and not name_filter:
         # the skewed corpus exists to prove the LSH family survives a
@@ -524,59 +518,8 @@ def main() -> int:
         except Exception as exc:
             failures.append((name, f"{type(exc).__name__}: {exc}"[:300]))
             print(f"{name:34s} FAILED {failures[-1][1]}")
-    if sparse:
-        _threshold_sweep(spark, big, failures)
     print(f"FAILURES: {failures or 'none'}")
     return 1 if failures else 0
-
-
-def _threshold_sweep(spark, big: str, failures: list) -> None:
-    """full-vs-prefix Jaccard across thresholds on the dup-sparse
-    corpus. The full index's cost is threshold-INDEPENDENT (same
-    co-bucket join, filter at the end) while the prefix index holds
-    n − ⌈t·n⌉ + 1 entries per doc — so its candidate volume, and the
-    array-shipping verify that dominates its runtime, collapse as t
-    rises. This is the crossover the AllPairs family actually delivers:
-    not "dup-sparse corpora" (measured: at t=0.5 the count-only full
-    index wins on every corpus variant tried) but HIGH thresholds,
-    where the prefix is a small fraction of each set."""
-    from pyspark.sql import functions as F
-
-    from gomysql2pg_spark.catalog import load_table
-    from gomysql2pg_spark.operators.dedup import (
-        _pair_intersections,
-        prefix_pair_intersections,
-    )
-
-    print(f"{'threshold sweep (sparse corpus)':34s} "
-          f"{'rows':>10s} {'t_full':>8s} {'t_pref':>8s}")
-    for t_milli in (500, 700, 900):
-        try:
-            docs = load_table(spark, big, "documents")
-            keep = lambda pi: pi.filter(  # noqa: E731
-                F.col("i") * 1000
-                >= F.lit(t_milli) * (F.col("na") + F.col("nb") - F.col("i"))
-            )
-            t0 = time.perf_counter()
-            n_full = keep(_pair_intersections(docs)).count()
-            t_full = time.perf_counter() - t0
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            n_pref = keep(
-                prefix_pair_intersections(docs, t_milli=t_milli)
-            ).count()
-            t_pref = time.perf_counter() - t0
-            spark.catalog.clearCache()
-            assert n_pref == n_full, (t_milli, n_pref, n_full)
-            print(
-                f"{'jaccard t=' + str(t_milli / 1000):34s} "
-                f"{n_full:>10d} {t_full:>8.2f} {t_pref:>8.2f}"
-            )
-        except Exception as exc:
-            failures.append(
-                (f"sweep_t{t_milli}", f"{type(exc).__name__}: {exc}"[:300])
-            )
-            print(f"sweep_t{t_milli} FAILED {failures[-1][1]}")
 
 
 if __name__ == "__main__":

@@ -343,65 +343,6 @@ def test_cc_union_find_asymmetric_and_null_contract():
         _cc_union_find([{"a": 1, "b": None}])
 
 
-def test_prefix_jaccard_equals_full_and_reduces_candidates(
-    spark, sf_dir, queries
-):
-    """The prefix filter must be LOSSLESS at the threshold (row-for-row
-    equal to the full inverted-index verifier — they share one SQL
-    oracle) while generating strictly fewer candidate pairs than the
-    full index's co-bucket count."""
-    from gomysql2pg_spark.catalog import load_table
-    from gomysql2pg_spark.operators.dedup import (
-        JACCARD_MILLI,
-        MAX_SHINGLE_DF,
-        _shingle_df,
-    )
-
-    full = {tuple(r) for r in queries["dedup_jaccard"](spark, sf_dir).collect()}
-    pref = {
-        tuple(r)
-        for r in queries["dedup_jaccard_prefix"](spark, sf_dir).collect()
-    }
-    assert pref == full and full  # lossless, and non-trivial input
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh_all = _shingle_df(docs)
-    dfreq = (
-        sh_all.groupBy("s")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") <= MAX_SHINGLE_DF)
-    )
-    # full-index candidate volume: Σ df(s)·(df(s)−1)/2 over kept shingles
-    full_pairs = dfreq.agg(
-        F.sum(F.col("df") * (F.col("df") - 1) / 2).alias("p")
-    ).first()["p"]
-    # prefix-index candidate volume, same formula over prefix entries
-    from pyspark.sql import Window as W
-
-    sh = sh_all.join(dfreq, "s")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    ranked = (
-        sh.join(sizes, "doc_id")
-        .withColumn(
-            "r", F.row_number().over(W.partitionBy("doc_id").orderBy("df", "s"))
-        )
-        .withColumn(
-            "p_len", F.expr(f"n - (({JACCARD_MILLI} * n + 999) div 1000) + 1")
-        )
-    )
-    pref_df = (
-        ranked.filter(F.col("r") <= F.col("p_len"))
-        .groupBy("s")
-        .agg(F.count("*").alias("pdf"))
-    )
-    pref_pairs = pref_df.agg(
-        F.sum(F.col("pdf") * (F.col("pdf") - 1) / 2).alias("p")
-    ).first()["p"]
-    assert pref_pairs < full_pairs, (pref_pairs, full_pairs)
-    # at t=0.5 the prefix is ~half of each set → ~4× fewer bucket pairs
-    assert pref_pairs <= full_pairs * 0.5, (pref_pairs, full_pairs)
-
-
 def test_ivfpq_equals_independent_numpy_ivfadc(spark, sf_dir, queries):
     """Independent reimplementation check for the composed IVFADC
     path: rebuild the whole pipeline (seed codebook → codes → exact

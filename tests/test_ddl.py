@@ -174,3 +174,36 @@ def test_trigger_pg_form_keeps_if_blocks_valid():
     assert "if new.qty > 0 then\n" in func_sql.lower().replace("  ", "")
     assert "then;" not in func_sql.lower()
     assert "new.total := new.qty * 2;" in func_sql.lower()
+
+
+def test_embedded_double_quote_is_doubled_in_every_identifier():
+    """A MySQL name may hold `"`; PostgreSQL reads `"q""q"` as the one
+    identifier q"q, while `"q"q"` is a syntax error. Every table and
+    column name the generators quote doubles the embedded quote."""
+    from gomysql2pg_spark.ddl import trigger_sql_pg
+
+    cols = [ColumnMeta(name='q"q', data_type="int", ordinal_position=1)]
+    drop, create = create_table_sql('T"x', cols)
+    assert drop == 'drop table if exists "t""x" cascade'
+    assert create == 'create table "t""x" ("q""q" int)'
+    assert sequence_sql('T"x', 'I"d', 1)[2].startswith(
+        'alter table "t""x" alter column "i""d" set default nextval('
+    )
+    pk = IndexMeta('T"x', "PRIMARY", ['a"b'], non_unique=False)
+    assert index_sql(pk, distributed=True) == (
+        'alter table "t""x" distribute by hash ("a""b"); '
+        'alter table "t""x" add primary key ("a""b")'
+    )
+    ix = IndexMeta('T"x', "IX", ['a"b'], non_unique=True)
+    assert index_sql(ix, suffix="00") == 'create index ix_00 on "t""x" ("a""b")'
+    fk = ForeignKeyMeta('O"r', "FK", ['c"id'], 'C"u', ['i"d'])
+    assert foreign_key_sql(fk) == (
+        'alter table "o""r" add constraint fk foreign key ("c""id") '
+        'references "c""u" ("i""d") on delete no action on update no action'
+    )
+    trg = TriggerMeta("trg", 'T"x', "BEFORE", "INSERT", "perform 1")
+    assert ' on "t""x" for each row as ' in trigger_sql(trg)
+    assert trigger_sql_pg(trg)[1] == (
+        'create or replace trigger trg before insert on "t""x" '
+        "for each row execute function trg_tgfn()"
+    )

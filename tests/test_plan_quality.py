@@ -693,49 +693,6 @@ def test_similarity_ivfpq_probe_is_equi_join_no_cartesian(
     assert plan.count("BroadcastHashJoin") >= 6, plan
 
 
-def test_prefix_jaccard_candidate_join_builds_on_prefix(
-    spark, sf_dir, queries
-):
-    """The AllPairs physical contract (complements the row-equality +
-    candidate-count gates in test_ann_quality): BOTH inputs of the
-    candidate self-join are the cached PREFIX projection — the join
-    keyed on the shingle with the in-bucket length filter folded into
-    its condition reads two InMemoryTableScans of the (doc_id, s, n)
-    prefix cache, whose cached definition carries the
-    r ≤ n − ⌈t·n⌉ + 1 filter (the integer-exact ceiling
-    `(t·n + 999) div 1000` is unique to the prefix arm). Never
-    cartesian."""
-    from gomysql2pg_spark.operators.dedup import JACCARD_MILLI
-
-    df = queries["dedup_jaccard_prefix"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, plan
-    ceil_marker = "+ 999) div 1000"
-    lines = plan.splitlines()
-    hits = [i for i, ln in enumerate(lines) if ceil_marker in ln]
-    assert len(hits) >= 2, plan  # the prefix filter exists (cached def)
-    for i in hits:
-        assert "Filter" in lines[i] and "<=" in lines[i], lines[i]
-    # the candidate join: equi on the shingle with the length filter
-    # (na·1000 ≥ t·nb) in the condition; both inputs must be scans of
-    # the 3-column prefix cache, not the raw shingle table
-    assert any(
-        "Join" in ln and f"* {JACCARD_MILLI})" in ln for ln in lines
-    ), plan
-    # the (doc_id, s, n) column combo appears ONLY in the prefix cache
-    # (the shingle cache is (s, doc_id, df); the verify arrays carry
-    # arr_a/arr_b) — one scan per side of the candidate join
-    scans = [
-        ln
-        for ln in lines
-        if "InMemoryTableScan" in ln
-        and "doc_id" in ln
-        and ", s#" in ln
-        and ", n#" in ln
-    ]
-    assert len(scans) >= 2, plan
-
-
 def test_ivfpq_codes_partitioned_by_cell_prune_on_probe(
     spark, sf_dir, tmp_path
 ):
@@ -1029,12 +986,6 @@ _PERSIST_PIN_ALLOWLIST = {
         "returned lazy plan; the fused no-cache alternative was "
         "A/B-measured 1.5-1.8x slower (docstring); LRU-evictable"
     ),
-    ("operators/dedup.py", "prefix_pair_intersections"): (
-        "documented session-cache policy in the docstring: the "
-        "returned frame is lazy, unpersisting here would evict "
-        "before the caller's first action; measured ~2.3s per extra "
-        "pass at sf0.1 without the prefix cache"
-    ),
     ("operators/dedup.py", "q_dedup_minhash_lsh"): (
         "candidate-pair + candidate-pruned shingle caches; both are "
         "|candidates|-bounded (never corpus-sized) and the race "
@@ -1114,6 +1065,54 @@ def test_driver_rows_become_frames_in_one_place():
             ):
                 calls.append((rel, node.lineno))
     assert {rel for rel, _ in calls} == {"functions/consume.py"}, calls
+
+
+def test_tokenizer_rule_lives_in_one_place():
+    """The word tokenizer `split(lower(trim(text)), '\\s+')` and the
+    normal form `regexp_replace(lower(trim(text)), '\\s+', ' ')` are
+    a contract with every DuckDB oracle, so only
+    `functions/tokens.py` may spell them out; every other module calls
+    `tokenize` / `norm_text`. A hand copy is a `split` or
+    `regexp_replace` on the pattern `\\s+` whose subject is a
+    `lower(...)` call or a name bound to one."""
+    import ast
+    import pathlib
+
+    import gomysql2pg_spark
+
+    def callee(node):
+        f = node.func
+        return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+
+    root = pathlib.Path(gomysql2pg_spark.__file__).parent
+    copies = []
+    for py in sorted(root.rglob("*.py")):
+        rel = str(py.relative_to(root))
+        tree = ast.parse(py.read_text())
+        calls = [n for n in ast.walk(tree) if isinstance(n, ast.Call)]
+        lowered = {
+            t.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Assign)
+            and isinstance(n.value, ast.Call)
+            and callee(n.value) == "lower"
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in calls:
+            if callee(node) not in ("split", "regexp_replace"):
+                continue
+            if len(node.args) < 2 or not (
+                isinstance(node.args[1], ast.Constant)
+                and node.args[1].value == r"\s+"
+            ):
+                continue
+            subject = node.args[0]
+            if (
+                isinstance(subject, ast.Call) and callee(subject) == "lower"
+            ) or (isinstance(subject, ast.Name) and subject.id in lowered):
+                copies.append((rel, node.lineno))
+    assert {rel for rel, _ in copies} == {"functions/tokens.py"}, copies
 
 
 def test_persist_release_discipline():

@@ -162,6 +162,18 @@ def test_copy_partition_writer_batches_and_commits_once(monkeypatch):
     assert [len(b.splitlines()) for _, b in conn.cur.copies] == [2, 2, 1]
 
 
+def test_copy_partition_writer_doubles_embedded_double_quotes(monkeypatch):
+    """A table or column name holding `"` stays one identifier in the
+    COPY statement (`"q""q"`), not a PostgreSQL syntax error."""
+    from gomysql2pg_spark.sinks.jdbc import copy_partition_writer
+
+    conns = _fake_psycopg2(monkeypatch)
+    copy_partition_writer("dbname=x", 't"x', ['q"q'])(iter([(1,)]))
+    assert [s for s, _ in conns[0].cur.copies] == [
+        'COPY "t""x" ("q""q") FROM STDIN'
+    ]
+
+
 def test_copy_partition_writer_rolls_back_on_error(monkeypatch):
     from gomysql2pg_spark.sinks.jdbc import copy_partition_writer
 
