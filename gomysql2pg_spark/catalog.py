@@ -51,7 +51,7 @@ def _fs_path(path_or_uri: str):
     return pafs.LocalFileSystem(), path_or_uri
 
 
-def _join(base: str, name: str) -> str:
+def join_path(base: str, name: str) -> str:
     """Path join that preserves URI form."""
     if "://" in base:
         return base.rstrip("/") + "/" + name
@@ -142,7 +142,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
-    path = _join(sf_dir, f"{name}.parquet")
+    path = join_path(sf_dir, f"{name}.parquet")
     units = timestamp_units(path)
     ns_cols = [c for c, u in units.items() if u == "ns"]
     if ns_cols:

@@ -21,6 +21,12 @@ def pg_ident(name: str) -> str:
     return '"' + name.replace('"', '""') + '"'
 
 
+def pg_literal(text: str) -> str:
+    """`text` as one PostgreSQL string literal: single quotes, with any
+    embedded single quote doubled."""
+    return "'" + text.replace("'", "''") + "'"
+
+
 # ---------------------------------------------------------------------------
 # A10: CREATE TABLE (`tablemeta.go:48-154`)
 # ---------------------------------------------------------------------------
@@ -56,14 +62,14 @@ def create_table_sql(
 def sequence_sql(table: str, column: str, start: int) -> list[str]:
     """AUTO_INCREMENT → sequence + default nextval
     (`tablemeta.go:162` generator output shape)."""
-    seq = f"seq_{table.lower()}_{column.lower()}"
+    seq = pg_ident(f"seq_{table.lower()}_{column.lower()}")
     return [
         f"drop sequence if exists {seq}",
         f"create sequence {seq} increment by 1 start {start}",
         (
             f"alter table {pg_ident(table.lower())} "
             f"alter column {pg_ident(column.lower())} "
-            f"set default nextval('{seq}')"
+            f"set default nextval({pg_literal(seq)})"
         ),
     ]
 
@@ -102,7 +108,7 @@ def index_sql(
     # unique index names must be globally unique on PG → uuid suffix,
     # same trick as the reference's uuid()+MD5(RAND()) naming
     sfx = suffix if suffix is not None else uuid.uuid4().hex[:8]
-    name = f"{idx.index_name.lower()}_{sfx}"
+    name = pg_ident(f"{idx.index_name.lower()}_{sfx}")
     unique = "" if idx.non_unique else "unique "
     return f"create {unique}index {name} on {t} ({cols})"
 
@@ -130,7 +136,7 @@ def foreign_key_sql(fk: ForeignKeyMeta) -> str:
     rcols = ", ".join(pg_ident(c.lower()) for c in fk.ref_columns)
     return (
         f"alter table {pg_ident(fk.table.lower())} add constraint "
-        f"{fk.constraint_name.lower()} foreign key ({cols}) "
+        f"{pg_ident(fk.constraint_name.lower())} foreign key ({cols}) "
         f"references {pg_ident(fk.ref_table.lower())} ({rcols}) "
         f"on delete {fk.delete_rule.lower()} on update {fk.update_rule.lower()}"
     )
@@ -186,7 +192,8 @@ def trigger_sql(trg: TriggerMeta) -> str:
         for line in trg.body.splitlines()
     )
     return (
-        f"create or replace trigger {trg.name.lower()} {trg.timing.lower()} "
+        f"create or replace trigger {pg_ident(trg.name.lower())} "
+        f"{trg.timing.lower()} "
         f"{trg.event.lower()} on {pg_ident(trg.table.lower())} "
         f"for each row as {body}"
     )
@@ -230,7 +237,7 @@ def trigger_sql_pg(trg: TriggerMeta) -> tuple[str, str]:
                 ls if (ls.endswith(";") or opens_block) else ls + ";"
             )
     body = "\n  ".join(lines) or "null;"
-    fn = f"{trg.name.lower()}_tgfn"
+    fn = pg_ident(f"{trg.name.lower()}_tgfn")
     func = (
         f"create or replace function {fn}() returns trigger "
         f"language plpgsql as $$\nbegin\n  {body}\n"
@@ -238,7 +245,7 @@ def trigger_sql_pg(trg: TriggerMeta) -> tuple[str, str]:
         "  return new;\nend $$"
     )
     trig = (
-        f"create or replace trigger {trg.name.lower()} "
+        f"create or replace trigger {pg_ident(trg.name.lower())} "
         f"{trg.timing.lower()} {trg.event.lower()} on "
         f"{pg_ident(trg.table.lower())} for each row execute function {fn}()"
     )

@@ -40,31 +40,40 @@ def local_frame(spark, rows, ddl: str) -> DataFrame:
     `pyspark.daemon` plus a worker per core that stay resident for the
     session (~180 MB on 4 cores), and a model table pays a Python task
     in every consuming query's broadcast build (the r14 PQ regression,
-    ~0.3 s each). Rows ride through pandas + Arrow instead: one
+    ~0.3 s each). Rows ride as one `pyarrow.Table` instead: one
     driver-local batch, O(model) bytes at any size, where inlined
     literals would re-create the M2 plan-size bomb (nlist 4096 × dim
-    768 ≈ 3M literals). Zero rows cannot take that path — PySpark's
-    `createDataFrame(pandas)` uses Arrow only when `len(data) > 0` —
-    so they are a typed-NULL row under a false filter, which Catalyst
+    768 ≈ 3M literals). A pyarrow table takes the Arrow path whatever
+    the session's `spark.sql.execution.arrow.pyspark.enabled` says
+    (a pandas frame takes it only when that is on), and a NaN stays
+    NaN (pandas would read it as a missing value, i.e. NULL). Zero
+    rows are a typed-NULL row under a false filter, which Catalyst
     folds to `LocalTableScan <empty>` (its collect runs no job)."""
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     # a real DDL parse: composite types (decimal(p,s), map<k,v>) carry
     # commas, which a split would mistake for columns (r14 ADVICE)
-    fields = StructType.fromDDL(ddl).fields
+    schema = StructType.fromDDL(ddl)
     rows = list(rows)
     if not rows:
         return (
             spark.range(1)
             .select(
-                *[F.lit(None).cast(f.dataType).alias(f.name) for f in fields]
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema]
             )
             .where(F.lit(False))
         )
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=[f.name for f in fields]), ddl
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(list(col), type=f.type)
+            for col, f in zip(zip(*rows), arrow)
+        ],
+        schema=arrow,
     )
+    return spark.createDataFrame(table, schema)
 
 
 def drain_one_row(df: DataFrame, *caches: DataFrame) -> DataFrame:

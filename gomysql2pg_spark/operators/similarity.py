@@ -18,12 +18,12 @@
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import index_store
 from ..catalog import load_table
 from ..functions.consume import drain_one_row, local_frame
 from .dedup import dot_double
@@ -1017,14 +1017,6 @@ def _train_coarse(
     return rows
 
 
-def _join(root: str, name: str) -> str:
-    """Path join that works for both URI roots (s3://…, hdfs://…) and
-    plain local paths — URIs always use '/'."""
-    if "://" in root:
-        return root.rstrip("/") + "/" + name
-    return os.path.join(root, name)
-
-
 def _fixture_key(sf_dir: str):
     """Identity of the embeddings fixture + the training hyperparams:
     `catalog.fixture_stat`'s (path, shallow (name, size, mtime_ns)
@@ -1053,53 +1045,6 @@ def _coarse_model(sf_dir: str, emb: DataFrame) -> list:
     return _train_coarse(emb, cache_key=_fixture_key(sf_dir))
 
 
-def _resolve_index_fs(
-    index_root: str | None = None,
-    filesystem=None,
-    spark_root: str | None = None,
-):
-    """(fs, control_root, spark_root) for the IVF index tree. The
-    CONTROL plane (existence / _SUCCESS gate / atomic install /
-    eviction) rides `pyarrow.fs`; the DATA plane (the executor-parallel
-    parquet write/read of the corpus-sized code table) rides Spark's
-    own Hadoop filesystem at `spark_root` — same split as the copytext
-    source's L4 treatment (driver planning through pyarrow, bulk bytes
-    through the engine). Three forms:
-
-    - default: a per-user mode-0700 local cache dir (NOT the old
-      world-shared /tmp path — another user's pre-created tree with a
-      _SUCCESS marker must never be trusted);
-    - `index_root` with a scheme ("s3://bucket/ann", "hdfs://…"):
-      resolved via `pyarrow.fs.FileSystem.from_uri`, Spark reads and
-      writes the URI verbatim — the offline index build targets object
-      storage exactly like the COPY dump trees do;
-    - injected `filesystem` object (tests: a SubTreeFileSystem that
-      would break any leftover os.* access): `index_root` is the
-      control-plane root inside that filesystem and `spark_root` says
-      where Spark sees the same bytes."""
-    import tempfile
-
-    from pyarrow import fs as pafs
-
-    if filesystem is not None:
-        if index_root is None or spark_root is None:
-            raise ValueError(
-                "injected filesystem needs index_root + spark_root"
-            )
-        return filesystem, index_root, spark_root
-    if index_root is not None and "://" in index_root:
-        fs, inner = pafs.FileSystem.from_uri(index_root)
-        return fs, inner, index_root
-    if index_root is None:
-        from ..functions.paths import secure_private_dir
-
-        uid = os.getuid() if hasattr(os, "getuid") else 0
-        index_root = secure_private_dir(
-            os.path.join(tempfile.gettempdir(), f"spark_graft_ivf-u{uid}")
-        )
-    return pafs.LocalFileSystem(), index_root, index_root
-
-
 def _index_name(sf_dir: str) -> str:
     """Canonical installed-tree basename for the fixture's IVFADC code
     table — the ONE place the (fixture key, recipe tag) → name recipe
@@ -1115,55 +1060,10 @@ def _index_name(sf_dir: str) -> str:
     return f"spark_graft_ivf_{key}"
 
 
-def _recover_base(fs, croot: str, name: str) -> None:
-    """Finish or roll back an interrupted compaction swap (r16 review:
-    a crash between the swap's two renames leaves NO base tree, and a
-    later fresh rebuild — whose sidecar lacks `compacted_through` —
-    would union the surviving deltas back in and double-serve every
-    absorbed row). Recovery order when the base is missing: a COMPLETE
-    `.compact-*` staging tree is the newer state (it already contains
-    base + absorbed deltas) — install it; else a COMPLETE `.old-*`
-    tree is the pre-compaction state — restore it. When the base IS
-    present, surviving `.compact-*`/`.old-*` trees are stale leftovers
-    of a finished swap — remove them (also the same-tag collision GC
-    the old pid-suffix scheme lacked). Idempotent; called from every
-    index entry point before the tree is used."""
-    from pyarrow import fs as pafs
-
-    sel = pafs.FileSelector(croot, allow_not_found=True)
-    compacts, olds = [], []
-    for info in fs.get_file_info(sel):
-        base = info.base_name
-        if info.type != pafs.FileType.Directory:
-            continue
-        if ".tmp-" in base:
-            continue
-        full = _join(croot, base)
-        if base.startswith(name + ".compact-") and _tree_built(fs, full):
-            compacts.append(base)
-        elif base.startswith(name + ".old-") and _tree_built(fs, full):
-            olds.append(base)
-    compacts.sort()
-    olds.sort()
-    base_c = _join(croot, name)
-    if not _tree_built(fs, base_c):
-        if compacts:
-            fs.move(_join(croot, compacts[-1]), base_c)
-            for c in compacts[:-1]:
-                _rm_tree(fs, _join(croot, c))
-            for o in olds:
-                _rm_tree(fs, _join(croot, o))
-            return
-        if olds:
-            fs.move(_join(croot, olds[-1]), base_c)
-            for o in olds[:-1]:
-                _rm_tree(fs, _join(croot, o))
-            return
-        return  # no index yet — nothing to recover
-    for c in compacts:
-        _rm_tree(fs, _join(croot, c))
-    for o in olds:
-        _rm_tree(fs, _join(croot, o))
+def _open_index(sf_dir, index_root, filesystem, spark_root):
+    return index_store.open_tree(
+        _index_name(sf_dir), index_root, filesystem, spark_root
+    )
 
 
 def _ivf_index(
@@ -1183,18 +1083,12 @@ def _ivf_index(
     LIVES as a cell-partitioned table, and queries read it back so the
     probe equi-join prunes to nprobe directories (partition-pruning
     plan gate in tests/test_ann_quality.py). Keyed by fixture identity
-    (path + mtime + hyperparams + recipe tag) under /tmp with the
-    _SUCCESS + atomic-rename discipline of the copytext wire cache, so
-    racing processes can't interleave a read with a half-written tree
-    and an unchanged corpus never re-encodes. Cell assignment inside
-    the build is the zero-shuffle `_cell_expr` map. ALL tree
-    manipulation rides `pyarrow.fs` (`_resolve_index_fs`): the
-    _SUCCESS gate, the atomic tmp→final install, race-loss cleanup and
-    stale-tree eviction are fs.get_file_info / fs.move / fs.delete_dir
-    calls, so the same code runs against local disk, an injected test
-    filesystem, or an object store (where `move` may be copy+delete —
-    non-atomic, which is exactly why the _SUCCESS re-check keeps the
-    loser of a race from trusting a half-installed tree)."""
+    (path + mtime + hyperparams + recipe tag) and installed through
+    `index_store` (the _SUCCESS gate, the atomic tmp→final install and
+    race handling, all on `pyarrow.fs`), so racing processes can't
+    interleave a read with a half-written tree and an unchanged corpus
+    never re-encodes. Cell assignment inside the build is the
+    zero-shuffle `_cell_expr` map."""
     cent_rows = _coarse_model(sf_dir, emb)
     if not cent_rows:  # empty corpus: no model, no code table
         return [], None
@@ -1206,16 +1100,12 @@ def _ivf_index(
             carry=("cell",),
         )
         return cent_rows, codes
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _index_name(sf_dir)
-    out_c = _join(croot, name)
-
-    # finish/roll back any interrupted compaction swap BEFORE the
-    # built check: rebuilding over a recoverable base would produce a
-    # fresh sidecar without `compacted_through` and double-serve the
-    # surviving absorbed deltas (r16 review)
-    _recover_base(fs, croot, name)
-    if not _tree_built(fs, out_c):
+    # opening the tree finishes/rolls back any interrupted compaction
+    # swap BEFORE the built check: rebuilding over a recoverable base
+    # would produce a fresh sidecar without `compacted_through` and
+    # double-serve the surviving absorbed deltas (r16 review)
+    tree = _open_index(sf_dir, index_root, filesystem, spark_root)
+    if not tree.built:
         codes = _pq_codes(
             _assign_cells(emb, cent_rows),
             cb,
@@ -1227,76 +1117,22 @@ def _ivf_index(
         # new batches under the exact serving model (r16 — VERDICT
         # item 4). _train_pq_model is a cache hit here (same key the
         # caller used to build `cb`).
-        blob = _model_json(
-            name.rpartition("_")[2],  # the 12-hex recipe key
+        model = _model_dict(
+            tree.name.rpartition("_")[2],  # the 12-hex recipe key
             cent_rows,
             _train_pq_model(emb, cache_key=fk),
         )
-        if not _atomic_install(fs, croot, sroot, name, codes, blob):
+        if not tree.install_base(codes, model, "cell"):
             # both install attempts failed (transient fs error, no
             # winner tree either): serve the in-memory frame we just
             # built instead of crashing on the missing final path —
             # the next call retries the install
             return cent_rows, codes
-    return cent_rows, _read_index_codes(spark, fs, croot, sroot, name)
+    return cent_rows, tree.read(spark, "IVF index")
 
 
-def _tree_built(fs, tree_c: str) -> bool:
-    from pyarrow import fs as pafs
-
-    return (
-        fs.get_file_info(tree_c + "/_SUCCESS").type == pafs.FileType.File
-    )
-
-
-def _rm_tree(fs, path: str) -> None:
-    try:
-        fs.delete_dir(path)
-    except (OSError, FileNotFoundError):
-        pass
-
-
-def _atomic_install(
-    fs, croot, sroot, name, codes, model_blob, partition_col: str = "cell"
-) -> bool:
-    """Write `codes` (partitioned by `partition_col`) + the model
-    sidecar to a tmp tree and install it as `name` with the _SUCCESS +
-    atomic-move discipline (same race handling the r13 build used
-    inline). `partition_col` defaults to the IVFADC cell; the LSH band
-    index (`streaming.stream.lsh_index_build`) reuses the same install
-    path partitioned by band."""
-    out_c = _join(croot, name)
-    tmp_name = f"{name}.tmp-{os.getpid()}"
-    codes.write.mode("overwrite").partitionBy(partition_col).parquet(
-        _join(sroot, tmp_name)
-    )
-    tmp_c = _join(croot, tmp_name)
-    if model_blob is not None:
-        with fs.open_output_stream(_join(tmp_c, "_MODEL.json")) as f:
-            f.write(model_blob)
-    try:
-        fs.move(tmp_c, out_c)
-    except OSError:
-        if _tree_built(fs, out_c):
-            _rm_tree(fs, tmp_c)  # lost the race — winner is complete
-        else:  # stale partial tree: evict, install the fresh one
-            _rm_tree(fs, out_c)
-            try:
-                fs.move(tmp_c, out_c)
-            except OSError:
-                _rm_tree(fs, tmp_c)
-    return _tree_built(fs, out_c)
-
-
-def _model_json(
-    key: str,
-    cent_rows: list,
-    cb_rows: list,
-    compacted_through: list | None = None,
-) -> bytes:
-    import json
-
-    blob = {
+def _model_dict(key: str, cent_rows: list, cb_rows: list) -> dict:
+    return {
         "model_key": key,
         "cent": [
             [int(c), [float(x) for x in ce]] for c, ce in cent_rows
@@ -1306,79 +1142,18 @@ def _model_json(
             for m, cid, ce in cb_rows
         ],
     }
-    if compacted_through is not None:
-        blob["compacted_through"] = sorted(compacted_through)
-    return json.dumps(blob).encode()
 
 
-def _read_model_blob(fs, tree_c: str) -> dict | None:
-    import json
-
-    from pyarrow import fs as pafs
-
-    path = _join(tree_c, "_MODEL.json")
-    if fs.get_file_info(path).type != pafs.FileType.File:
-        return None
-    with fs.open_input_stream(path) as f:
-        return json.loads(f.read().decode())
-
-
-def _delta_trees(fs, croot: str, name: str) -> list:
-    """Installed delta-tree basenames for index `name`, oldest-first
-    (sorted by basename — batch ids are caller-chosen, so callers
-    wanting a meaningful order choose sortable ids). `.tmp-` trees
-    mid-install are excluded even if their _SUCCESS already exists."""
-    from pyarrow import fs as pafs
-
-    sel = pafs.FileSelector(croot, allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        base = info.base_name
-        if (
-            info.type == pafs.FileType.Directory
-            and base.startswith(name + ".delta.")
-            and ".tmp-" not in base
-            and _tree_built(fs, _join(croot, base))
-        ):
-            out.append(base)
-    return sorted(out)
-
-
-def _read_index_codes(spark, fs, croot, sroot, name) -> DataFrame:
-    """The index's code table: the base tree plus every installed
-    delta tree (incremental appends, r16). Model consistency is
-    ENFORCED, not assumed: a delta whose sidecar names a different
-    model key than the base was encoded under a different quantizer
-    and would silently corrupt ADC scores — refuse loudly. With no
-    deltas (every oracled entry) this is exactly the r15 single-tree
-    read. At 100 TB each delta stays cell-partitioned, so the probe
-    join prunes partitions per tree; rebuild-and-compact when
-    `ivf_index_staleness` crosses the retrain threshold."""
-    base = spark.read.parquet(_join(sroot, name))
-    base_model = _read_model_blob(fs, _join(croot, name))
-    absorbed = set(
-        (base_model or {}).get("compacted_through", [])
-    )  # deltas already folded into the base by ivf_index_compact —
-    # their trees may survive a crashed cleanup; serving them again
-    # would double every absorbed code row
-    deltas = [
-        d for d in _delta_trees(fs, croot, name) if d not in absorbed
-    ]
-    if not deltas:
-        return base
-    base_key = base_model["model_key"] if base_model else None
-    out = base
-    for d in deltas:
-        dm = _read_model_blob(fs, _join(croot, d))
-        dk = dm["model_key"] if dm else None
-        if base_key is not None and dk != base_key:
-            raise ValueError(
-                f"IVF index delta {d} was encoded under model "
-                f"{dk!r} but the base tree serves {base_key!r} — "
-                "rebuild the index instead of mixing quantizers"
-            )
-        out = out.unionByName(spark.read.parquet(_join(sroot, d)))
-    return out
+def _sidecar_model(spark: SparkSession, model: dict):
+    """(cent_rows, codebook frame) of a sidecar model — what encoded
+    the tree, never a session cache."""
+    cent_rows = [(c, ce) for c, ce in model["cent"]]
+    cb = local_frame(
+        spark,
+        [(m, cid, ce) for m, cid, ce in model["codebook"]],
+        "m int, cid int, ce array<double>",
+    )
+    return cent_rows, cb
 
 
 def ivf_index_append(
@@ -1397,38 +1172,16 @@ def ivf_index_append(
     re-encode) and install them as a sibling delta tree
     `<name>.delta.<batch_id>` with the same _SUCCESS + atomic-move
     discipline as the base. Idempotent per batch_id: re-appending an
-    installed batch is a no-op (returns 0), so a checkpoint-resumed
-    ingest never double-writes. Append ≡ rebuild under the frozen
-    model is pinned by tests/test_round16_ops.py. Returns the number
-    of code rows appended."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z0-9_-]{1,64}", batch_id):
-        raise ValueError(f"batch_id {batch_id!r} must be [A-Za-z0-9_-]+")
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _index_name(sf_dir)
-    _recover_base(fs, croot, name)
-    if not _tree_built(fs, _join(croot, name)):
-        raise ValueError("base index tree not built — build it first")
-    model = _read_model_blob(fs, _join(croot, name))
-    if model is None:
-        raise ValueError(
-            "base tree has no _MODEL.json sidecar (pre-r16 build) — "
-            "rebuild the index to enable appends"
-        )
-    dname = f"{name}.delta.{batch_id}"
-    if _tree_built(fs, _join(croot, dname)) or dname in set(
-        model.get("compacted_through", [])
-    ):
-        # installed OR already folded into the base by a compaction —
-        # re-encoding it would double the batch's rows
+    installed or compacted batch is a no-op (returns 0), so a
+    checkpoint-resumed ingest never double-writes. Append ≡ rebuild
+    under the frozen model is pinned by tests/test_round16_ops.py.
+    Returns the number of code rows appended."""
+    tree = _open_index(sf_dir, index_root, filesystem, spark_root)
+    model = tree.require_model("build it first")
+    dname = tree.new_delta(batch_id)
+    if dname is None:
         return 0
-    cent_rows = [(c, ce) for c, ce in model["cent"]]
-    cb = local_frame(
-        spark,
-        [(m, cid, ce) for m, cid, ce in model["codebook"]],
-        "m int, cid int, ce array<double>",
-    )
+    cent_rows, cb = _sidecar_model(spark, model)
     codes = _pq_codes(
         _assign_cells(new_emb, cent_rows), cb, carry=("cell",)
     ).persist()
@@ -1441,9 +1194,12 @@ def ivf_index_append(
             # review). Returning 0 keeps the resume contract — a
             # retried empty batch is still a no-op.
             return 0
-        blob = _model_json(model["model_key"], cent_rows, model["codebook"])
-        if not _atomic_install(fs, croot, sroot, dname, codes, blob):
-            raise OSError(f"failed to install delta tree {dname}")
+        tree.install_delta(
+            dname,
+            codes,
+            _model_dict(model["model_key"], cent_rows, model["codebook"]),
+            "cell",
+        )
         return n
     finally:
         codes.unpersist()
@@ -1464,139 +1220,15 @@ def ivf_index_compact(
     under the frozen quantizer, so it is cheap (code-table-sized, no
     corpus re-encode) and changes nothing a query reads — pinned by
     compact ≡ base+deltas row-for-row in tests/test_round16b_ops.py.
-
-    Crash-safety (the discipline, in order):
-    1. The consolidated tree is FULLY installed under a staging name
-       (same tmp→_SUCCESS→atomic-move path as every install) while the
-       live base still serves — a crash here leaves an orphan staging
-       tree and a correct index.
-    2. The new tree's `_MODEL.json` carries `compacted_through`: the
-       basenames of every delta it absorbed (cumulative across
-       compactions). `_read_index_codes`/`ivf_index_staleness` SKIP
-       deltas named there, so once the new base is in place, absorbed
-       delta trees still on disk are ignored — delta removal can crash
-       with no correctness effect.
-    3. The swap is two renames (base → .old, staging → base) under a
-       per-compaction uuid tag (never the pid — a long-lived driver
-       compacting twice must not collide with its own leftovers). A
-       FAILED second rename rolls the base back in place and
-       re-raises; a hard crash between the renames is repaired by
-       `_recover_base` — called from every index entry point — which
-       installs the complete staging tree (the newer state, already
-       carrying `compacted_through`) or restores the `.old` tree, and
-       GCs stale swap leftovers once a base is present. A missing
-       base is therefore never silently rebuilt over surviving
-       absorbed deltas (the double-serve hole, r16 review). Cleanup
-       of `.old` and absorbed deltas is best-effort last.
-
-    Returns the number of delta trees absorbed (0 = nothing to do)."""
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _index_name(sf_dir)
-    _recover_base(fs, croot, name)
-    base_c = _join(croot, name)
-    if not _tree_built(fs, base_c):
-        raise ValueError("base index tree not built — nothing to compact")
-    model = _read_model_blob(fs, base_c)
-    if model is None:
-        raise ValueError(
-            "base tree has no _MODEL.json sidecar (pre-r16 build) — "
-            "rebuild the index instead of compacting"
-        )
-    absorbed = set(model.get("compacted_through", []))
-    deltas = [d for d in _delta_trees(fs, croot, name) if d not in absorbed]
-    if not deltas:
+    The model-consistency gate runs before any write (the served read
+    refuses mixed quantizers), and the crash-safe swap is
+    `index_store.VersionedTree.swap`. Returns the number of delta
+    trees absorbed (0 = nothing to do)."""
+    tree = _open_index(sf_dir, index_root, filesystem, spark_root)
+    model = tree.require_model("nothing to compact")
+    if not tree.deltas:
         return 0
-    # model-consistency gate BEFORE any write (same refusal as reads)
-    for d in deltas:
-        dm = _read_model_blob(fs, _join(croot, d))
-        dk = dm["model_key"] if dm else None
-        if dk != model["model_key"]:
-            raise ValueError(
-                f"IVF index delta {d} was encoded under model {dk!r} "
-                f"but the base serves {model['model_key']!r} — rebuild "
-                "instead of compacting mixed quantizers"
-            )
-    codes = spark.read.parquet(_join(sroot, name))
-    for d in deltas:
-        codes = codes.unionByName(spark.read.parquet(_join(sroot, d)))
-    import json as _json
-
-    blob = _json.dumps(
-        {**model, "compacted_through": sorted(absorbed | set(deltas))}
-    ).encode()
-    _install_and_swap(fs, croot, sroot, name, codes, blob)
-    for d in deltas:
-        _rm_tree(fs, _join(croot, d))
-    return len(deltas)
-
-
-def _install_and_swap(
-    fs, croot, sroot, name, codes, blob, pre_swap=None
-) -> None:
-    """Install `codes`+sidecar under a staging name and swap it in as
-    the live base — the ONE two-rename discipline shared by compaction
-    and retrain (`_recover_base` repairs a crash in either caller
-    identically because both stage under the `.compact-` prefix).
-    A unique tag, not the pid: a long-lived driver swapping twice must
-    not collide with its own stale leftovers (r16 review).
-
-    `pre_swap` (optional, r17 — guide §2.6): an epoch barrier for
-    online swaps. Called exactly once, after the staging tree is
-    FULLY installed and before the pointer flip, so a caller that
-    still has in-flight reads of the old serving tree can sequence
-    them ahead of the swap (the retrain report drains its
-    before-phase probe behind this). A `pre_swap` that raises aborts
-    with the base untouched and the complete staging tree on disk —
-    the same crash window `_recover_base` already repairs."""
-    import uuid
-
-    tag = uuid.uuid4().hex[:8]
-    staging = f"{name}.compact-{tag}"
-    if not _atomic_install(fs, croot, sroot, staging, codes, blob):
-        raise OSError(f"failed to install staged tree {staging}")
-    if pre_swap is not None:
-        pre_swap()
-    base_c = _join(croot, name)
-    old_c = _join(croot, f"{name}.old-{tag}")
-    fs.move(base_c, old_c)
-    try:
-        fs.move(_join(croot, staging), base_c)
-    except OSError:
-        # roll the base back so readers never see a missing tree; the
-        # fully-built staging tree is left for _recover_base to
-        # install or GC on the next entry-point call
-        fs.move(old_c, base_c)
-        raise
-    _rm_tree(fs, old_c)
-
-
-def _tree_row_count(fs, tree_c: str) -> int:
-    """Exact row count of an installed code tree from its parquet
-    FOOTERS, through the control-plane filesystem — no Spark job.
-    Σ footer num_rows is authoritative (it is what Spark's own
-    metadata-only count reads), but a `spark.read.parquet().count()`
-    still plans a scan, schedules a task per file and round-trips the
-    driver; the index control plane (staleness/retrain bookkeeping)
-    calls this per installed tree, so at fleet scale those jobs are
-    pure scheduling overhead on corpus-SIZED (never corpus-SHAPED)
-    metadata (guide §5: the driver data plane should not run jobs for
-    control decisions). Walks the tree recursively (cell=N partition
-    dirs) and skips non-parquet control files (_SUCCESS,
-    _MODEL.json)."""
-    import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
-
-    sel = pafs.FileSelector(tree_c, recursive=True, allow_not_found=True)
-    n = 0
-    for info in fs.get_file_info(sel):
-        if (
-            info.type == pafs.FileType.File
-            and info.base_name.endswith(".parquet")
-            and not info.base_name.startswith(("_", "."))
-        ):
-            with fs.open_input_file(info.path) as f:
-                n += pq.ParquetFile(f).metadata.num_rows
-    return n
+    return tree.swap(tree.read(spark, "IVF index"), model, "cell")
 
 
 def ivf_index_staleness(
@@ -1614,36 +1246,21 @@ def ivf_index_staleness(
     integer milli via truncating division of non-negative counts. A
     local literal frame (tree counts are a bounded driver loop over
     the installed trees, one footer-metadata read each
-    (`_tree_row_count`, r17: no Spark job per tree) — never a corpus
-    collect)."""
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _index_name(sf_dir)
-    _recover_base(fs, croot, name)
-    if not _tree_built(fs, _join(croot, name)):
+    (`TreeStore.row_count`, r17: no Spark job per tree) — never a
+    corpus collect)."""
+    tree = _open_index(sf_dir, index_root, filesystem, spark_root)
+    if not tree.built:
         raise ValueError("base index tree not built")
-    base_model = _read_model_blob(fs, _join(croot, name))
-    base_key = base_model["model_key"] if base_model else None
-    absorbed = set((base_model or {}).get("compacted_through", []))
-    n_base = _tree_row_count(fs, _join(croot, name))
-    deltas = [
-        d for d in _delta_trees(fs, croot, name) if d not in absorbed
-    ]
-    n_appended = 0
-    consistent = True
-    for d in deltas:
-        n_appended += _tree_row_count(fs, _join(croot, d))
-        dm = _read_model_blob(fs, _join(croot, d))
-        if (dm["model_key"] if dm else None) != base_key:
-            consistent = False
-    total = n_base + n_appended
+    n_base, n_appended, milli = tree.staleness(tree.store.row_count)
+    consistent = not tree.foreign_deltas(
+        tree.model["model_key"] if tree.model else None
+    )
     lit = lambda v, t: F.lit(v).cast(t)  # noqa: E731
     return spark.range(1).select(
-        lit(1 + len(deltas), "int").alias("n_trees"),
-        lit(total, "long").alias("n_codes"),
+        lit(1 + len(tree.deltas), "int").alias("n_trees"),
+        lit(n_base + n_appended, "long").alias("n_codes"),
         lit(n_appended, "long").alias("n_appended"),
-        lit(
-            (n_appended * 1000) // total if total else 0, "long"
-        ).alias("staleness_milli"),
+        lit(milli, "long").alias("staleness_milli"),
         lit(consistent, "boolean").alias("model_consistent"),
     )
 
@@ -1671,9 +1288,10 @@ def ivf_index_retrain(
     reference's rebuild-from-scratch `IdxCreate`
     (/root/reference/cmd/tablemeta.go:200-255) done without downtime.
 
-    Discipline (all shared with compaction — ONE swap path):
+    Discipline (all shared with compaction — ONE swap path,
+    `index_store.VersionedTree.swap`):
     - the new tree is FULLY installed under a `.compact-` staging name
-      while the live base serves; `_recover_base` repairs a crash in
+      while the live base serves; opening the tree repairs a crash in
       the two-rename window exactly as for compaction (a COMPLETE
       staging tree is the newer state);
     - the new sidecar carries the NEW model (self-describing serving —
@@ -1683,43 +1301,27 @@ def ivf_index_retrain(
       trees on disk cannot double-serve them;
     - the new model_key is a deterministic digest of (old key,
       absorbed deltas), so mixing old deltas into the new tree is
-      refused by the same model-consistency gate appends use.
+      refused by the same model-consistency gate appends use;
+    - `pre_swap` is the swap's epoch barrier (r17 — guide §2.6).
 
     Below the staleness threshold (and not `force`) this is a no-op
     returning the measured staleness — the control-plane call a
     nightly maintenance job makes unconditionally. Returns
     {retrained, staleness_milli, n_deltas_absorbed, old_model_key,
     new_model_key, n_codes}."""
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _index_name(sf_dir)
-    _recover_base(fs, croot, name)
-    base_c = _join(croot, name)
-    if not _tree_built(fs, base_c):
-        raise ValueError("base index tree not built — nothing to retrain")
-    model = _read_model_blob(fs, base_c)
-    if model is None:
-        raise ValueError(
-            "base tree has no _MODEL.json sidecar (pre-r16 build) — "
-            "rebuild the index to enable retraining"
-        )
-    absorbed = set(model.get("compacted_through", []))
-    deltas = [d for d in _delta_trees(fs, croot, name) if d not in absorbed]
+    tree = _open_index(sf_dir, index_root, filesystem, spark_root)
+    model = tree.require_model("nothing to retrain")
     # footer-metadata counts through the control plane (r17): the
     # staleness decision needs tree row counts, not a Spark job per
     # tree — same numbers `spark.read.parquet(...).count()` returns
-    n_base = _tree_row_count(fs, _join(croot, name))
-    n_appended = sum(
-        _tree_row_count(fs, _join(croot, d)) for d in deltas
-    )
-    total = n_base + n_appended
-    staleness = (n_appended * 1000) // total if total else 0
+    n_base, n_appended, staleness = tree.staleness(tree.store.row_count)
     out = {
         "retrained": False,
         "staleness_milli": staleness,
         "n_deltas_absorbed": 0,
         "old_model_key": model["model_key"],
         "new_model_key": model["model_key"],
-        "n_codes": total,
+        "n_codes": n_base + n_appended,
     }
     if not force and staleness < staleness_threshold_milli:
         return out
@@ -1765,31 +1367,26 @@ def ivf_index_retrain(
     codes = _pq_codes(
         _assign_cells(emb, new_cent), new_cb, carry=("cell",)
     )
+    through = tuple(sorted(tree.absorbed | set(tree.deltas)))
     new_key = hashlib.md5(
-        repr(
-            (model["model_key"], "retrain", tuple(sorted(absorbed | set(deltas))))
-        ).encode()
+        repr((model["model_key"], "retrain", through)).encode()
     ).hexdigest()[:12]
-    blob = _model_json(
-        new_key,
-        new_cent,
-        new_cb_rows,
-        compacted_through=sorted(absorbed | set(deltas)),
+    n_absorbed = tree.swap(
+        codes,
+        _model_dict(new_key, new_cent, new_cb_rows),
+        "cell",
+        pre_swap=pre_swap,
     )
-    _install_and_swap(
-        fs, croot, sroot, name, codes, blob, pre_swap=pre_swap
-    )
-    for d in deltas:
-        _rm_tree(fs, _join(croot, d))
     out.update(
         retrained=True,
-        n_deltas_absorbed=len(deltas),
+        n_deltas_absorbed=n_absorbed,
         new_model_key=new_key,
         # the installed tree's footer count (control-plane read, no
-        # Spark job) — the re-encoded corpus, so it equals `total` on
-        # a clean swap; reading the tree keeps the number a statement
-        # about what is actually SERVED, not what we meant to install
-        n_codes=_tree_row_count(fs, _join(croot, name)),
+        # Spark job) — the re-encoded corpus, so it equals the old
+        # total on a clean swap; reading the tree keeps the number a
+        # statement about what is actually SERVED, not what we meant
+        # to install
+        n_codes=tree.store.row_count(tree.name),
     )
     return out
 
@@ -1812,23 +1409,15 @@ def query_index_tree(
     encoded under, never a session cache. `q` carries (qid, qe); the
     plan is `q_similarity_ivfpq`'s probe — broadcast model tables,
     cell equi-join against the partition-pruned code table (base +
-    live deltas via `_read_index_codes`), shared ADC scorer."""
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _index_name(sf_dir)
-    _recover_base(fs, croot, name)
-    model = _read_model_blob(fs, _join(croot, name))
-    if model is None:
+    live deltas, `VersionedTree.read`), shared ADC scorer."""
+    tree = _open_index(sf_dir, index_root, filesystem, spark_root)
+    if tree.model is None:
         raise ValueError(
             "index tree has no _MODEL.json sidecar — rebuild it"
         )
-    cent_rows = [(c, ce) for c, ce in model["cent"]]
-    cb = local_frame(
-        spark,
-        [(m, cid, ce) for m, cid, ce in model["codebook"]],
-        "m int, cid int, ce array<double>",
-    )
+    cent_rows, cb = _sidecar_model(spark, tree.model)
     cent = local_frame(spark, cent_rows, "cell int, ce array<double>")
-    codes = _read_index_codes(spark, fs, croot, sroot, name)
+    codes = tree.read(spark, "IVF index")
     dt = _adc_distance_table(q, cb)
     probes = _probe_cells(q, cent, nprobe)
     probed = codes.join(
@@ -3057,10 +2646,11 @@ def q_ann_retrain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     most expensive lifecycle stage — now overlaps the before-phase
     drain, with only the pointer FLIP sequenced behind it
     (`ivf_index_retrain(pre_swap=...)` — an epoch barrier, see
-    `_install_and_swap`), and inside the retrain the independent
-    coarse and PQ trainings run concurrently. The probe frame is
-    built before the retrain thread starts so its entry-point
-    `_recover_base` cannot GC the live staging tree."""
+    `index_store.VersionedTree.swap`), and inside the retrain the
+    independent coarse and PQ trainings run concurrently. The probe
+    frame is built before the retrain thread starts so the swap repair
+    its `index_store.open_tree` runs cannot GC the live staging
+    tree."""
     import shutil
     import tempfile
     import threading
@@ -3102,14 +2692,13 @@ def q_ann_retrain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             exact_f.result()
             exact.unpersist()
             return local_frame(spark, [], schema)
-        fs, croot, _sroot = _resolve_index_fs(root, None, None)
+        store = index_store.open_store(root)
         name = _index_name(sf_dir)
 
         def _serving_cent():
             # the model the tree ACTUALLY serves (sidecar), never a
             # session cache — the self-describing-index principle
-            blob = _read_model_blob(fs, _join(croot, name))
-            return [(c, ce) for c, ce in blob["cent"]]
+            return [(c, ce) for c, ce in store.read_model(name)["cent"]]
 
         # distortion-before reads the base sidecar just installed;
         # overlap it with the delta append + the before-probe drain
@@ -3121,10 +2710,10 @@ def q_ann_retrain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_append(spark, sf_dir, delta, "b001", index_root=root)
         exact_f.result()  # truth cache ready before the drains read it
         # the before-phase probe frame is built EAGERLY here (every
-        # index entry point runs _recover_base + reads the sidecar at
-        # CALL time; the returned plan only scans already-resolved
+        # index entry point runs the swap repair + reads the sidecar
+        # at CALL time; the returned plan only scans already-resolved
         # parquet paths) — it must exist before the retrain thread
-        # does, because a probe-side _recover_base running while a
+        # does, because a probe-side swap repair running while a
         # COMPLETE staging tree sits next to a live base would GC
         # that staging tree out from under the retrain
         before_probe = _recall_counts(

@@ -59,11 +59,11 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .. import index_store
 from ..catalog import load_table
 from ..functions.sqltext import ident, lit
 from ..sinks.jdbc import (
@@ -688,8 +688,8 @@ def q_copytext_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting shows up as a value mismatch. Doubles survive because
     both directions use shortest-round-trip representations (the VALUE
     is compared, not the string). The encoded tree is cached per
-    source-fixture mtime under /tmp, so reps measure the scan, not the
-    rewrite."""
+    source-fixture mtime in the tree store, so reps measure the scan,
+    not the rewrite."""
     from ..sinks.jdbc import copy_text_line
 
     src = os.path.join(sf_dir, "orders.parquet")
@@ -700,15 +700,13 @@ def q_copytext_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         repr((os.path.abspath(src), int(os.path.getmtime(src)),
               _RT_COLS, "wire-v1")).encode()
     ).hexdigest()[:12]
-    out = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_copytext_{key}"
-    )
-    # 'done' is keyed on Spark's own _SUCCESS marker (not 'any file'),
-    # and writers stage to a private temp dir then atomically rename —
-    # two processes racing on the same key cannot interleave a read
-    # with a half-written tree, and a foreign file cannot fake
-    # completion
-    if not os.path.isfile(os.path.join(out, "_SUCCESS")):
+    # installed through the tree store under its per-user private
+    # root: 'done' is Spark's own _SUCCESS marker on a tree this user
+    # installed, so neither a racing writer's half tree nor another
+    # user's planted one is ever read
+    store = index_store.open_store()
+    tree = f"spark_graft_copytext_{key}"
+    if not store.built(tree):
         # the fixture's o_orderdate is a timestamp; the entry exercises
         # the DATE wire form ('YYYY-MM-DD'), so cast at the source
         # (mirrored in the oracle)
@@ -716,28 +714,11 @@ def q_copytext_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"cast({c} as date) AS {c}" if c == "o_orderdate" else c
             for c in _RT_COLS
         ])
-        tmp = f"{out}.tmp-{os.getpid()}"
-        (
-            orders.select(copy_text_line(orders.schema.fields).alias("value"))
-            .write.mode("overwrite")
-            .text(tmp)
+        wire = orders.select(
+            copy_text_line(orders.schema.fields).alias("value")
         )
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            import shutil
-
-            if os.path.isfile(os.path.join(out, "_SUCCESS")):
-                # lost the race — the winner's tree is complete
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                # stale partial tree (crashed older run): evict it and
-                # install the fresh complete one
-                shutil.rmtree(out, ignore_errors=True)
-                try:
-                    os.rename(tmp, out)
-                except OSError:  # a concurrent writer beat the retry
-                    shutil.rmtree(tmp, ignore_errors=True)
+        if not store.install(tree, wire, fmt="text"):
+            raise OSError(f"failed to install the COPY-text tree {tree}")
     register_copytext(spark)
     # split_bytes forced far below the default so the ORACLE-GATED
     # entry exercises the byte-range split path on every driver run
@@ -747,7 +728,7 @@ def q_copytext_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.format("copytext")
         .schema(_RT_SCHEMA)
         .option("split_bytes", str(256 << 10))
-        .load(out)
+        .load(store.data(tree))
     )
 
 

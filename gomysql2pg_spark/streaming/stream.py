@@ -49,6 +49,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import index_store
+
+
 def _events_raw_schema(ts_unit: str, utc_adjusted: bool = False) -> StructType:
     """Raw file-source schema, pinned per on-disk ts unit (streaming
     sources require an explicit schema). ns must be read as long
@@ -1097,9 +1100,7 @@ def _stream_band_keys(docs: DataFrame):
 # (the dedup twin of the IVFADC index lifecycle): build once offline,
 # append new corpus batches under the FROZEN band family, read
 # base+deltas merged behind a model-consistency gate, report staleness.
-# Rides the similarity module's proven control plane (_resolve_index_fs
-# pyarrow split, _atomic_install _SUCCESS + atomic-move discipline) so
-# there is ONE install/race recipe in the repo, not two.
+# The trees live in `index_store`, like the IVFADC index's.
 
 LSH_INDEX_TAG = "lsh-bands-v1"
 
@@ -1125,6 +1126,26 @@ def _lsh_index_name(sf_dir: str) -> str:
         raise ValueError("unkeyable fixture: no installable index")
     key = hashlib.md5(repr((stat, LSH_INDEX_TAG)).encode()).hexdigest()[:12]
     return f"spark_graft_lshidx_{key}"
+
+
+def _open_lsh(sf_dir, index_root, filesystem, spark_root):
+    return index_store.open_tree(
+        _lsh_index_name(sf_dir), index_root, filesystem, spark_root
+    )
+
+
+def _open_built_lsh(sf_dir, index_root, filesystem, spark_root):
+    """The installed index, refusing a missing base or one banded
+    under another family."""
+    tree = _open_lsh(sf_dir, index_root, filesystem, spark_root)
+    if not tree.built:
+        raise ValueError("no base admission index — build first")
+    if tree.model is None or tree.model.get("model_key") != _lsh_model_key():
+        raise ValueError(
+            "band-family mismatch: the installed index was built under "
+            "a different banding — rebuild it"
+        )
+    return tree
 
 
 def _lsh_bucket_minima(docs: DataFrame) -> DataFrame:
@@ -1154,21 +1175,14 @@ def lsh_index_build(
     sidecar carrying the band-family key and the indexed doc count
     (the staleness denominator). Index size is BUCKET-scale (≤ 4
     rows per doc, collapsing under duplication), never pair-scale."""
-    import json as _json
-
-    from ..operators.similarity import _atomic_install, _resolve_index_fs
-
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _lsh_index_name(sf_dir)
+    tree = _open_lsh(sf_dir, index_root, filesystem, spark_root)
     n_docs = docs.count()
-    blob = _json.dumps(
-        {"model_key": _lsh_model_key(), "n_docs": n_docs}
-    ).encode()
-    ok = _atomic_install(
-        fs, croot, sroot, name, _lsh_bucket_minima(docs), blob,
-        partition_col="band",
+    ok = tree.install_base(
+        _lsh_bucket_minima(docs),
+        {"model_key": _lsh_model_key(), "n_docs": n_docs},
+        "band",
     )
-    return {"installed": ok, "name": name, "n_docs": n_docs}
+    return {"installed": ok, "name": tree.name, "n_docs": n_docs}
 
 
 def lsh_index_append(
@@ -1185,41 +1199,21 @@ def lsh_index_append(
     sibling delta tree (`<name>.delta.<batch_id>`) — only the new
     docs' band keys are computed, the base is never rewritten.
     Idempotent per batch_id (a re-run of an installed batch is a
-    no-op); an empty batch and a band-family mismatch are refused
-    LOUDLY before any tree installs."""
-    import json as _json
-
-    from ..operators.similarity import (
-        _atomic_install,
-        _join,
-        _read_model_blob,
-        _resolve_index_fs,
-        _tree_built,
-    )
-
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _lsh_index_name(sf_dir)
-    base_c = _join(croot, name)
-    if not _tree_built(fs, base_c):
-        raise ValueError("no base admission index — build first")
-    model = _read_model_blob(fs, base_c)
-    if model is None or model.get("model_key") != _lsh_model_key():
-        raise ValueError(
-            "band-family mismatch: the installed index was built under "
-            "a different banding — rebuild instead of appending"
-        )
-    dname = f"{name}.delta.{batch_id}"
-    if _tree_built(fs, _join(croot, dname)):
+    no-op); an empty batch, a band-family mismatch and a batch id the
+    store would never serve are refused LOUDLY before any tree
+    installs."""
+    tree = _open_built_lsh(sf_dir, index_root, filesystem, spark_root)
+    dname = tree.new_delta(batch_id)
+    if dname is None:
         return {"appended": False, "n_docs": 0}
     n_new = new_docs.count()
     if n_new == 0:
         raise ValueError("empty append batch — nothing to index")
-    blob = _json.dumps(
-        {"model_key": _lsh_model_key(), "n_docs": n_new}
-    ).encode()
-    _atomic_install(
-        fs, croot, sroot, dname, _lsh_bucket_minima(new_docs), blob,
-        partition_col="band",
+    tree.install_delta(
+        dname,
+        _lsh_bucket_minima(new_docs),
+        {"model_key": _lsh_model_key(), "n_docs": n_new},
+        "band",
     )
     return {"appended": True, "n_docs": n_new}
 
@@ -1233,27 +1227,18 @@ def lsh_index_staleness(
     spark_root: str | None = None,
 ) -> int:
     """Appended fraction of the admission index in milli (docs in
-    delta trees / total indexed docs) — the rebuild trigger a nightly
-    maintenance job reads, mirroring `ivf_index_staleness`."""
-    from ..operators.similarity import (
-        _delta_trees,
-        _join,
-        _read_model_blob,
-        _resolve_index_fs,
-    )
-
-    fs, croot, _sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _lsh_index_name(sf_dir)
-    base = _read_model_blob(fs, _join(croot, name))
-    if base is None:
+    delta trees / total indexed docs, both from the sidecars' `n_docs`)
+    — the rebuild trigger a nightly maintenance job reads, mirroring
+    `ivf_index_staleness`."""
+    tree = _open_lsh(sf_dir, index_root, filesystem, spark_root)
+    if tree.model is None:
         raise ValueError("no base admission index")
-    n_base = int(base["n_docs"])
-    n_delta = 0
-    for d in _delta_trees(fs, croot, name):
-        blob = _read_model_blob(fs, _join(croot, d))
-        n_delta += int(blob["n_docs"]) if blob else 0
-    total = n_base + n_delta
-    return (n_delta * 1000) // total if total else 0
+
+    def n_docs(t: str) -> int:
+        blob = tree.store.read_model(t)
+        return int(blob["n_docs"]) if blob else 0
+
+    return tree.staleness(n_docs)[2]
 
 
 def read_lsh_index(
@@ -1268,31 +1253,8 @@ def read_lsh_index(
     merged to per-bucket minima, behind the same LOUD model-
     consistency gate the ANN read path uses (a delta banded under a
     different family raises instead of corrupting verdicts)."""
-    from ..operators.similarity import (
-        _delta_trees,
-        _join,
-        _read_model_blob,
-        _resolve_index_fs,
-        _tree_built,
-    )
-
-    fs, croot, sroot = _resolve_index_fs(index_root, filesystem, spark_root)
-    name = _lsh_index_name(sf_dir)
-    if not _tree_built(fs, _join(croot, name)):
-        raise ValueError("no base admission index — build first")
-    want = _lsh_model_key()
-    parts = [name] + _delta_trees(fs, croot, name)
-    for p in parts:
-        blob = _read_model_blob(fs, _join(croot, p))
-        if blob is None or blob.get("model_key") != want:
-            raise ValueError(f"band-family mismatch in tree {p}")
-    merged = spark.read.parquet(_join(sroot, parts[0])).select(
-        "band", "bkey", "m"
-    )
-    for p in parts[1:]:
-        merged = merged.unionByName(
-            spark.read.parquet(_join(sroot, p)).select("band", "bkey", "m")
-        )
+    tree = _open_built_lsh(sf_dir, index_root, filesystem, spark_root)
+    merged = tree.read(spark, "band-family mismatch", ("band", "bkey", "m"))
     return merged.groupBy("band", "bkey").agg(F.min("m").alias("m"))
 
 

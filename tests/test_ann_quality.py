@@ -797,7 +797,10 @@ def test_ivf_index_default_root_is_per_user(tmp_path, monkeypatch):
     import tempfile
 
     monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
-    fs, croot, sroot = SIM._resolve_index_fs()
+    from gomysql2pg_spark.index_store import open_store
+
+    store = open_store()
+    croot, sroot = store.croot, store.sroot
     assert croot == sroot
     uid = os.getuid() if hasattr(os, "getuid") else 0
     assert croot.endswith(f"spark_graft_ivf-u{uid}")
@@ -899,7 +902,7 @@ def test_assign_cells_join_form_trains_identically(spark, sf_dir, monkeypatch):
 
 
 def test_ivf_index_accepts_file_uri_root(spark, sf_dir, tmp_path):
-    """The `FileSystem.from_uri` branch of `_resolve_index_fs`: a
+    """The `FileSystem.from_uri` branch of `index_store.open_store`: a
     file:// URI index root resolves to a pyarrow LocalFileSystem for
     the control plane while Spark reads/writes the URI — the same
     wiring an s3://... root would use. Results must match the default
@@ -928,9 +931,11 @@ def test_ivf_index_accepts_file_uri_root(spark, sf_dir, tmp_path):
     ]
     assert len(trees) == 1
     assert os.path.isfile(tmp_path / "uri_idx" / trees[0] / "_SUCCESS")
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root_uri)
-    assert isinstance(fs, pafs.LocalFileSystem)
-    assert sroot == root_uri and not croot.startswith("file://")
+    from gomysql2pg_spark.index_store import open_store
+
+    store = open_store(index_root=root_uri)
+    assert isinstance(store.fs, pafs.LocalFileSystem)
+    assert store.sroot == root_uri and not store.croot.startswith("file://")
 
 
 def test_ivf_index_losing_a_race_trusts_the_winner(spark, sf_dir, tmp_path):

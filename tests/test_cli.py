@@ -128,11 +128,14 @@ def test_metadata_ddl_commands(config, capsys):
     path, _ = config
     assert main(["-c", path, "seqOnly"]) == 0
     out = capsys.readouterr().out
-    assert "create sequence seq_nation_n_nationkey increment by 1 start 26" in out
+    assert (
+        'create sequence "seq_nation_n_nationkey" increment by 1 start 26'
+        in out
+    )
     assert main(["-c", path, "idxOnly"]) == 0
     out = capsys.readouterr().out
     assert 'alter table "nation" add primary key ("n_nationkey")' in out
-    assert 'create index idx_nat_abc123 on "supplier" ("s_nationkey")' in out
+    assert 'create index "idx_nat_abc123" on "supplier" ("s_nationkey")' in out
     assert main(["-c", path, "viewOnly"]) == 0
     out = capsys.readouterr().out
     assert "create or replace view v_nation" in out
@@ -221,7 +224,7 @@ def test_migrate_emits_post_ddl_phases(spark, config, capsys, tmp_path):
     out = capsys.readouterr().out
     assert 'alter table "nation" add primary key' in out
     assert "create or replace view v_nation" in out
-    assert "create sequence seq_nation_n_nationkey" in out
+    assert 'create sequence "seq_nation_n_nationkey"' in out
 
 
 def test_migrate_out_collects_all_ddl_in_one_file(spark, config, tmp_path):
@@ -235,7 +238,7 @@ def test_migrate_out_collects_all_ddl_in_one_file(spark, config, tmp_path):
     assert 'create table "nation"' in text
     assert 'alter table "nation" add primary key' in text
     assert "create or replace view v_nation" in text
-    assert "create sequence seq_nation_n_nationkey" in text
+    assert 'create sequence "seq_nation_n_nationkey"' in text
 
 
 def test_trigger_metadata_emits_pg_form(tmp_path, capsys):

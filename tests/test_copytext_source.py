@@ -650,3 +650,41 @@ def test_read_copy_text_fails_loudly(spark, tmp_path, wire, schema, msg):
     schema = spark.createDataFrame([], schema).schema
     with pytest.raises(Exception, match=msg):
         read_copy_text(spark, str(d), schema).collect()
+
+
+def test_roundtrip_entry_ignores_a_tree_planted_at_the_shared_path(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """`copytext_roundtrip` caches its encoded tree under a key anyone
+    can compute from the fixture path and mtime. A complete-looking
+    tree (`_SUCCESS` present) holding wrong rows, planted at the
+    world-shared `<tmpdir>/spark_graft_copytext_<key>` path, must not
+    be what the entry reads: the cache lives in the per-user private
+    tree store, and the entry returns exactly the orders rows."""
+    import hashlib
+    import tempfile
+
+    from gomysql2pg_spark.catalog import load_table
+    from gomysql2pg_spark.sources import copytext as CT
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)  # re-read TMPDIR
+    src = os.path.join(sf_dir, "orders.parquet")
+    key = hashlib.md5(
+        repr((os.path.abspath(src), int(os.path.getmtime(src)),
+              CT._RT_COLS, "wire-v1")).encode()
+    ).hexdigest()[:12]
+    planted = tmp_path / f"spark_graft_copytext_{key}"
+    planted.mkdir()
+    (planted / "part-00000.txt").write_text(
+        "999999999\t1\tX\tY\t1.5\t1999-01-01\n"
+    )
+    (planted / "_SUCCESS").write_text("")
+    got = CT.q_copytext_roundtrip(spark, sf_dir)
+    want = load_table(spark, sf_dir, "orders").selectExpr(*[
+        f"cast({c} as date) AS {c}" if c == "o_orderdate" else c
+        for c in CT._RT_COLS
+    ])
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.collect())
+    )

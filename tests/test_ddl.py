@@ -54,10 +54,10 @@ def test_create_table_flag_variants():
 def test_sequence_sql():
     stmts = sequence_sql("Orders", "ID", 1001)
     assert stmts == [
-        "drop sequence if exists seq_orders_id",
-        "create sequence seq_orders_id increment by 1 start 1001",
+        'drop sequence if exists "seq_orders_id"',
+        'create sequence "seq_orders_id" increment by 1 start 1001',
         'alter table "orders" alter column "id" '
-        "set default nextval('seq_orders_id')",
+        """set default nextval('"seq_orders_id"')""",
     ]
 
 
@@ -70,11 +70,11 @@ def test_index_sql_variants():
     uniq = index_sql(
         IndexMeta("T", "IX_Name", ["c"], non_unique=False), suffix="abcd1234"
     )
-    assert uniq == 'create unique index ix_name_abcd1234 on "t" ("c")'
+    assert uniq == 'create unique index "ix_name_abcd1234" on "t" ("c")'
     plain = index_sql(
         IndexMeta("T", "IX2", ["c", "d"], non_unique=True), suffix="ff00ff00"
     )
-    assert plain == 'create index ix2_ff00ff00 on "t" ("c", "d")'
+    assert plain == 'create index "ix2_ff00ff00" on "t" ("c", "d")'
 
 
 def test_foreign_key_sql():
@@ -88,7 +88,7 @@ def test_foreign_key_sql():
         update_rule="NO ACTION",
     )
     assert foreign_key_sql(fk) == (
-        'alter table "orders" add constraint fk_cust foreign key '
+        'alter table "orders" add constraint "fk_cust" foreign key '
         '("cust_id") references "customer" ("id") '
         "on delete cascade on update no action"
     )
@@ -114,7 +114,7 @@ def test_trigger_sql_comment_rewrite():
     out = trigger_sql(trg)
     assert "-- set it" in out
     assert out.startswith(
-        'create or replace trigger trg before insert on "t" for each row as'
+        'create or replace trigger "trg" before insert on "t" for each row as'
     )
 
 
@@ -130,15 +130,15 @@ def test_trigger_sql_pg_two_statement_form():
     )
     func, trig = trigger_sql_pg(trg)
     assert func.startswith(
-        "create or replace function trg_tgfn() returns trigger"
+        'create or replace function "trg_tgfn"() returns trigger'
     )
     assert "-- note" in func
     assert "new.x := NEW.x + 1;" in func
     assert "perform 1;" in func
     assert "if tg_op = 'DELETE' then return old" in func
     assert trig == (
-        'create or replace trigger trg before insert on "t" '
-        "for each row execute function trg_tgfn()"
+        'create or replace trigger "trg" before insert on "t" '
+        'for each row execute function "trg_tgfn"()'
     )
 
 
@@ -195,15 +195,55 @@ def test_embedded_double_quote_is_doubled_in_every_identifier():
         'alter table "t""x" add primary key ("a""b")'
     )
     ix = IndexMeta('T"x', "IX", ['a"b'], non_unique=True)
-    assert index_sql(ix, suffix="00") == 'create index ix_00 on "t""x" ("a""b")'
+    assert index_sql(ix, suffix="00") == (
+        'create index "ix_00" on "t""x" ("a""b")'
+    )
     fk = ForeignKeyMeta('O"r', "FK", ['c"id'], 'C"u', ['i"d'])
     assert foreign_key_sql(fk) == (
-        'alter table "o""r" add constraint fk foreign key ("c""id") '
+        'alter table "o""r" add constraint "fk" foreign key ("c""id") '
         'references "c""u" ("i""d") on delete no action on update no action'
     )
     trg = TriggerMeta("trg", 'T"x', "BEFORE", "INSERT", "perform 1")
     assert ' on "t""x" for each row as ' in trigger_sql(trg)
     assert trigger_sql_pg(trg)[1] == (
-        'create or replace trigger trg before insert on "t""x" '
-        "for each row execute function trg_tgfn()"
+        'create or replace trigger "trg" before insert on "t""x" '
+        'for each row execute function "trg_tgfn"()'
+    )
+
+
+def test_object_names_are_quoted_identifiers():
+    """The sequence, index, constraint, trigger and trigger-function
+    names are identifiers too: built from table `T"x` and column `I"d`
+    they must come out quoted with the embedded `"` doubled, and the
+    sequence name inside `nextval('…')` must also follow the
+    single-quote literal rule (a `'` in the name doubled)."""
+    from gomysql2pg_spark.ddl import trigger_sql_pg
+
+    assert sequence_sql('T"x', 'I"d', 7) == [
+        'drop sequence if exists "seq_t""x_i""d"',
+        'create sequence "seq_t""x_i""d" increment by 1 start 7',
+        'alter table "t""x" alter column "i""d" '
+        """set default nextval('"seq_t""x_i""d"')""",
+    ]
+    assert sequence_sql("T'x", "I d", 1)[2] == (
+        """alter table "t'x" alter column "i d" """
+        """set default nextval('"seq_t''x_i d"')"""
+    )
+    ix = IndexMeta('T"x', 'I"d', ["a"], non_unique=False)
+    assert index_sql(ix, suffix="0") == (
+        'create unique index "i""d_0" on "t""x" ("a")'
+    )
+    fk = ForeignKeyMeta('T"x', 'F"k', ['I"d'], "p", ["id"])
+    assert foreign_key_sql(fk).startswith(
+        'alter table "t""x" add constraint "f""k" foreign key ("i""d") '
+    )
+    trg = TriggerMeta('T"g', 'T"x', "AFTER", "UPDATE", "perform 1")
+    assert trigger_sql(trg).startswith(
+        'create or replace trigger "t""g" after update on "t""x" '
+    )
+    func, trig = trigger_sql_pg(trg)
+    assert func.startswith('create or replace function "t""g_tgfn"() ')
+    assert trig == (
+        'create or replace trigger "t""g" after update on "t""x" '
+        'for each row execute function "t""g_tgfn"()'
     )

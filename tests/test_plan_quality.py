@@ -797,7 +797,7 @@ def test_model_tables_are_local_table_scans_not_python_rdds(
     build — measured ~0.3 s per stage per rep, and the PQ codebook
     feeds the encode, the distance table, and all scoring joins
     (the r14 `similarity_pq` 1.35 → 2.4 s regression). This pins the
-    `local_frame` pandas+Arrow path against that ever coming back."""
+    `local_frame` pyarrow-table path against that ever coming back."""
     from gomysql2pg_spark.functions.consume import local_frame
 
     cb = local_frame(
@@ -1173,6 +1173,53 @@ def test_persist_release_discipline():
         f"{sorted(violations - set(_PERSIST_PIN_ALLOWLIST))} "
         f"stale_allowlist="
         f"{sorted(set(_PERSIST_PIN_ALLOWLIST) - violations)}"
+    )
+
+
+# (importing module relative to the package, source module, name) for
+# each underscore-prefixed name a package module still imports from
+# another module. EXACT set equality, as for `_PERSIST_PIN_ALLOWLIST`:
+# a new reach-in fails until it is listed here, and a removed one fails
+# until its entry is deleted.
+_PRIVATE_IMPORT_ALLOWLIST = {
+    ("operators/quality.py", "operators.text", "_SQL_STOP"),
+    ("operators/similarity.py", "operators.clustering", "_sq_dist"),
+    ("streaming/stream.py", "operators.dedup", "_md5_minhash_bands"),
+}
+
+
+def test_no_module_imports_another_modules_private_names():
+    """A module's underscore-prefixed names are its own: another
+    package module that needs one is a second owner of the concept
+    (the on-disk index helpers `streaming/stream.py` once imported from
+    `operators/similarity.py` copied the index lifecycle a second
+    time). Relative and absolute `from … import _name` both count."""
+    import ast
+    import pathlib
+
+    import gomysql2pg_spark
+
+    root = pathlib.Path(gomysql2pg_spark.__file__).parent
+    found = set()
+    for py in sorted(root.rglob("*.py")):
+        rel = py.relative_to(root).as_posix()
+        package = rel.split("/")[:-1]
+        for node in ast.walk(ast.parse(py.read_text())):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            if node.level:
+                base = package[: len(package) - (node.level - 1)]
+                mod = ".".join(base + ([node.module] if node.module else []))
+            else:
+                mod = node.module or ""
+                if mod.startswith("gomysql2pg_spark."):
+                    mod = mod[len("gomysql2pg_spark."):]
+            for alias in node.names:
+                if alias.name.startswith("_"):
+                    found.add((rel, mod, alias.name))
+    assert found == _PRIVATE_IMPORT_ALLOWLIST, (
+        f"unexpected={sorted(found - _PRIVATE_IMPORT_ALLOWLIST)} "
+        f"stale_allowlist={sorted(_PRIVATE_IMPORT_ALLOWLIST - found)}"
     )
 
 

@@ -287,14 +287,16 @@ def test_ivf_index_append_equals_frozen_rebuild(spark, sf_dir, tmp_path):
         == 0
     )
     # read the served union back
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
+    from gomysql2pg_spark.index_store import open_tree
+
     key = SIM.hashlib.md5(
         repr((SIM._fixture_key(sf_dir), "ivf-codes-v2")).encode()
     ).hexdigest()[:12]
     name = f"spark_graft_ivf_{key}"
-    served = SIM._read_index_codes(spark, fs, croot, sroot, name)
+    tree = open_tree(name, index_root=root)
+    served = tree.read(spark, "IVF index")
     # frozen re-encode of base + batch from the stored model
-    model = SIM._read_model_blob(fs, SIM._join(croot, name))
+    model = tree.model
     cent_rows = [(c, ce) for c, ce in model["cent"]]
     cb = local_frame(
         spark,
@@ -363,18 +365,21 @@ def test_ivf_index_append_refuses_model_mismatch(
         spark, [(880_000, [1.0] * 64, None)]
     )
     SIM.ivf_index_append(spark, sf_dir, new, "tamper", index_root=root)
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
+    from gomysql2pg_spark.index_store import open_store, open_tree
+
+    store = open_store(index_root=root)
     key = SIM.hashlib.md5(
         repr((SIM._fixture_key(sf_dir), "ivf-codes-v2")).encode()
     ).hexdigest()[:12]
     name = f"spark_graft_ivf_{key}"
-    dpath = SIM._join(croot, f"{name}.delta.tamper")
-    blob = SIM._read_model_blob(fs, dpath)
+    dname = f"{name}.delta.tamper"
+    blob = store.read_model(dname)
     blob["model_key"] = "deadbeef0000"
-    with fs.open_output_stream(SIM._join(dpath, "_MODEL.json")) as f:
+    side = store.control(dname) + "/_MODEL.json"
+    with store.fs.open_output_stream(side) as f:
         f.write(json.dumps(blob).encode())
     with _pytest.raises(ValueError, match="different.*model|model.*serves"):
-        SIM._read_index_codes(spark, fs, croot, sroot, name).count()
+        open_tree(name, index_root=root).read(spark, "IVF index").count()
     rep = SIM.ivf_index_staleness(spark, sf_dir, index_root=root).first()
     assert rep["model_consistent"] is False
 

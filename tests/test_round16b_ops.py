@@ -237,6 +237,21 @@ def _build_appended_index(spark, sf_dir, root, n_batches=2):
     return SIM
 
 
+_CODE_COLS = ["vec_id", "cell", "c0", "c1", "c2", "c3"]
+
+
+def _served_codes(spark, sf_dir, root):
+    """The code rows the index serves (base + live deltas), sorted."""
+    import gomysql2pg_spark.operators.similarity as SIM
+    from gomysql2pg_spark.index_store import open_tree
+
+    tree = open_tree(SIM._index_name(sf_dir), index_root=root)
+    return sorted(
+        tuple(r)
+        for r in tree.read(spark, "IVF index").select(*_CODE_COLS).collect()
+    )
+
+
 def test_ivf_index_compact_preserves_served_codes(
     spark, sf_dir, tmp_path
 ):
@@ -246,25 +261,9 @@ def test_ivf_index_compact_preserves_served_codes(
     absorbed batch_id is refused as a no-op (the double-row hole)."""
     root = str(tmp_path / "ann")
     SIM = _build_appended_index(spark, sf_dir, root)
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
-    key = SIM.hashlib.md5(
-        repr((SIM._fixture_key(sf_dir), "ivf-codes-v2")).encode()
-    ).hexdigest()[:12]
-    name = f"spark_graft_ivf_{key}"
-    cols = ["vec_id", "cell", "c0", "c1", "c2", "c3"]
-    before = sorted(
-        tuple(r)
-        for r in SIM._read_index_codes(spark, fs, croot, sroot, name)
-        .select(*cols)
-        .collect()
-    )
+    before = _served_codes(spark, sf_dir, root)
     assert SIM.ivf_index_compact(spark, sf_dir, index_root=root) == 2
-    after = sorted(
-        tuple(r)
-        for r in SIM._read_index_codes(spark, fs, croot, sroot, name)
-        .select(*cols)
-        .collect()
-    )
+    after = _served_codes(spark, sf_dir, root)
     assert before == after
     rep = SIM.ivf_index_staleness(spark, sf_dir, index_root=root).first()
     assert rep["n_trees"] == 1
@@ -288,47 +287,49 @@ def test_ivf_index_compact_preserves_served_codes(
 
 
 def test_ivf_index_compact_survives_crashed_delta_cleanup(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path
 ):
     """Crash-safety step 2: if delta removal dies after the new base
     is installed, the leftover delta trees are IGNORED by reads and
     staleness (they're named in compacted_through) — no double rows."""
+    from gomysql2pg_spark.index_store import open_store
+
     root = str(tmp_path / "ann")
     SIM = _build_appended_index(spark, sf_dir, root)
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
-    key = SIM.hashlib.md5(
-        repr((SIM._fixture_key(sf_dir), "ivf-codes-v2")).encode()
-    ).hexdigest()[:12]
-    name = f"spark_graft_ivf_{key}"
-    cols = ["vec_id", "cell", "c0", "c1", "c2", "c3"]
-    before = sorted(
-        tuple(r)
-        for r in SIM._read_index_codes(spark, fs, croot, sroot, name)
-        .select(*cols)
-        .collect()
-    )
+    store = open_store(index_root=root)
+    before = _served_codes(spark, sf_dir, root)
     kept = {"skip": False}
-    real_rm = SIM._rm_tree
 
-    def crashy_rm(fs_, path):
-        if ".delta." in path:  # simulate dying before delta cleanup
-            kept["skip"] = True
-            return
-        real_rm(fs_, path)
+    class KeepDeltas:
+        """Delegating filesystem whose delete_dir skips delta trees —
+        the shape of dying before delta cleanup."""
 
-    monkeypatch.setattr(SIM, "_rm_tree", crashy_rm)
-    assert SIM.ivf_index_compact(spark, sf_dir, index_root=root) == 2
-    monkeypatch.setattr(SIM, "_rm_tree", real_rm)
+        def __init__(self, inner):
+            self._inner = inner
+
+        def delete_dir(self, path):
+            if ".delta." in path:
+                kept["skip"] = True
+                return
+            self._inner.delete_dir(path)
+
+        def __getattr__(self, attr):
+            return getattr(self._inner, attr)
+
+    assert SIM.ivf_index_compact(
+        spark,
+        sf_dir,
+        index_root=store.croot,
+        filesystem=KeepDeltas(store.fs),
+        spark_root=store.sroot,
+    ) == 2
     assert kept["skip"], "the simulated crash never triggered"
     # leftover delta trees are still on disk...
-    assert SIM._delta_trees(fs, croot, name), "deltas were removed"
+    name = SIM._index_name(sf_dir)
+    left = [t for t in store.trees() if t.startswith(name + ".delta.")]
+    assert left and all(store.built(t) for t in left), "deltas were removed"
     # ...but the served table and staleness ignore them
-    after = sorted(
-        tuple(r)
-        for r in SIM._read_index_codes(spark, fs, croot, sroot, name)
-        .select(*cols)
-        .collect()
-    )
+    after = _served_codes(spark, sf_dir, root)
     assert before == after
     rep = SIM.ivf_index_staleness(spark, sf_dir, index_root=root).first()
     assert rep["n_trees"] == 1
@@ -354,16 +355,15 @@ def test_ivf_index_append_empty_batch_is_refused(
         SIM.ivf_index_append(spark, sf_dir, empty, "bz", index_root=root)
         == 0
     )
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
+    from gomysql2pg_spark.index_store import open_tree
+
     key = SIM.hashlib.md5(
         repr((SIM._fixture_key(sf_dir), "ivf-codes-v2")).encode()
     ).hexdigest()[:12]
-    name = f"spark_graft_ivf_{key}"
-    assert not SIM._delta_trees(fs, croot, name)
+    tree = open_tree(f"spark_graft_ivf_{key}", index_root=root)
+    assert not tree.deltas
     # the index still reads, and the batch_id is NOT burned
-    assert SIM._read_index_codes(
-        spark, fs, croot, sroot, name
-    ).count() > 0
+    assert tree.read(spark, "IVF index").count() > 0
     real = _new_vectors(spark, [(10_000_001, [1.0] * 64, None)])
     assert (
         SIM.ivf_index_append(spark, sf_dir, real, "bz", index_root=root)
@@ -375,65 +375,55 @@ def test_compact_swap_crash_recovery(spark, sf_dir, tmp_path):
     """A crash between the swap's two renames leaves NO base tree —
     previously the next build would silently rebuild a fresh base and
     double-serve the surviving absorbed deltas (r16 review).
-    `_recover_base` must finish the swap (a COMPLETE staging tree is
+    Opening the tree must finish the swap (a COMPLETE staging tree is
     the newer state) or, with only the `.old` tree present, roll back
     to the pre-compaction state; either way reads serve exactly the
     pre-crash row set."""
-    import json
+    from gomysql2pg_spark.index_store import open_tree
 
     root = str(tmp_path / "ann")
     SIM = _build_appended_index(spark, sf_dir, root, n_batches=1)
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
     name = SIM._index_name(sf_dir)
-    cols = ["vec_id", "cell", "c0", "c1", "c2", "c3"]
+    tree = open_tree(name, index_root=root)
+    store = tree.store
 
     def served():
-        return sorted(
-            tuple(r)
-            for r in SIM._read_index_codes(spark, fs, croot, sroot, name)
-            .select(*cols)
-            .collect()
-        )
+        return _served_codes(spark, sf_dir, root)
 
     before = served()
-    deltas = SIM._delta_trees(fs, croot, name)
+    deltas = tree.deltas
     assert deltas
     # hand-construct the post-crash state of a compaction that died
     # between move 1 (base -> .old) and move 2 (.compact -> base):
     # a fully-built staging tree with the absorbed-deltas sidecar,
     # the old base moved aside, deltas still on disk
-    model = SIM._read_model_blob(fs, SIM._join(croot, name))
-    base_df = spark.read.parquet(SIM._join(sroot, name))
-    for d in deltas:
-        base_df = base_df.unionByName(
-            spark.read.parquet(SIM._join(sroot, d))
-        )
-    blob = json.dumps(
-        {**model, "compacted_through": sorted(deltas)}
-    ).encode()
-    assert SIM._atomic_install(
-        fs, croot, sroot, f"{name}.compact-deadbeef", base_df, blob
+    assert store.install(
+        f"{name}.compact-deadbeef",
+        tree.read(spark, "IVF index"),
+        {**tree.model, "compacted_through": sorted(deltas)},
+        partition_by="cell",
     )
-    fs.move(SIM._join(croot, name), SIM._join(croot, f"{name}.old-deadbeef"))
+    store.fs.move(store.control(name), store.control(f"{name}.old-deadbeef"))
     # base is gone — a read via any entry point must RECOVER, not
-    # rebuild: staleness runs _recover_base first
+    # rebuild: staleness opens (and so repairs) the tree first
     rep = SIM.ivf_index_staleness(spark, sf_dir, index_root=root).first()
     assert rep["n_trees"] == 1 and rep["n_appended"] == 0
     assert served() == before
-    # leftovers are gone
-    assert not SIM._delta_trees(fs, croot, name) or True  # deltas may
-    # remain on disk but are named in compacted_through and ignored
+    # deltas may remain on disk but are named in compacted_through
+    # and ignored
+    assert not open_tree(name, index_root=root).deltas
+    # the swap leftovers are gone
     from pyarrow import fs as pafs
 
     names = [
         i.base_name
-        for i in fs.get_file_info(pafs.FileSelector(croot))
+        for i in store.fs.get_file_info(pafs.FileSelector(store.croot))
         if i.type == pafs.FileType.Directory
     ]
     assert not any(".compact-" in n or ".old-" in n for n in names)
 
     # rollback-only state: base moved aside, NO staging tree
-    fs.move(SIM._join(croot, name), SIM._join(croot, f"{name}.old-cafe01"))
+    store.fs.move(store.control(name), store.control(f"{name}.old-cafe01"))
     rep = SIM.ivf_index_staleness(spark, sf_dir, index_root=root).first()
     assert rep["n_trees"] == 1
     assert served() == before

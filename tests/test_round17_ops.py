@@ -222,14 +222,14 @@ def test_ivf_index_retrain_swaps_model_and_absorbs_deltas(
     from tests.test_round16_ops import _new_vectors
     from tests.test_round16b_ops import _build_appended_index
 
+    from gomysql2pg_spark.index_store import open_tree
+
     root = str(tmp_path / "ann")
     _build_appended_index(spark, sf_dir, root, n_batches=2)
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
     name = SIM._index_name(sf_dir)
-    old = SIM._read_model_blob(fs, SIM._join(croot, name))
-    n_served = SIM._read_index_codes(
-        spark, fs, croot, sroot, name
-    ).count()
+    tree = open_tree(name, index_root=root)
+    old = tree.model
+    n_served = tree.read(spark, "IVF index").count()
     from gomysql2pg_spark.catalog import load_table
     from pyspark.sql import functions as F
 
@@ -250,13 +250,16 @@ def test_ivf_index_retrain_swaps_model_and_absorbs_deltas(
         spark, sf_dir, corpus, force=True, index_root=root
     )
     assert info["retrained"] and info["n_deltas_absorbed"] == 2
-    new = SIM._read_model_blob(fs, SIM._join(croot, name))
+    tree = open_tree(name, index_root=root)
+    new = tree.model
     assert new["model_key"] != old["model_key"]
     assert info["new_model_key"] == new["model_key"]
     assert len(new["compacted_through"]) == 2
-    assert not SIM._delta_trees(fs, croot, name)
+    assert not [
+        t for t in tree.store.trees() if t.startswith(name + ".delta.")
+    ]
     assert (
-        SIM._read_index_codes(spark, fs, croot, sroot, name).count()
+        tree.read(spark, "IVF index").count()
         == n_served
         == corpus.count()
     )
@@ -281,17 +284,16 @@ def test_ivf_index_retrain_below_threshold_is_noop(
 
     root = str(tmp_path / "ann")
     SIM.q_similarity_ivfpq(spark, sf_dir, index_root=root).count()
-    fs, croot, _ = SIM._resolve_index_fs(index_root=root)
+    from gomysql2pg_spark.index_store import open_store
+
+    store = open_store(index_root=root)
     name = SIM._index_name(sf_dir)
-    old = SIM._read_model_blob(fs, SIM._join(croot, name))
+    old = store.read_model(name)
     emb = load_table(spark, sf_dir, "embeddings")
     info = SIM.ivf_index_retrain(spark, sf_dir, emb, index_root=root)
     assert not info["retrained"]
     assert info["staleness_milli"] == 0
-    assert (
-        SIM._read_model_blob(fs, SIM._join(croot, name))["model_key"]
-        == old["model_key"]
-    )
+    assert store.read_model(name)["model_key"] == old["model_key"]
 
 
 def test_ivf_index_retrain_failed_swap_rolls_back(
@@ -308,10 +310,13 @@ def test_ivf_index_retrain_failed_swap_rolls_back(
 
     root = str(tmp_path / "ann")
     _build_appended_index(spark, sf_dir, root, n_batches=1)
-    real_fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
+    from gomysql2pg_spark.index_store import open_store
+
+    store = open_store(index_root=root)
+    real_fs, croot, sroot = store.fs, store.croot, store.sroot
     name = SIM._index_name(sf_dir)
-    old = SIM._read_model_blob(real_fs, SIM._join(croot, name))
-    base_c = SIM._join(croot, name)
+    old = store.read_model(name)
+    base_c = store.control(name)
 
     class CrashFS:
         """Raises on the swap's SECOND rename (.compact-* -> base)."""
@@ -339,11 +344,8 @@ def test_ivf_index_retrain_failed_swap_rolls_back(
             spark_root=sroot,
         )
     # rolled back: the base is in place and still serves the OLD model
-    assert SIM._tree_built(real_fs, base_c)
-    assert (
-        SIM._read_model_blob(real_fs, base_c)["model_key"]
-        == old["model_key"]
-    )
+    assert store.built(name)
+    assert store.read_model(name)["model_key"] == old["model_key"]
     # the next entry-point call GCs the orphan staging tree
     SIM.ivf_index_staleness(spark, sf_dir, index_root=root).collect()
     from pyarrow import fs as pafs
@@ -368,31 +370,27 @@ def test_ivf_index_retrain_pre_swap_barrier(spark, sf_dir, tmp_path):
 
     root = str(tmp_path / "ann")
     SIM.q_similarity_ivfpq(spark, sf_dir, index_root=root).count()
-    fs, croot, sroot = SIM._resolve_index_fs(index_root=root)
+    from gomysql2pg_spark.index_store import open_store
+
+    store = open_store(index_root=root)
     name = SIM._index_name(sf_dir)
-    base_c = SIM._join(croot, name)
-    old_key = SIM._read_model_blob(fs, base_c)["model_key"]
+    old_key = store.read_model(name)["model_key"]
     seen = []
 
     def barrier():
         # base untouched: still serving the OLD model
-        assert (
-            SIM._read_model_blob(fs, base_c)["model_key"] == old_key
-        )
+        assert store.read_model(name)["model_key"] == old_key
         staged = [
             i.base_name
-            for i in fs.get_file_info(pafs.FileSelector(croot))
+            for i in store.fs.get_file_info(pafs.FileSelector(store.croot))
             if i.type == pafs.FileType.Directory
             and ".compact-" in i.base_name
             and ".tmp-" not in i.base_name
         ]
         # staging tree COMPLETE (installed, sidecar present)
         assert len(staged) == 1
-        assert SIM._tree_built(fs, SIM._join(croot, staged[0]))
-        assert (
-            SIM._read_model_blob(fs, SIM._join(croot, staged[0]))
-            is not None
-        )
+        assert store.built(staged[0])
+        assert store.read_model(staged[0]) is not None
         seen.append(staged[0])
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -402,7 +400,7 @@ def test_ivf_index_retrain_pre_swap_barrier(spark, sf_dir, tmp_path):
     )
     assert info["retrained"] and len(seen) == 1
     assert (
-        SIM._read_model_blob(fs, base_c)["model_key"]
+        store.read_model(name)["model_key"]
         == info["new_model_key"]
         != old_key
     )
@@ -771,6 +769,32 @@ def test_lsh_index_lifecycle_build_append_staleness(spark, sf_dir):
             read_lsh_index(spark, sf_dir, index_root=root)
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_lsh_index_append_refuses_unservable_batch_ids(spark, sf_dir, tmp_path):
+    """A batch id the store would never serve is refused before any
+    tree installs, as the IVF append refuses it: `a/b` nests the delta
+    one level down and `x.tmp-1` reads as an install in progress, so
+    either tree would count as built (a re-append silently skips) while
+    `read_lsh_index` never serves its rows."""
+    import os
+
+    import pytest as _pytest
+
+    from gomysql2pg_spark.catalog import load_table
+    from gomysql2pg_spark.streaming.stream import (
+        lsh_index_append,
+        lsh_index_build,
+    )
+
+    root = str(tmp_path / "lsh")
+    docs = load_table(spark, sf_dir, "documents")
+    lsh_index_build(spark, sf_dir, docs.filter("doc_id % 4 = 0"), index_root=root)
+    batch = docs.filter("doc_id % 4 = 2")
+    for bad in ("a/b", "x.tmp-1", "", "b" * 65):
+        with _pytest.raises(ValueError, match="batch_id"):
+            lsh_index_append(spark, sf_dir, batch, bad, index_root=root)
+    assert not [t for t in os.listdir(root) if ".delta." in t]
 
 
 def test_stream_admit_installed_index_matches_inline(spark, sf_dir, queries):
