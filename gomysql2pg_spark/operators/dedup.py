@@ -25,7 +25,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import fixture_stat, load_table
+from ..catalog import load_table
 from ..functions.consume import drain_one_row, local_frame
 from ..functions.tokens import norm_text, tokenize
 
@@ -1740,35 +1740,25 @@ SEMDEDUP_THRESHOLD = 0.30
 # sub-splitting (operators.similarity / kmeans_fit) is the fix.
 MAX_SEMANTIC_CLUSTER = MAX_EXACT_VECTORS
 
-#: per-sf_dir cache for the mega-cluster guard (fixtures are immutable
-#: within a run, so one count per directory suffices)
-_MAX_CLUSTER_CACHE: dict = {}
 
-
-def _max_cluster_size(spark: SparkSession, sf_dir: str) -> int:
-    """Largest non-null k-means cluster in the embeddings fixture.
+def _max_cluster_size(emb: DataFrame) -> int:
+    """Largest non-null k-means cluster in the embeddings table.
 
     Null labels are excluded: the semantic-dedup pair join is an inner
     equi-join on ``label``, which drops null-label rows, so a large
     unlabeled population must not cause a spurious guard refusal.
 
-    Cached by FIXTURE IDENTITY (path + per-file size/mtime_ns via
-    `catalog.fixture_stat`), not by bare path: a fixture regenerated
-    in place used to serve the stale count and bypass the Σ|cluster|²
-    mega-cluster guard this feeds (r13 review finding); an unstatable
-    fixture is simply not cached."""
-    key = fixture_stat(sf_dir, "embeddings") or object()
-    if key not in _MAX_CLUSTER_CACHE:
-        emb = load_table(spark, sf_dir, "embeddings")
-        _MAX_CLUSTER_CACHE[key] = (
-            emb.filter(F.col("label").isNotNull())
-            .groupBy("label")
-            .count()
-            .agg(F.max("count"))
-            .first()[0]
-            or 0
-        )
-    return _MAX_CLUSTER_CACHE[key]
+    One label-column count per call, never cached: its cost is
+    negligible next to the pair join it guards, and a cache keyed on
+    the fixture is state the driver would have to bound and own."""
+    return (
+        emb.filter(F.col("label").isNotNull())
+        .groupBy("label")
+        .count()
+        .agg(F.max("count"))
+        .first()[0]
+        or 0
+    )
 
 
 def q_dedup_semantic(
@@ -1797,9 +1787,8 @@ def q_dedup_semantic(
     # guard: one map-side-combinable count per label (reads only the
     # label column off parquet), negligible next to the pair join it
     # protects against. Null-label rows never reach the inner equi-join
-    # below, so they must not trip the guard; the result is cached per
-    # sf_dir so repeated calls (bench reps) skip the eager action.
-    biggest = _max_cluster_size(spark, sf_dir)
+    # below, so they must not trip the guard.
+    biggest = _max_cluster_size(emb)
     if biggest > max_cluster:
         raise ValueError(
             f"dedup_semantic compares all pairs WITHIN a cluster; the "

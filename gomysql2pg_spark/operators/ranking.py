@@ -1096,9 +1096,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # ONE SQL string, not per-row Column literals: assembling 40
     # structs through the Column API costs hundreds of py4j round
-    # trips (~1 s of driver time — the _cell_expr lesson; measured as
-    # a 2.2x bench regression on this entry). All four fields are
-    # integers, so the SQL literals are exact.
+    # trips (~1 s of driver time, measured as a 2.2x bench regression
+    # on this entry). All four fields are integers, so the SQL
+    # literals are exact.
     ival = lambda v: "NULL" if v is None else str(int(v))  # noqa: E731
     structs = ",".join(
         f"named_struct('qid', CAST({ival(r.qid)} AS INT), "

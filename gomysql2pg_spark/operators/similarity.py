@@ -382,13 +382,8 @@ PQ_TOP_K = 5
 # FIXED Lloyd iterations per sub-codebook (determinism by count, like
 # IVF_TRAIN_ITERS). 1, not more: the r14 smoke-scale probe
 # (scripts/pq_training_probe.py) measured recall@5 0.511 → 0.764 at
-# one iteration and ~0.69 at 2-5 (see _pq_codebook)
+# one iteration and ~0.69 at 2-5 (see _train_pq_model)
 PQ_TRAIN_ITERS = 1
-
-# driver-held trained sub-codebooks keyed by fixture identity +
-# hyperparams — the same offline index-build treatment as
-# _COARSE_CACHE below
-_PQ_CB_CACHE: dict = {}
 
 # Quantizer training runs on a deterministic md5 HASH-SAMPLE of the
 # corpus, not the full corpus (r14 VERDICT item: at 100 TB a Lloyd
@@ -436,11 +431,9 @@ def _train_sample(emb: DataFrame) -> DataFrame:
     effect of the md5 predicate at MOD>1): the oracle training CTEs
     key assignments by vec_id, and a training-set member without a
     key is engine-divergent by construction. This also makes the
-    trained model independent of which CALLER trains first — every
-    consumer of the fixture-keyed _COARSE_CACHE now trains on the
-    identical frame whether or not it pre-filters NULL ids itself
-    (r15 review finding: a NULL-filtering caller could poison the
-    shared cache for an unfiltered one at MOD=1)."""
+    trained model independent of whether the caller pre-filters NULL
+    ids itself (r15 review finding: at MOD=1 a NULL-filtering caller
+    trained a different model than an unfiltered one)."""
     emb = emb.filter(F.col("vec_id").isNotNull())
     if TRAIN_SAMPLE_MOD <= 1:
         return emb
@@ -455,11 +448,20 @@ def _sub_sq_dist(a, b):
     return _sq_dist(a, b)
 
 
-def _pq_codebook(emb: DataFrame, cache_key=None) -> DataFrame:
-    """(m, cid, ce): PQ_M × PQ_K sub-centroid slices, trained with
-    ``PQ_TRAIN_ITERS`` deterministic Lloyd iterations per subspace
-    (iters=0 ⇒ the r12 seed form: the vec_id < PQ_K slices) — a
-    32-row broadcastable table either way.
+def _codebook_frame(spark: SparkSession, rows: list) -> DataFrame:
+    """The (m, cid, ce) broadcastable PQ codebook table of `rows`."""
+    return local_frame(spark, rows, "m int, cid int, ce array<double>")
+
+
+def _train_pq_model(emb: DataFrame, seed_by_hash: bool = False) -> list:
+    """[(m, cid, [subdim doubles])]: PQ_M × PQ_K sub-centroid slices,
+    trained with PQ_TRAIN_ITERS deterministic Lloyd iterations per
+    subspace from the vec_id < PQ_K seeds (iters=0 ⇒ the r12 seed
+    form) or, with `seed_by_hash`, the PQ_K smallest-md5(vec_id) rows
+    — the retrain path's distribution-covering seeding: low-id seeds
+    are frozen in the ORIGINAL corpus region, so a model retrained
+    over drifted data could never allocate resolution to the new
+    region; hash order is deterministic and oracle-replayable.
 
     Measurement history (scripts/pq_training_probe.py): r12 measured
     training at fixture scale (sf0.01, 500 vectors) and rejected it —
@@ -469,41 +471,18 @@ def _pq_codebook(emb: DataFrame, cache_key=None) -> DataFrame:
     recall@5 vs exact cosine moves 0.511 (seeds) → 0.764 (ONE Lloyd
     iteration), then declines to ~0.69 at 2-5 iterations (over-
     fragmented cells re-introduce code-distance ties that break
-    against the id tie-order). So: PQ_TRAIN_ITERS = 1. Training is
-    the clustering.py E/M discipline run per subspace — exact
-    integer-micro sufficient statistics, empty cells keep their
-    centroid, (d, cid) tie-break — so the DuckDB oracle replays it
-    CTE-for-CTE exactly like the coarse quantizer's (r12 machinery).
+    against the id tie-order). So: PQ_TRAIN_ITERS = 1.
 
-    At 100 TB training cost is PQ_M broadcast-join argmin passes per
-    iteration over the (sampled) training corpus — the same plan
-    shape as encoding itself; the model stays (PQ_M × PQ_K) × subdim
-    doubles on the driver."""
-    rows = _train_pq_model(emb, cache_key=cache_key)
-    return local_frame(
-        emb.sparkSession, rows, "m int, cid int, ce array<double>"
-    )
-
-
-def _train_pq_model(
-    emb: DataFrame, cache_key=None, seed_by_hash: bool = False
-) -> list:
-    """[(m, cid, [subdim doubles])] — PQ_TRAIN_ITERS Lloyd iterations
-    per subspace from the vec_id < PQ_K seeds (or, with
-    `seed_by_hash`, the PQ_K smallest-md5(vec_id) rows — the retrain
-    path's distribution-covering seeding: low-id seeds are frozen in
-    the ORIGINAL corpus region, so a model retrained over drifted data
-    could never allocate resolution to the new region; hash order is
-    deterministic and oracle-replayable), held on the driver like
-    `_train_coarse` (per iteration: ONE broadcast-join argmin pass +
-    ONE (PQ_M × PQ_K)-row sufficient-statistics collect — the collect
-    moves model-sized rows, never data rows). Same engine-exact
-    discipline as the coarse quantizer, replayed by the oracle
-    (`_pq_train_sql`): bigint MICRO-unit sums (order-independent),
-    one (s / 1e6) / c division chain, (d, cid) assignment tie-break,
-    empty cells keep their previous sub-centroid."""
-    if cache_key is not None and cache_key in _PQ_CB_CACHE:
-        return _PQ_CB_CACHE[cache_key]
+    Training is the clustering.py E/M discipline run per subspace,
+    held on the driver like `_train_coarse` (per iteration: ONE
+    broadcast-join argmin pass + ONE (PQ_M × PQ_K)-row sufficient-
+    statistics collect — the collect moves model-sized rows, never
+    data rows), replayed by the oracle (`_pq_train_sql`): bigint
+    MICRO-unit sums (order-independent), one (s / 1e6) / c division
+    chain, (d, cid) assignment tie-break, empty cells keep their
+    previous sub-centroid. At 100 TB the cost is PQ_M broadcast-join
+    argmin passes per iteration over the (sampled) training corpus —
+    the same plan shape as encoding itself."""
     if seed_by_hash:
         seeds = (
             emb.filter(F.col("vec_id").isNotNull())
@@ -546,10 +525,8 @@ def _train_pq_model(
     ]
     train = _train_sample(emb)
     for _ in range(PQ_TRAIN_ITERS):
-        cb = local_frame(
-            spark,
-            [(m, cid, ce) for (m, cid), ce in sorted(model.items())],
-            "m int, cid int, ce array<double>",
+        cb = _codebook_frame(
+            spark, [(m, cid, ce) for (m, cid), ce in sorted(model.items())]
         )
         sub = train.select(
             "vec_id",
@@ -589,10 +566,7 @@ def _train_pq_model(
                 ((r[f"s{p}"] or 0) / 1e6) / r["c"]
                 for p in range(PQ_SUBDIM)
             ]
-    rows = [(m, cid, ce) for (m, cid), ce in sorted(model.items())]
-    if cache_key is not None:
-        _PQ_CB_CACHE[cache_key] = rows
-    return rows
+    return [(m, cid, ce) for (m, cid), ce in sorted(model.items())]
 
 
 def _pq_codes(
@@ -735,9 +709,16 @@ def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     each query's (m, cid) distance table (PQ_M × |labels| rows, broadcast),
     score every vector as the left-associated sum of its PQ_M table
     lookups, and rank per query. Returns (qid, nid, adc_micro, rank)
-    — micro-rounded ADC keeps the published value integer-exact."""
+    — micro-rounded ADC keeps the published value integer-exact. The
+    codebook is the one the fixture's IVF index tree serves
+    (`_served_model`)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = _pq_codebook(emb, cache_key=_fixture_key(sf_dir))
+    served = _served_model(spark, sf_dir, emb)
+    if served is None:  # empty corpus: no codebook, zero neighbors
+        return local_frame(
+            spark, [], "qid bigint, nid bigint, adc_micro bigint, rank int"
+        )
+    cb = served[1]
     codes = _pq_codes(emb, cb)
     q = _queries_df(emb)
     dt = _adc_distance_table(q, cb)
@@ -908,22 +889,8 @@ IVF_NLIST = 8  # trained coarse cells (seeds: vec_id < IVF_NLIST)
 IVF_TRAIN_ITERS = 2  # FIXED Lloyd iterations — determinism by count,
 #                      not convergence, so the SQL oracle stays exact
 
-# driver-held coarse models keyed by (fixture identity, hyperparams):
-# training is the OFFLINE index-build step of a real IVF system —
-# queries against an unchanged corpus reuse the model instead of
-# re-running Lloyd per query
-_COARSE_CACHE: dict = {}
 
-#: (semanticHash, columns, emb_col) → the persisted id-tagged frame of
-#: `_assign_cells`' join form; keyed reuse bounds cache growth to one
-#: frame per distinct input plan instead of one per call (see the
-#: comment in _assign_cells and `release_id_cache`)
-_ID_FRAME_CACHE: dict = {}
-
-
-def _train_coarse(
-    emb: DataFrame, cache_key=None, seed_by_hash: bool = False
-) -> list:
+def _train_coarse(emb: DataFrame, seed_by_hash: bool = False) -> list:
     """Train the IVF coarse quantizer: IVF_TRAIN_ITERS Lloyd
     iterations composed from the clustering.py E/M halves (Jégou et
     al., TPAMI 2011 §V — IVFADC assumes a TRAINED coarse quantizer;
@@ -931,8 +898,8 @@ def _train_coarse(
     Returns [(cell, [centroid doubles])] — a k × dim model held on the
     DRIVER between iterations (the MLlib k-means shape: per iteration
     ONE map over the `_train_sample` hash-sample of the corpus —
-    assignment is the inlined-literal `_cell_expr`, zero joins — +
-    ONE narrow (nlist × dim)-row shuffle of sufficient statistics;
+    `_assign_cells`, a projection against the broadcast model row —
+    + ONE narrow (nlist × dim)-row shuffle of sufficient statistics;
     the collect moves nlist × dim numbers, never data rows). Seeds
     come from the FULL corpus (vec_id < nlist — deterministic with or
     without sampling); only the per-iteration Lloyd scans are
@@ -945,9 +912,9 @@ def _train_coarse(
     divides once as (CAST(s AS DOUBLE) / 1e6) / c (Python's s/1e6/c
     performs the identical nearest-double conversion + left-assoc
     IEEE divisions), assignment ties break (dist2, cell), and a cell
-    that loses all members keeps its previous centroid."""
-    if cache_key is not None and cache_key in _COARSE_CACHE:
-        return _COARSE_CACHE[cache_key]
+    that loses all members keeps its previous centroid. Training is
+    the index build's offline step: `_ivf_index` runs it once per
+    tree, and every later caller reads the model from the tree."""
     dim = PQ_M * PQ_SUBDIM
     # both collects are MODEL-sized, never data-sized: seeds are the
     # filter vec_id < IVF_NLIST (≤ nlist rows; hash-seeding is a
@@ -983,10 +950,10 @@ def _train_coarse(
         return []
     # sufficient statistics as ONE groupBy(cell) with dim per-
     # component sum columns — no posexplode: a generator row-multiplies
-    # the corpus dim× and Catalyst re-evaluates the (large, literal-
-    # heavy) assignment expression per GENERATED row (measured 7.8 s
-    # vs 0.3 s for this form at sf0.1); here the expression runs once
-    # per input row as the grouping key
+    # the corpus dim× and Catalyst re-evaluates the (nlist × dim-FLOP)
+    # assignment expression per GENERATED row (measured 7.8 s vs 0.3 s
+    # for this form at sf0.1); here the expression runs once per input
+    # row as the grouping key
     aggs = [F.count("*").alias("c")] + [
         F.sum(
             F.round(
@@ -1001,29 +968,21 @@ def _train_coarse(
         stats = (
             assigned.groupBy("cell").agg(*aggs).limit(IVF_NLIST).collect()
         )
-        # the per-iteration assignment is fully drained by the collect
-        # above — release the join-form id cache (and its keyed slot)
-        # instead of pinning a corpus-scale frame per iteration
-        release_id_cache(assigned)
         for r in stats:
             # a component sum can be NULL if every member's value was
             # non-finite (poisoned vectors) — contribute 0, not a crash
             cent[int(r["cell"])] = [
                 ((r[f"s{p}"] or 0) / 1e6) / r["c"] for p in range(dim)
             ]
-    rows = sorted(cent.items())
-    if cache_key is not None:
-        _COARSE_CACHE[cache_key] = rows
-    return rows
+    return sorted(cent.items())
 
 
 def _fixture_key(sf_dir: str):
     """Identity of the embeddings fixture + the training hyperparams:
     `catalog.fixture_stat`'s (path, shallow (name, size, mtime_ns)
-    listing) — the shared staleness-proof, URI-capable key every
-    driver-side fixture cache uses — extended with the coarse AND
-    sub-codebook hyperparams so retuning either quantizer re-keys the
-    model and index caches."""
+    listing) — the staleness-proof, URI-capable fixture key — extended
+    with the coarse AND sub-codebook hyperparams so retuning either
+    quantizer re-keys the index tree."""
     from ..catalog import fixture_stat
 
     stat = fixture_stat(sf_dir, "embeddings")
@@ -1037,12 +996,6 @@ def _fixture_key(sf_dir: str):
         PQ_TRAIN_ITERS,
         TRAIN_SAMPLE_MOD,
     )
-
-
-def _coarse_model(sf_dir: str, emb: DataFrame) -> list:
-    """The trained coarse codebook [(cell, centroid)], cached per
-    fixture identity (path + mtime + hyperparams)."""
-    return _train_coarse(emb, cache_key=_fixture_key(sf_dir))
 
 
 def _index_name(sf_dir: str) -> str:
@@ -1070,65 +1023,67 @@ def _ivf_index(
     spark: SparkSession,
     sf_dir: str,
     emb: DataFrame,
-    cb: DataFrame,
     *,
     index_root: str | None = None,
     filesystem=None,
     spark_root: str | None = None,
 ):
-    """(cent_rows, codes): the trained coarse model + the per-cell PQ
-    code table, MATERIALIZED TO DISK partitioned by cell — this is the
-    real IVFADC architecture, not just a cache: building the index
-    (coarse training + corpus encode) is the offline step, the index
-    LIVES as a cell-partitioned table, and queries read it back so the
-    probe equi-join prunes to nprobe directories (partition-pruning
-    plan gate in tests/test_ann_quality.py). Keyed by fixture identity
-    (path + mtime + hyperparams + recipe tag) and installed through
-    `index_store` (the _SUCCESS gate, the atomic tmp→final install and
-    race handling, all on `pyarrow.fs`), so racing processes can't
-    interleave a read with a half-written tree and an unchanged corpus
-    never re-encodes. Cell assignment inside the build is the
-    zero-shuffle `_cell_expr` map."""
-    cent_rows = _coarse_model(sf_dir, emb)
-    if not cent_rows:  # empty corpus: no model, no code table
-        return [], None
-    fk = _fixture_key(sf_dir)
-    if fk is None:  # unkeyable fixture: build in memory, no reuse
-        codes = _pq_codes(
-            _assign_cells(emb, cent_rows),
-            cb,
-            carry=("cell",),
-        )
-        return cent_rows, codes
-    # opening the tree finishes/rolls back any interrupted compaction
-    # swap BEFORE the built check: rebuilding over a recoverable base
-    # would produce a fresh sidecar without `compacted_through` and
-    # double-serve the surviving absorbed deltas (r16 review)
-    tree = _open_index(sf_dir, index_root, filesystem, spark_root)
-    if not tree.built:
-        codes = _pq_codes(
-            _assign_cells(emb, cent_rows),
-            cb,
-            carry=("cell",),
-        )
-        # the model sidecar freezes what ENCODED this tree (coarse
-        # centroids + PQ codebook + key), making the index
-        # self-describing: `ivf_index_append` re-reads it to encode
-        # new batches under the exact serving model (r16 — VERDICT
-        # item 4). _train_pq_model is a cache hit here (same key the
-        # caller used to build `cb`).
-        model = _model_dict(
-            tree.name.rpartition("_")[2],  # the 12-hex recipe key
-            cent_rows,
-            _train_pq_model(emb, cache_key=fk),
-        )
-        if not tree.install_base(codes, model, "cell"):
-            # both install attempts failed (transient fs error, no
-            # winner tree either): serve the in-memory frame we just
-            # built instead of crashing on the missing final path —
-            # the next call retries the install
-            return cent_rows, codes
-    return cent_rows, tree.read(spark, "IVF index")
+    """(model, codes): the fixture's trained IVF-PQ model and its
+    per-cell PQ code table, MATERIALIZED TO DISK partitioned by cell —
+    this is the real IVFADC architecture, not just a cache: building
+    the index (coarse + PQ training, corpus encode) is the offline
+    step, the index LIVES as a cell-partitioned table, and queries read
+    it back so the probe equi-join prunes to nprobe directories
+    (partition-pruning plan gate in tests/test_ann_quality.py). Keyed
+    by fixture identity (path + mtime + hyperparams + recipe tag) and
+    installed through `index_store` (the _SUCCESS gate, the atomic
+    tmp→final install and race handling, all on `pyarrow.fs`), so
+    racing processes can't interleave a read with a half-written tree
+    and an unchanged corpus never re-encodes.
+
+    The model has ONE home, the tree's `_MODEL.json` sidecar: the
+    coarse and the PQ training each run once, and only while the tree
+    is not built; `model` is always the sidecar the served codes were
+    encoded under (after a retrain swap, the retrained model). Only an
+    unkeyable fixture or a failed install keeps the freshly trained
+    model and codes in memory, for this call alone. `model` is None
+    for an empty corpus (no seeds, no model, no tree)."""
+    tree = None
+    if _fixture_key(sf_dir) is not None:
+        # opening the tree finishes/rolls back any interrupted
+        # compaction swap BEFORE the built check: rebuilding over a
+        # recoverable base would produce a fresh sidecar without
+        # `compacted_through` and double-serve the surviving absorbed
+        # deltas (r16 review)
+        tree = _open_index(sf_dir, index_root, filesystem, spark_root)
+        if tree.built:
+            return tree.require_model("nothing to serve"), tree.read(
+                spark, "IVF index"
+            )
+    cent_rows = _train_coarse(emb)
+    if not cent_rows:
+        return None, None
+    # the sidecar freezes what ENCODED the tree (coarse centroids + PQ
+    # codebook + key): `ivf_index_append` encodes new batches under it
+    # and every query probes with it (r16 — VERDICT item 4)
+    model = _model_dict(
+        tree.name.rpartition("_")[2] if tree else None,  # 12-hex key
+        cent_rows,
+        _train_pq_model(emb),
+    )
+    codes = _pq_codes(
+        _assign_cells(emb, cent_rows),
+        _sidecar_model(spark, model)[1],
+        carry=("cell",),
+    )
+    if tree is None or not tree.install_base(codes, model, "cell"):
+        # unkeyable fixture, or both install attempts failed (transient
+        # fs error, no winner tree either): serve what was just built
+        # instead of crashing on the missing final path — the next
+        # call trains and installs again
+        return model, codes
+    # a lost install race serves the winner's tree, so its sidecar
+    return tree.model, tree.read(spark, "IVF index")
 
 
 def _model_dict(key: str, cent_rows: list, cb_rows: list) -> dict:
@@ -1146,14 +1101,20 @@ def _model_dict(key: str, cent_rows: list, cb_rows: list) -> dict:
 
 def _sidecar_model(spark: SparkSession, model: dict):
     """(cent_rows, codebook frame) of a sidecar model — what encoded
-    the tree, never a session cache."""
+    the tree."""
     cent_rows = [(c, ce) for c, ce in model["cent"]]
-    cb = local_frame(
-        spark,
-        [(m, cid, ce) for m, cid, ce in model["codebook"]],
-        "m int, cid int, ce array<double>",
+    return cent_rows, _codebook_frame(
+        spark, [(m, cid, ce) for m, cid, ce in model["codebook"]]
     )
-    return cent_rows, cb
+
+
+def _served_model(spark: SparkSession, sf_dir: str, emb: DataFrame):
+    """(cent_rows, codebook frame) the fixture's index tree serves,
+    building the tree first when it is missing; None for an empty
+    corpus. `emb` must be the unfiltered fixture table: it is what the
+    tree encodes, so a caller's own filter never shapes served codes."""
+    model, _ = _ivf_index(spark, sf_dir, emb)
+    return None if model is None else _sidecar_model(spark, model)
 
 
 def ivf_index_append(
@@ -1295,7 +1256,7 @@ def ivf_index_retrain(
       the two-rename window exactly as for compaction (a COMPLETE
       staging tree is the newer state);
     - the new sidecar carries the NEW model (self-describing serving —
-      `query_index_tree` reads it, never the session caches) and names
+      every probe reads the model from the sidecar) and names
       every pre-retrain delta in `compacted_through`: their vectors
       were re-encoded from `emb`, so a crash that leaves the old delta
       trees on disk cannot double-serve them;
@@ -1335,9 +1296,8 @@ def ivf_index_retrain(
     # cluster — run them concurrently on a two-worker pool (guide
     # §2.6; `inheritable_thread_target` per the PySpark threading
     # contract) so one training's jobs back-fill the other's tail.
-    # At fixture scale both assignments are the inlined-literal
-    # `_cell_expr`/broadcast-join forms — no shared mutable state;
-    # models and seeds are driver-held per call.
+    # Neither touches shared mutable state: models and seeds are
+    # driver-held per call.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -1345,27 +1305,22 @@ def ivf_index_retrain(
     with ThreadPoolExecutor(max_workers=2) as tp:
         cent_fut = tp.submit(
             inheritable_thread_target(
-                lambda: _train_coarse(
-                    emb, cache_key=None, seed_by_hash=True
-                )
+                lambda: _train_coarse(emb, seed_by_hash=True)
             )
         )
         cb_fut = tp.submit(
             inheritable_thread_target(
-                lambda: _train_pq_model(
-                    emb, cache_key=None, seed_by_hash=True
-                )
+                lambda: _train_pq_model(emb, seed_by_hash=True)
             )
         )
         new_cent = cent_fut.result()
         new_cb_rows = cb_fut.result()
     if not new_cent:
         return out  # empty corpus: nothing to train, keep serving
-    new_cb = local_frame(
-        spark, new_cb_rows, "m int, cid int, ce array<double>"
-    )
     codes = _pq_codes(
-        _assign_cells(emb, new_cent), new_cb, carry=("cell",)
+        _assign_cells(emb, new_cent),
+        _codebook_frame(spark, new_cb_rows),
+        carry=("cell",),
     )
     through = tuple(sorted(tree.absorbed | set(tree.deltas)))
     new_key = hashlib.md5(
@@ -1404,22 +1359,34 @@ def query_index_tree(
 ) -> DataFrame:
     """Serve IVFADC top-k from an INSTALLED index tree using ONLY its
     `_MODEL.json` sidecar — the self-describing serving path: after a
-    retrain swap the tree's model differs from anything the session
-    trained, so serving must read the model the codes were actually
-    encoded under, never a session cache. `q` carries (qid, qe); the
-    plan is `q_similarity_ivfpq`'s probe — broadcast model tables,
-    cell equi-join against the partition-pruned code table (base +
-    live deltas, `VersionedTree.read`), shared ADC scorer."""
+    retrain swap the tree's model is the retrained one, so serving
+    reads the model the codes were actually encoded under. `q` carries
+    (qid, qe); the plan is `_probe_and_score`, the one the
+    `similarity_ivfpq` entry serves through."""
     tree = _open_index(sf_dir, index_root, filesystem, spark_root)
-    if tree.model is None:
-        raise ValueError(
-            "index tree has no _MODEL.json sidecar — rebuild it"
-        )
-    cent_rows, cb = _sidecar_model(spark, tree.model)
+    model = tree.require_model("build it first")
+    return _probe_and_score(
+        spark, q, model, tree.read(spark, "IVF index"), nprobe, topk
+    )
+
+
+def _probe_and_score(
+    spark: SparkSession,
+    q: DataFrame,
+    model: dict,
+    codes: DataFrame,
+    nprobe: int,
+    topk: int,
+) -> DataFrame:
+    """The one IVFADC probe: broadcast model tables, the cell
+    equi-join against the (partition-pruned) code table, the shared
+    ADC scorer. `model` is the sidecar the codes were encoded under."""
+    cent_rows, cb = _sidecar_model(spark, model)
     cent = local_frame(spark, cent_rows, "cell int, ce array<double>")
-    codes = tree.read(spark, "IVF index")
     dt = _adc_distance_table(q, cb)
     probes = _probe_cells(q, cent, nprobe)
+    # each query meets only its probed cells' codes (a vector lives in
+    # exactly one cell, so no (qid, vec) duplicates)
     probed = codes.join(
         F.broadcast(probes),
         (F.col("cell") == F.col("qcell"))
@@ -1428,200 +1395,55 @@ def query_index_tree(
     return _score_with_adc(probed, dt, topk=topk)
 
 
-def _cell_expr(cent_rows: list, emb_col: str = "embedding") -> "F.Column":
-    """Nearest-trained-centroid cell id as a PURE column expression:
-    the k × dim model is inlined as literals, each distance is the
-    exact sequential fold (identical tree to `_sq_dist`: cast-to-
-    double, subtract, square, strict left fold), and array_min over
-    (dist2, cell) structs is the same tie-break as the oracle's
-    ROW_NUMBER. Zero shuffles — cell assignment at 100 TB is a
-    stateless map over the corpus, not a join (the model rides inside
-    the task binary, the per-row cost is k × dim FLOPs). Built as ONE
-    SQL string: k × dim literals assembled through the Column API cost
-    thousands of py4j round-trips (measured seconds of driver time per
-    build); literals are shortest-round-trip reprs re-parsed by Java,
-    so the doubles are bit-identical."""
-    structs = []
-    for c, ce in cent_rows:
-        arr = "array(" + ",".join(
-            f"CAST('{float(x)!r}' AS DOUBLE)" for x in ce
-        ) + ")"
-        fold = (
-            f"aggregate(zip_with({emb_col}, {arr}, (x, y) -> "
-            f"(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        structs.append(
-            f"named_struct('d', {fold}, 'cell', CAST({int(c)} AS INT))"
-        )
-    return F.expr(f"array_min(array({','.join(structs)})).cell")
+def _assign_cells(df: DataFrame, cent_rows: list) -> DataFrame:
+    """`df` + a `cell` column = id of the nearest trained centroid, one
+    projection at any scale: `df` meets ONE broadcast model row
+    (`array<struct<cell, ce>>`, a `local_frame`, O(nlist × dim) bytes
+    however large the model) and the cell is
 
+        array_min(transform(model, c -> named_struct('d', <fold>,
+                                                     'cell', c.cell))).cell
 
-# above this many inlined doubles (nlist × dim) the `_cell_expr` plan
-# stops being the right physical form: at production scale (nlist 4096,
-# dim 768 → ~3M literals) the expression itself dominates plan size and
-# codegen, so assignment switches to the broadcast-codebook join below
-_CELL_LITERAL_BUDGET = 65536
-
-
-def _assign_cells(
-    df: DataFrame,
-    cent_rows: list,
-    emb_col: str = "embedding",
-    budget: int | None = None,
-) -> DataFrame:
-    """`df` + a `cell` column = id of the nearest trained centroid,
-    with the SAME (dist², cell) tie-break in both physical forms:
-
-    - nlist × dim ≤ budget (every fixture setting): the inlined-literal
-      `_cell_expr` — a stateless zero-shuffle map, the model rides in
-      the task binary;
-    - above the budget: the model becomes a BROADCAST nlist-row table
-      (the form the probe side already uses): a constant-derived-key
-      BroadcastHashJoin fans a NARROW (row id, embedding) projection
-      to its nlist candidates and a groupBy over the synthetic id
-      keeps min(struct(d², cell)) — candidates for a row are
-      co-located in its task, so map-side partial aggregation
-      collapses them to one row per id per partition before the
-      shuffle, and (r14) that shuffle carries 20-byte (id, d², cell)
-      rows, never the payload: the r13 form regrouped
-      min(struct(d², cell, *payload)), so at dim 768 the agg hash map
-      held (and the exchange shipped) the full vectors. The (id →
-      cell) assignment then equi-joins back to the tagged frame —
-      the payload crosses the wire once either way, but the fan-out,
-      the agg buffer, and the struct comparisons are now id-width.
-      Selection is unchanged (min ordering used only the (d², cell)
-      prefix — cell ids are unique per candidate, so the payload
-      fields never broke a tie). Never a nested loop (plan-gated in
-      tests/test_ann_quality.py).
-
-    The join form is row-PRESERVING by construction: the fan-out key
-    and the regroup key are a `monotonically_increasing_id` added
-    before the join (never NULL, unique per row), so rows with NULL
-    or duplicate natural keys — the hostile-fixture families — come
-    out exactly once, just like the literal map (the first cut keyed
-    on `vec_id` and silently dropped NULL-keyed rows and merged
-    duplicates). Because the id is assigned at COMPUTE time, the
-    tagged frame is persisted before it fans out: it has two plan
-    consumers (the narrow argmin aggregate and the final equi-join
-    back), and unpersisted each would recompute the ids from its own
-    scan — under a nondeterministic upstream (any shuffle, AQE
-    coalesce, a retried stage) the two branches could disagree and
-    the inner join would silently drop or mis-assign rows (r14
-    ADVICE). The cache makes one materialization the single source
-    of ids (BlockManager block locks serialize concurrent first
-    computation); storage is MEMORY_AND_DISK so a 100 TB tagged
-    frame degrades to disk, never to wrong rows. Plan-gated: both
-    consumers read InMemoryTableScan.
-
-    The distance folds are the identical expression tree (`_sq_dist`'s
-    strict left fold of (x-y)² over doubles vs `_cell_expr`'s SQL
-    string of the same fold), so assignments are bit-identical —
-    proven by the equality test at a forced-low budget."""
-    if budget is None:
-        budget = _CELL_LITERAL_BUDGET
+    — the (d², cell) tie-break of the oracle's ROW_NUMBER, with NaN
+    distances sorting above every finite one and NULL distances (NULL
+    or short embeddings) below, identically in every caller. No
+    shuffle, no cache, no synthetic id: a one-row model side with no
+    join key keeps every `df` row exactly once, NULL or duplicate
+    natural keys included (plan gate and hostile-row tests in
+    tests/test_ann_quality.py). The model rides the broadcast, not the
+    plan: inlined as literals it would put nlist × dim doubles into
+    every plan that assigns cells."""
     if not cent_rows:
-        # an empty model assigns no cell — explicit NULL column, not
-        # _cell_expr([]) (array_min(array()).cell fails ANALYSIS on
-        # the empty non-struct array; this branch looked supported
-        # but crashed — r13 review finding)
+        # an empty model assigns no cell: a NULL column, no model join
         return df.withColumn("cell", F.lit(None).cast("int"))
-    dim = len(cent_rows[0][1])
-    if len(cent_rows) * dim <= budget:
-        return df.withColumn("cell", _cell_expr(cent_rows, emb_col))
-    spark = df.sparkSession
-    cent = local_frame(spark, cent_rows, "cell int, __ce array<double>")
-    # ONE persisted id frame per semantically-distinct input plan, not
-    # per CALL: the frame depends only on (df, emb_col) — never on the
-    # centroid model — so repeated invocations (bench reps, training
-    # iterations, both IVF miners in one session) reuse the same
-    # corpus-scale cache instead of pinning a fresh copy each time
-    # (r15 review finding: unbounded per-call accumulation). Eager
-    # consumers release through `release_id_cache`, which also evicts
-    # the dict slot so a later call re-materializes rather than
-    # silently recomputing an unpersisted frame per plan branch (the
-    # id-determinism hazard the cache exists to prevent).
-    key = (df.semanticHash(), tuple(df.columns), emb_col)
-    hit = _ID_FRAME_CACHE.get(key)
-    tagged = None
-    slot_key = key
-    if hit is not None:
-        src, cached = hit
-        lvl = cached.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            # NOTE: is_cached stays True after an external clearCache
-            # (stale flag); storageLevel is the live signal — its
-            # memory/disk bits drop to NONE on eviction.
-            # storage was evicted EXTERNALLY (spark.catalog.clearCache()
-            # — bench reps, smoke measurements, tests all do this):
-            # reusing the frame would recompute monotonically_increasing_id
-            # per plan branch, the exact hazard the cache prevents.
-            # Drop the slot and re-materialize (r15 review finding).
-            _ID_FRAME_CACHE.pop(key, None)
-        elif not src.sameSemantics(df):
-            # 32-bit semanticHash collision: the slot holds a DIFFERENT
-            # query's corpus. Leave the slot for its rightful owner and
-            # build an un-slotted frame for this caller (r15 review
-            # finding; sameSemantics is an exact plan comparison, so
-            # this branch only costs a driver-side check per call).
-            slot_key = None
-        else:
-            tagged = cached
-    if tagged is None:
-        tagged = df.withColumn(
-            "__rid", F.monotonically_increasing_id()
-        ).persist()
-        if slot_key is not None:
-            _ID_FRAME_CACHE[slot_key] = (df, tagged)
-    narrow = tagged.select("__rid", emb_col)
-    joined = (
-        narrow.withColumn("_x", F.col("__rid") % F.lit(1))
-        .join(
-            F.broadcast(
-                cent.withColumn(
-                    "_x", F.col("cell").cast("bigint") % F.lit(1)
-                )
-            ),
-            "_x",
-        )
+    model = local_frame(
+        df.sparkSession,
+        [
+            (
+                [
+                    {"cell": int(c), "ce": [float(x) for x in ce]}
+                    for c, ce in cent_rows
+                ],
+            )
+        ],
+        "__model array<struct<cell:int, ce:array<double>>>",
     )
-    d2 = _sub_sq_dist(F.col(emb_col), F.col("__ce"))
-    assign = (
-        joined.groupBy("__rid")
-        .agg(
-            F.min(
-                F.struct(d2.alias("d"), F.col("cell").alias("cell"))
-            ).alias("b")
-        )
-        .select("__rid", F.col("b.cell").alias("cell"))
+    # the exact-order squared distance to model row `c`: the tree of
+    # `_sq_dist` (cast to double, subtract, square, strict left fold)
+    fold = (
+        "aggregate(zip_with(embedding, c.ce, (x, y) -> "
+        "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
+        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-    out = tagged.join(assign, "__rid").select(*df.columns, "cell")
-    # expose the cache handle + key so EAGER consumers (training loops
-    # that fully drain the assignment per iteration) can release the
-    # corpus-scale cache via `release_id_cache` instead of pinning it
-    # for the session — lazy/query-shaped consumers leave it pinned
-    # (and keyed-shared), which is the price of id determinism
-    out._id_cache = tagged
-    out._id_cache_key = slot_key
-    return out
-
-
-def release_id_cache(assigned: DataFrame) -> None:
-    """Unpersist an `_assign_cells` join-form id frame AND evict its
-    keyed slot, so the next call re-materializes instead of reusing an
-    unpersisted frame (which would recompute per plan branch — exactly
-    the nondeterministic-id hazard the cache exists to prevent). Only
-    safe for consumers that have fully drained the assignment."""
-    cache = getattr(assigned, "_id_cache", None)
-    if cache is None:
-        return
-    cache.unpersist()
-    key = getattr(assigned, "_id_cache_key", None)
-    # pop only if the slot still holds THIS frame — an evicted-and-
-    # re-materialized slot belongs to a newer consumer (r15 review)
-    slot = _ID_FRAME_CACHE.get(key)
-    if slot is not None and slot[1] is cache:
-        _ID_FRAME_CACHE.pop(key, None)
+    cell = F.expr(
+        f"array_min(transform(__model, c -> named_struct('d', {fold}, "
+        "'cell', c.cell))).cell"
+    )
+    return (
+        df.crossJoin(F.broadcast(model))
+        .withColumn("cell", cell)
+        .drop("__model")
+    )
 
 
 def q_similarity_ivfpq(
@@ -1668,37 +1490,32 @@ def q_similarity_ivfpq(
     with the r14 TRAINED sub-codebooks — up from 0.36/0.56/0.72 with
     seed sub-codebooks (r12-13) and 0.16/0.24/0.36 with the untrained
     coarse stand-in (r11); strict monotone gate in
-    tests/test_ann_quality.py."""
+    tests/test_ann_quality.py.
+
+    The entry is "ensure the index tree is built, then probe it":
+    `_ivf_index` trains and installs only when the tree is missing,
+    and the probe scores the tree's codes with the tree's own sidecar
+    model (`_probe_and_score`, shared with `query_index_tree`), so a
+    retrained tree is served with its retrained model."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = _pq_codebook(emb, cache_key=_fixture_key(sf_dir))
-    cent_rows, codes = _ivf_index(
+    model, codes = _ivf_index(
         spark,
         sf_dir,
         emb,
-        cb,
         index_root=index_root,
         filesystem=filesystem,
         spark_root=spark_root,
     )
-    if not cent_rows:
+    if model is None:
         # empty corpus (empty filter result / pruned-away partition):
         # degrade to zero neighbors with the normal output schema, the
         # same contract as every other operator on empty input
         return local_frame(
             spark, [], "qid bigint, nid bigint, adc_micro bigint, rank int"
         )
-    cent = local_frame(spark, cent_rows, "cell int, ce array<double>")
-    q = _queries_df(emb)
-    dt = _adc_distance_table(q, cb)
-    probes = _probe_cells(q, cent, nprobe)
-    # the IVF probe: each query meets only its probed cells' codes (a
-    # vector lives in exactly one cell, so no (qid, vec) duplicates)
-    probed = codes.join(
-        F.broadcast(probes),
-        (F.col("cell") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("qid")),
+    return _probe_and_score(
+        spark, _queries_df(emb), model, codes, nprobe, topk
     )
-    return _score_with_adc(probed, dt, topk=topk)
 
 
 def _coarse_train_sql(
@@ -2059,18 +1876,22 @@ def q_hard_negative_mining_ivf(
     are byte-for-byte `q_hard_negative_mining`'s, so recall loss is
     exactly the probe's cell-miss rate and nothing else (equivalence
     gate: nprobe = nlist reproduces brute force row-for-row). The
-    oracle replays coarse training, assignment, probe ranking, and
-    rerank CTE-for-CTE."""
-    emb = load_table(spark, sf_dir, "embeddings").withColumn(
-        "nrm", _l2(F.col("embedding"))
-    )
-    cent_rows = _coarse_model(sf_dir, emb)
-    if not cent_rows:
+    coarse model is the one the fixture's index tree serves
+    (`_served_model`). The oracle replays coarse training, assignment,
+    probe ranking, and rerank CTE-for-CTE."""
+    raw = load_table(spark, sf_dir, "embeddings")
+    served = _served_model(spark, sf_dir, raw)
+    if served is None:
         return local_frame(
             spark, [], "qid bigint, nid bigint, cos_sim double, rank int"
         )
+    cent_rows = served[0]
+    emb = raw.withColumn("nrm", _l2(F.col("embedding")))
     assigned = _assign_cells(emb, cent_rows)
-    q = assigned.filter(F.col("vec_id") % QUERY_MOD == 0).select(
+    # the query side needs no cell (the probe ranks centroids), so it
+    # reads `emb`: a frame derived from `assigned` would carry the
+    # model join into both query-side consumers
+    q = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
         F.col("label").alias("qlabel"),
@@ -2269,21 +2090,22 @@ def q_bitext_margin_pairs_ivf(
     determinism discipline (integer micro-cosines, one double
     division) are identical, and probing ALL cells reproduces the
     brute-force output row-for-row (equivalence gate in tests). The
-    oracle replays coarse training, B-side assignment, probe ranking,
-    and the margin chain CTE-for-CTE."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id").isNotNull())
-        .withColumn("nrm", _l2(F.col("embedding")))
-    )
-    cent_rows = _coarse_model(sf_dir, emb)
-    if not cent_rows:
+    coarse model is the one the fixture's index tree serves
+    (`_served_model`). The oracle replays coarse training, B-side
+    assignment, probe ranking, and the margin chain CTE-for-CTE."""
+    raw = load_table(spark, sf_dir, "embeddings")
+    served = _served_model(spark, sf_dir, raw)
+    if served is None:
         return local_frame(
             spark,
             [],
             "qid bigint, nid bigint, cos_micro bigint,"
             " margin_micro bigint, rank int",
         )
+    cent_rows = served[0]
+    emb = raw.filter(F.col("vec_id").isNotNull()).withColumn(
+        "nrm", _l2(F.col("embedding"))
+    )
     side_b = emb.filter(F.col("label") % 2 == 1)
     q = (
         emb.filter(
@@ -2596,14 +2418,14 @@ def q_ann_retrain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     200‰, over the {RETRAIN_STALENESS_MILLI}‰ threshold), and measure
     again — two rows (phase ∈ before/after). Both servings go through
     `query_index_tree`, i.e. the model each tree's sidecar actually
-    stores — after the swap that is the retrained model, which no
-    session cache holds.
+    stores — after the swap that is the retrained model.
 
     Composition-priced BY DESIGN (the `retrieval_quality_report`
     class): every invocation runs the full lifecycle in a fresh
     private index root — two trainings, two corpus encodes, the exact
     quadratic truth, two probes — because auditing a cached index
-    would fake the audit. The report frame is drained to a local
+    would fake the audit. The base training included: no model
+    outlives its tree, so the private root trains from scratch. The report frame is drained to a local
     literal before the private tree is deleted.
 
     The GATED number is `distortion_micro_avg` — the k-means objective
@@ -2684,11 +2506,8 @@ def q_ann_retrain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # truth side on a side thread: its jobs backfill the cluster
         # while the base tree trains/encodes/installs
         exact_f = pool.submit(inheritable_thread_target(exact.count))
-        cb = _pq_codebook(emb, cache_key=_fixture_key(sf_dir))
-        cent_rows, _ = _ivf_index(
-            spark, sf_dir, emb, cb, index_root=root
-        )
-        if not cent_rows:
+        model, _ = _ivf_index(spark, sf_dir, emb, index_root=root)
+        if model is None:
             exact_f.result()
             exact.unpersist()
             return local_frame(spark, [], schema)
@@ -2696,8 +2515,8 @@ def q_ann_retrain_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         name = _index_name(sf_dir)
 
         def _serving_cent():
-            # the model the tree ACTUALLY serves (sidecar), never a
-            # session cache — the self-describing-index principle
+            # the model the tree ACTUALLY serves (its sidecar) — the
+            # self-describing-index principle
             return [(c, ce) for c, ce in store.read_model(name)["cent"]]
 
         # distortion-before reads the base sidecar just installed;

@@ -1174,14 +1174,20 @@ def lsh_index_build(
     a band-partitioned (band, bkey, m) parquet tree + a `_MODEL.json`
     sidecar carrying the band-family key and the indexed doc count
     (the staleness denominator). Index size is BUCKET-scale (≤ 4
-    rows per doc, collapsing under duplication), never pair-scale."""
+    rows per doc, collapsing under duplication), never pair-scale.
+    A rebuild over an installed index replaces it, live deltas
+    included, through `VersionedTree.swap` — the crash-safe path the
+    IVF index's compaction and retrain use; a plain install would
+    lose the move to the complete old base and keep serving it."""
     tree = _open_lsh(sf_dir, index_root, filesystem, spark_root)
     n_docs = docs.count()
-    ok = tree.install_base(
-        _lsh_bucket_minima(docs),
-        {"model_key": _lsh_model_key(), "n_docs": n_docs},
-        "band",
-    )
+    frame = _lsh_bucket_minima(docs)
+    model = {"model_key": _lsh_model_key(), "n_docs": n_docs}
+    if tree.built:
+        tree.swap(frame, model, "band")
+        ok = True
+    else:
+        ok = tree.install_base(frame, model, "band")
     return {"installed": ok, "name": tree.name, "n_docs": n_docs}
 
 

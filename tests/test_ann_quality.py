@@ -632,19 +632,14 @@ def test_ivf_code_table_partition_prunes_on_probe(spark, sf_dir, tmp_path):
 
     from gomysql2pg_spark.catalog import load_table
     from gomysql2pg_spark.operators.similarity import (
-        _cell_expr,
-        _coarse_model,
-        _pq_codebook,
+        _assign_cells,
         _pq_codes,
+        _served_model,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    rows = _coarse_model(sf_dir, emb)
-    codes = _pq_codes(
-        emb.withColumn("cell", _cell_expr(rows)),
-        _pq_codebook(emb),
-        carry=("cell",),
-    )
+    rows, cb = _served_model(spark, sf_dir, emb)
+    codes = _pq_codes(_assign_cells(emb, rows), cb, carry=("cell",))
     out = str(tmp_path / "codes")
     codes.write.partitionBy("cell").parquet(out)
     full = spark.read.parquet(out)
@@ -834,71 +829,136 @@ def test_fixture_key_catches_same_second_rewrite(tmp_path):
     assert SIM._fixture_key(str(tmp_path / "nope")) is None
 
 
-def test_assign_cells_join_form_equals_literal_form(spark, sf_dir):
-    """The `_cell_expr` literal ceiling (r12 verdict item 3): above
-    the literal budget (production nlist × dim would inline ~3M
-    doubles into the plan) cell assignment switches to the broadcast-
-    codebook join. Forced-low budget → join form; assignments must be
-    IDENTICAL to the literal form for every vector (same strict-left-
-    fold distance tree, same (d², cell) tie-break), the join must
-    compile to a BroadcastHashJoin (never a nested loop / cartesian),
-    and the literal form must stay join-free."""
-    from gomysql2pg_spark.catalog import load_table
+def _py_cell(e, cent_rows):
+    """Independent reference for `_assign_cells`: the (d², cell)
+    argmin over float64, d² the strict left fold of (x - y)². A NULL
+    distance (NULL, short or NULL-holding embedding) sorts below every
+    number and NaN above, as in Spark's ordering; ties go to the
+    smaller cell."""
+    import math
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = SIM._coarse_model(sf_dir, emb)
-    assert rows
-    lit_df = SIM._assign_cells(emb, rows)  # fixture scale ≤ budget
-    join_df = SIM._assign_cells(emb, rows, budget=0)  # forced join form
-    assert lit_df.columns == join_df.columns == emb.columns + ["cell"]
-    lit_plan = lit_df._jdf.queryExecution().executedPlan().toString()
-    join_plan = join_df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in lit_plan
-    assert "BroadcastHashJoin" in join_plan
-    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-        assert bad not in join_plan, join_plan
-    # r14 narrow-regroup pin: the fan-out/argmin aggregate is id-width
-    # — every aggregate node in the regroup OUTPUTS only (__rid,
-    # min/cell), never the payload columns (the r13 form regrouped the
-    # full row, so at dim 768 the agg hash map and its exchange
-    # shipped every vector). The distance EXPRESSION inside the struct
-    # references the embedding (it must — it computes d²); the output
-    # schema is what rides the exchange.
+    def key(row):
+        c, ce = row
+        if e is None or len(e) != len(ce) or None in e:
+            return (0, 0.0, c)
+        d = 0.0
+        for x, y in zip(e, ce):
+            d = d + (float(x) - y) * (float(x) - y)
+        return (2, 0.0, c) if math.isnan(d) else (1, d, c)
+
+    return min(cent_rows, key=key)[0]
+
+
+def _assert_one_projection(df):
+    """The assignment plan: no shuffle, no cartesian product, no cache
+    — the model reaches the scan as one broadcast row."""
     import re as _re
 
-    agg_lines = [
-        ln for ln in join_plan.splitlines() if "min(struct(d" in ln
-    ]
-    assert agg_lines, join_plan
-    for ln in agg_lines:
-        m = _re.search(r"output=\[([^\]]*)\]", ln)
-        assert m, ln
-        out_cols = m.group(1)
-        assert "label" not in out_cols and "embedding" not in out_cols, (
-            out_cols
-        )
-        assert "__rid" in out_cols, out_cols
-    lit = {r["vec_id"]: r["cell"] for r in lit_df.select("vec_id", "cell").collect()}
-    jn = {r["vec_id"]: r["cell"] for r in join_df.select("vec_id", "cell").collect()}
-    assert lit == jn and len(lit) == emb.count()
-    # a payload column survives the join form unchanged
-    lbl = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
-    jl = {r["vec_id"]: r["label"] for r in join_df.select("vec_id", "label").collect()}
-    assert jl == lbl
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not _re.search(r"(?<!Broadcast)Exchange", plan), plan
+    for bad in ("CartesianProduct", "InMemoryTableScan"):
+        assert bad not in plan, plan
+    assert "BroadcastExchange" in plan, plan
 
 
-def test_assign_cells_join_form_trains_identically(spark, sf_dir, monkeypatch):
-    """End-to-end at the forced-low budget: a full `_train_coarse` run
-    through the join-form assignment yields the bit-identical model
-    the literal form trains (the oracle replays training CTE-for-CTE,
-    so the model must not depend on the physical assignment plan)."""
+def _check_assignment(emb, rows):
+    """Run `_assign_cells` on `emb` and check it row by row against
+    `_py_cell`: same columns plus `cell`, every input row exactly once
+    (NULL and duplicate keys included), the plan one projection.
+    Returns the sorted (vec_id, cell) pairs."""
+    out = SIM._assign_cells(emb, rows)
+    assert out.columns == emb.columns + ["cell"]
+    _assert_one_projection(out)
+    # rows are matched on (vec_id, repr(embedding)): repr keeps NaN
+    # comparable, where NaN != NaN would fail a tuple comparison
+    got = sorted(
+        ((r["vec_id"], repr(r["embedding"]), r["cell"]) for r in out.collect()),
+        key=repr,
+    )
+    want = sorted(
+        (
+            (r["vec_id"], repr(r["embedding"]), _py_cell(r["embedding"], rows))
+            for r in emb.collect()
+        ),
+        key=repr,
+    )
+    assert got == want
+    assert len(got) == emb.count()
+    return [(v, c) for v, _, c in got]
+
+
+def test_assign_cells_join_form_equals_literal_form(spark, sf_dir):
+    """The one assignment form — a projection against the broadcast
+    model row — picks the cell a literal float64 (d², cell) argmin
+    picks for every fixture vector under the trained model, keeps
+    every row and payload column, and plans as one projection with no
+    shuffle, cartesian product or cache."""
     from gomysql2pg_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    want = SIM._train_coarse(emb)  # fresh, uncached (no cache_key)
-    monkeypatch.setattr(SIM, "_CELL_LITERAL_BUDGET", 0)
-    got = SIM._train_coarse(emb)
-    assert got == want
+    rows = SIM._train_coarse(emb)
+    assert rows
+    _check_assignment(emb, rows)
+    out = SIM._assign_cells(emb, rows)
+    lbl = {r["vec_id"]: r["label"] for r in emb.collect()}
+    assert {r["vec_id"]: r["label"] for r in out.collect()} == lbl
+
+
+def test_assign_cells_join_form_trains_identically(spark, sf_dir):
+    """End to end: `_train_coarse`, whose Lloyd passes assign through
+    `_assign_cells`, trains the bit-identical model the oracle's
+    training CTEs replay on the fixture (the oracle replays training
+    CTE-for-CTE, so the model must not depend on the physical
+    assignment plan)."""
+    import duckdb
+
+    from gomysql2pg_spark.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    got = dict(SIM._train_coarse(emb))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
+    )
+    want = con.execute(
+        f"WITH {SIM._coarse_train_sql()} SELECT cell, ce "
+        f"FROM cent{SIM.IVF_TRAIN_ITERS} ORDER BY cell"
+    ).fetchall()
+    con.close()
+    assert got and got == {c: list(ce) for c, ce in want}
+
+
+def test_ivf_tree_build_trains_each_model_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A `similarity_ivfpq` tree build runs the coarse and the PQ Lloyd
+    training once each — the built tree's sidecar is then the model
+    every caller reads — and a query against the built tree trains
+    nothing and serves the same rows."""
+    calls = []
+
+    def counted(name):
+        real = getattr(SIM, name)
+
+        def run(*a, **k):
+            calls.append(name)
+            return real(*a, **k)
+
+        return run
+
+    for name in ("_train_coarse", "_train_pq_model"):
+        monkeypatch.setattr(SIM, name, counted(name))
+    root = str(tmp_path / "ann")
+    first = sorted(
+        map(tuple, SIM.q_similarity_ivfpq(spark, sf_dir, index_root=root).collect())
+    )
+    assert sorted(calls) == ["_train_coarse", "_train_pq_model"]
+    calls.clear()
+    again = sorted(
+        map(tuple, SIM.q_similarity_ivfpq(spark, sf_dir, index_root=root).collect())
+    )
+    assert calls == [] and again == first and first
 
 
 def test_ivf_index_accepts_file_uri_root(spark, sf_dir, tmp_path):
@@ -976,7 +1036,6 @@ def test_ivf_index_losing_a_race_trusts_the_winner(spark, sf_dir, tmp_path):
     from gomysql2pg_spark.catalog import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = SIM._pq_codebook(emb)
     fk = SIM._fixture_key(sf_dir)
     import hashlib
 
@@ -985,10 +1044,10 @@ def test_ivf_index_losing_a_race_trusts_the_winner(spark, sf_dir, tmp_path):
     stale.mkdir()
     (stale / "part-junk.parquet").write_bytes(b"not parquet")
     racing = MoveOnceFails(subfs)
-    cent, codes = SIM._ivf_index(
-        spark, sf_dir, emb, cb, filesystem=racing, **kw
+    model, codes = SIM._ivf_index(
+        spark, sf_dir, emb, filesystem=racing, **kw
     )
-    assert racing.failed and codes is not None
+    assert racing.failed and model and codes is not None
     assert (stale / "_SUCCESS").is_file()  # fresh tree installed
     assert not (stale / "part-junk.parquet").exists()  # junk evicted
     n_codes = codes.count()
@@ -1000,9 +1059,9 @@ def test_ivf_index_losing_a_race_trusts_the_winner(spark, sf_dir, tmp_path):
     # is discarded, winner served, winner bytes untouched
     marker_mtime = (stale / "_SUCCESS").stat().st_mtime_ns
     racing2 = MoveOnceFails(subfs)
-    # force a rebuild attempt by removing only the in-memory model
-    # cache (the on-disk _SUCCESS short-circuits before any move, so
-    # simulate the race window: hide _SUCCESS from the FIRST check)
+    # force a rebuild attempt (the on-disk _SUCCESS short-circuits
+    # before any move, so simulate the race window: hide _SUCCESS from
+    # the FIRST check)
     class HideSuccessOnce:
         def __init__(self, inner):
             self._inner = inner
@@ -1019,21 +1078,22 @@ def test_ivf_index_losing_a_race_trusts_the_winner(spark, sf_dir, tmp_path):
         def __getattr__(self, name):
             return getattr(self._inner, name)
 
-    cent2, codes2 = SIM._ivf_index(
-        spark, sf_dir, emb, cb, filesystem=HideSuccessOnce(MoveOnceFails(subfs)), **kw
+    model2, codes2 = SIM._ivf_index(
+        spark, sf_dir, emb, filesystem=HideSuccessOnce(MoveOnceFails(subfs)), **kw
     )
     assert codes2 is not None and codes2.count() == n_codes
+    # the loser serves the winner's tree and so the winner's sidecar
+    assert model2 == model
     assert (stale / "_SUCCESS").stat().st_mtime_ns == marker_mtime
     assert not [d for d in os.listdir(base) if ".tmp-" in d]
 
 
 def test_assign_cells_forms_agree_on_poisoned_vectors(spark):
-    """Both assignment forms must pick the SAME cell even for vectors
-    carrying NaN/Inf components (a NaN distance sorts above every
-    finite distance in both Spark's struct-min ordering and
-    array_min, so a poisoned vector deterministically falls to the
-    lowest cell id among all-NaN candidates instead of diverging
-    between the two plans)."""
+    """Vectors carrying NaN/Inf components get the reference argmin's
+    cell: a NaN distance sorts above every finite distance in
+    `array_min`, so a poisoned vector deterministically falls to the
+    lowest cell id among its all-NaN candidates, and an all-Inf row
+    ties on every cell and takes the smallest."""
     emb = spark.createDataFrame(
         [
             (0, [float("nan")] * 64),
@@ -1045,50 +1105,32 @@ def test_assign_cells_forms_agree_on_poisoned_vectors(spark):
         "vec_id bigint, embedding array<float>",
     )
     rows = [(0, [0.0] * 64), (1, [1.0] * 64), (2, [2.0] * 64)]
-    lit = {
-        r["vec_id"]: r["cell"]
-        for r in SIM._assign_cells(emb, rows).collect()
-    }
-    jn = {
-        r["vec_id"]: r["cell"]
-        for r in SIM._assign_cells(emb, rows, budget=0).collect()
-    }
-    assert lit == jn and len(lit) == 5
-    assert lit[1] == 1 and lit[4] == 0  # finite rows: true nearest
+    cells = dict(_check_assignment(emb, rows))
+    assert len(cells) == 5
+    assert cells[1] == 1 and cells[4] == 0  # finite rows: true nearest
 
 
 def test_assign_cells_join_form_preserves_hostile_rows(spark):
-    """The join form regroups on a synthetic per-row id, so rows with
-    NULL or DUPLICATE natural keys — which an equi-join/groupBy on
-    vec_id would silently drop or merge — come out exactly once with
-    the same cell as the literal map, NULL embeddings included."""
+    """Rows with NULL or DUPLICATE natural keys — which an
+    equi-join/groupBy on vec_id would silently drop or merge — come
+    out exactly once with the reference argmin's cell, NULL and short
+    embeddings included (their distances are NULL on every cell)."""
     emb = spark.createDataFrame(
         [
             (None, [1.0] * 64),
             (7, [1.0] * 64),
             (7, [0.4] * 64),
             (3, None),
+            (5, [2.0] * 10),
+            (6, [1.0] * 63 + [None]),
             (4, [0.5] * 64),
         ],
         "vec_id bigint, embedding array<float>",
     )
-    rows = [(0, [0.0] * 64), (1, [1.0] * 64), (2, [2.0] * 64)]
-
-    def canon(df):
-        rows_out = [
-            (
-                r["vec_id"],
-                None if r["embedding"] is None else r["embedding"][0],
-                r["cell"],
-            )
-            for r in df.collect()
-        ]
-        return sorted(rows_out, key=str)
-
-    lit = canon(SIM._assign_cells(emb, rows))
-    jn = canon(SIM._assign_cells(emb, rows, budget=0))
-    assert lit == jn
-    assert len(jn) == 5  # nothing dropped, nothing merged
+    rows = [(2, [2.0] * 64), (0, [0.0] * 64), (1, [1.0] * 64)]
+    got = _check_assignment(emb, rows)
+    assert len(got) == 7  # nothing dropped, nothing merged
+    assert sorted(c for v, c in got if v == 7) == [0, 1]
 
 
 def test_ivf_index_serves_in_memory_codes_when_install_fails(
@@ -1116,17 +1158,15 @@ def test_ivf_index_serves_in_memory_codes_when_install_fails(
             return getattr(self._inner, name)
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cb = SIM._pq_codebook(emb)
-    cent, codes = SIM._ivf_index(
+    model, codes = SIM._ivf_index(
         spark,
         sf_dir,
         emb,
-        cb,
         index_root="broken",
         filesystem=MoveAlwaysFails(subfs),
         spark_root=str(base),
     )
-    assert cent and codes is not None
+    assert model and codes is not None
     assert codes.count() == emb.count()  # the in-memory frame works
 
 
@@ -1291,90 +1331,6 @@ def test_bucket_pairs_drops_null_doc_ids(spark):
     )
     pairs = {(r.da, r.db) for r in _bucket_pairs(bands).collect()}
     assert pairs == {(1, 2)}
-
-
-def test_assign_cells_join_form_caches_tagged_ids(spark):
-    """The join form's monotonically_increasing_id frame feeds TWO
-    plan branches (argmin aggregate + final equi-join). Unpersisted,
-    each branch would recompute the ids from its own scan and a
-    nondeterministic upstream could make them disagree — silent row
-    drops through the inner join (r14 ADVICE). Pin that both branches
-    read the cached materialization."""
-    from gomysql2pg_spark.operators import similarity as SIM
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 0.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    rows = [(0, [0.0, 0.0]), (1, [5.0, 0.0])]
-    out = SIM._assign_cells(emb, rows, budget=0)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    # and the cache fixes ids: result still row-preserving and exact
-    got = {(r["vec_id"], r["cell"]) for r in out.collect()}
-    assert got == {(0, 0), (1, 0), (2, 0), (3, 1), (4, 1), (5, 1)}
-    spark.catalog.clearCache()
-
-
-def test_assign_cells_cache_survives_external_clearcache(spark):
-    """spark.catalog.clearCache() (bench reps, smoke runs, tests) can
-    evict the keyed id frame's storage while the dict slot survives.
-    A hit on an UNPERSISTED frame would recompute the ids per plan
-    branch — the hazard the cache exists to prevent — so the hit path
-    must detect the eviction and re-materialize (r15 review)."""
-    from gomysql2pg_spark.operators import similarity as SIM
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 0.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    rows = [(0, [0.0, 0.0]), (1, [5.0, 0.0])]
-    out1 = SIM._assign_cells(emb, rows, budget=0)
-    out1.collect()
-    spark.catalog.clearCache()  # external eviction, dict slot survives
-    out2 = SIM._assign_cells(emb, rows, budget=0)
-    plan = out2._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("InMemoryTableScan") >= 2, plan
-    got = {(r["vec_id"], r["cell"]) for r in out2.collect()}
-    assert got == {(0, 0), (1, 0), (2, 0), (3, 1), (4, 1), (5, 1)}
-    spark.catalog.clearCache()
-    SIM._ID_FRAME_CACHE.clear()
-
-
-def test_assign_cells_cache_rejects_semantic_hash_collision(spark):
-    """The cache key leads with the 32-bit semanticHash; on a
-    collision the slot holds a DIFFERENT query's corpus and must NOT
-    be reused (sameSemantics is the exact check). Simulated by
-    planting a wrong-source entry under the victim's key (r15
-    review)."""
-    from gomysql2pg_spark.operators import similarity as SIM
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 0.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    other = spark.createDataFrame(
-        [(99, [9.0, 9.0])], "vec_id long, embedding array<double>"
-    )
-    rows = [(0, [0.0, 0.0]), (1, [5.0, 0.0])]
-    key = (emb.semanticHash(), tuple(emb.columns), "embedding")
-    planted = other.withColumn(
-        "__rid", __import__("pyspark").sql.functions
-        .monotonically_increasing_id()
-    ).persist()
-    planted.count()
-    SIM._ID_FRAME_CACHE[key] = (other, planted)
-    try:
-        out = SIM._assign_cells(emb, rows, budget=0)
-        got = {(r["vec_id"], r["cell"]) for r in out.collect()}
-        # correct corpus, not the planted one
-        assert got == {(0, 0), (1, 0), (2, 0), (3, 1), (4, 1), (5, 1)}
-        # the rightful owner's slot was left alone
-        assert SIM._ID_FRAME_CACHE[key][1] is planted
-    finally:
-        planted.unpersist()
-        SIM._ID_FRAME_CACHE.clear()
-        spark.catalog.clearCache()
 
 
 def test_sampled_training_matches_oracle_and_actually_samples(spark):

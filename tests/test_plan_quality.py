@@ -703,12 +703,14 @@ def test_ivfpq_codes_partitioned_by_cell_prune_on_probe(
     of |cell| code rows instead of the lake."""
     from gomysql2pg_spark.catalog import load_table
     from gomysql2pg_spark.operators.similarity import (
-        _pq_codebook,
+        _codebook_frame,
         _pq_codes,
+        _train_pq_model,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    codes = _pq_codes(emb, _pq_codebook(emb), carry=("label",))
+    cb = _codebook_frame(spark, _train_pq_model(emb))
+    codes = _pq_codes(emb, cb, carry=("label",))
     path = str(tmp_path / "pq_codes_by_cell")
     codes.write.partitionBy("label").parquet(path)
 
@@ -844,7 +846,7 @@ def _assert_empty_jvm_frame(spark, df, schema, group):
 def test_local_frame_empty_rows_stay_on_the_jvm(spark):
     """An empty driver-row table (empty corpus / pruned-away
     partition) is `LocalTableScan <empty>` with the DECLARED schema —
-    the contract the r13 review forced on `_cell_expr([])`. The pandas
+    the contract the r13 review forced on empty models. The pandas
     path cannot give it: `createDataFrame(pandas)` uses Arrow only for
     a non-empty frame and otherwise takes the Python-list path."""
     from gomysql2pg_spark.functions.consume import local_frame
@@ -1034,11 +1036,6 @@ _PERSIST_PIN_ALLOWLIST = {
         "KN model adds two by-product aggregates over the SAME "
         "stream; docstring documents the discipline)"
     ),
-    ("operators/similarity.py", "_assign_cells"): (
-        "documented eviction/collision-safe id-frame pin (r15 O2): "
-        "both consumers of the monotonic-id frame must read the SAME "
-        "materialization or rows could be dropped/duplicated"
-    ),
 }
 
 
@@ -1221,6 +1218,55 @@ def test_no_module_imports_another_modules_private_names():
         f"unexpected={sorted(found - _PRIVATE_IMPORT_ALLOWLIST)} "
         f"stale_allowlist={sorted(_PRIVATE_IMPORT_ALLOWLIST - found)}"
     )
+
+
+def test_no_module_level_mutable_containers():
+    """The engine holds no driver-side state of its own: no package
+    module may bind an EMPTY `{}`, `[]`, `dict()`, `set()` or `list()`
+    at module level, the shape of a cache or registry that grows for
+    the life of the session with no bound and no owner (the trained
+    IVF-PQ model lives in its index tree, not in a dict). No
+    allowlist: state that must outlive a call belongs to an owner
+    with a bound, not to a module."""
+    import ast
+    import pathlib
+
+    import gomysql2pg_spark
+
+    def empty(v) -> bool:
+        if isinstance(v, (ast.Dict, ast.List, ast.Set)):
+            return not (getattr(v, "keys", None) or getattr(v, "elts", None))
+        return (
+            isinstance(v, ast.Call)
+            and isinstance(v.func, ast.Name)
+            and v.func.id in ("dict", "set", "list")
+            and not v.args
+            and not v.keywords
+        )
+
+    def module_level(body):
+        # module statements, including those under module-level
+        # if/try/with blocks, but never function or class bodies
+        for node in body:
+            yield node
+            if isinstance(node, (ast.If, ast.Try, ast.With, ast.For)):
+                for field in ("body", "orelse", "finalbody"):
+                    yield from module_level(getattr(node, field, []))
+                for h in getattr(node, "handlers", []):
+                    yield from module_level(h.body)
+
+    root = pathlib.Path(gomysql2pg_spark.__file__).parent
+    found = []
+    for py in sorted(root.rglob("*.py")):
+        tree = ast.parse(py.read_text())
+        for node in module_level(tree.body):
+            if (
+                isinstance(node, (ast.Assign, ast.AnnAssign))
+                and node.value is not None
+                and empty(node.value)
+            ):
+                found.append((py.relative_to(root).as_posix(), node.lineno))
+    assert found == [], found
 
 
 def test_q11_single_corpus_pass_via_reused_exchange(spark, sf_dir, queries):

@@ -406,6 +406,41 @@ def test_ivf_index_retrain_pre_swap_barrier(spark, sf_dir, tmp_path):
     )
 
 
+def test_ivfpq_serves_the_retrained_model(spark, sf_dir, tmp_path):
+    """After a forced retrain swap, the `similarity_ivfpq` entry must
+    score the swapped tree's codes with the tree's own (retrained)
+    sidecar model: non-empty, and row-for-row what `query_index_tree`
+    serves for the same queries. A model kept outside the tree (the
+    first training) probes cell ids the retrained tree does not have
+    and returned zero rows."""
+    import gomysql2pg_spark.operators.similarity as SIM
+    from gomysql2pg_spark.catalog import load_table
+
+    root = str(tmp_path / "ann")
+    before = SIM.q_similarity_ivfpq(spark, sf_dir, index_root=root)
+    assert before.count() > 0
+    emb = load_table(spark, sf_dir, "embeddings")
+    info = SIM.ivf_index_retrain(
+        spark, sf_dir, emb, force=True, index_root=root
+    )
+    assert info["retrained"]
+    got = sorted(
+        map(
+            tuple,
+            SIM.q_similarity_ivfpq(spark, sf_dir, index_root=root).collect(),
+        )
+    )
+    want = sorted(
+        map(
+            tuple,
+            SIM.query_index_tree(
+                spark, SIM._queries_df(emb), sf_dir=sf_dir, index_root=root
+            ).collect(),
+        )
+    )
+    assert got and got == want
+
+
 # ------------------------------------------------ stream_dedup_admit
 
 
@@ -795,6 +830,48 @@ def test_lsh_index_append_refuses_unservable_batch_ids(spark, sf_dir, tmp_path):
         with _pytest.raises(ValueError, match="batch_id"):
             lsh_index_append(spark, sf_dir, batch, bad, index_root=root)
     assert not [t for t in os.listdir(root) if ".delta." in t]
+
+
+def test_lsh_index_rebuild_replaces_the_served_index(spark, sf_dir, tmp_path):
+    """Building over an installed admission index REPLACES it: after a
+    build on a tenth of the corpus, an appended delta and a rebuild on
+    every document into the same root, the served index equals a
+    single fresh build of all documents, the served sidecar counts
+    every document, and the absorbed delta is no longer served. A
+    plain install lost the move to the complete old base and kept
+    serving the first build while reporting the second."""
+    from gomysql2pg_spark.catalog import load_table
+    from gomysql2pg_spark.index_store import open_store
+    from gomysql2pg_spark.streaming.stream import (
+        _lsh_index_name,
+        lsh_index_append,
+        lsh_index_build,
+        lsh_index_staleness,
+        read_lsh_index,
+    )
+
+    def served(root):
+        return sorted(
+            map(tuple, read_lsh_index(spark, sf_dir, index_root=root).collect())
+        )
+
+    docs = load_table(spark, sf_dir, "documents")
+    n = docs.count()
+    root = str(tmp_path / "lsh")
+    lsh_index_build(
+        spark, sf_dir, docs.filter("doc_id % 10 = 0"), index_root=root
+    )
+    lsh_index_append(
+        spark, sf_dir, docs.filter("doc_id % 10 = 1"), "b001", index_root=root
+    )
+    info = lsh_index_build(spark, sf_dir, docs, index_root=root)
+    assert info["installed"] and info["n_docs"] == n
+    fresh = str(tmp_path / "fresh")
+    lsh_index_build(spark, sf_dir, docs, index_root=fresh)
+    assert served(root) == served(fresh) and served(root)
+    sidecar = open_store(index_root=root).read_model(_lsh_index_name(sf_dir))
+    assert sidecar["n_docs"] == n
+    assert lsh_index_staleness(spark, sf_dir, index_root=root) == 0
 
 
 def test_stream_admit_installed_index_matches_inline(spark, sf_dir, queries):
